@@ -1,6 +1,9 @@
 package graft.etl
 
 import graft.functions.GraftFunctions.decodeByteArray
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -78,11 +81,15 @@ object Normalize {
   }
 
   /** Empty-relation guard (reference: src/processor.rs:31-35): `[]`
-    * payloads produce no output. `head(1)` instead of `count()` so the
-    * check short-circuits after one row at any scale.
+    * payloads produce no output. `df` is an envelope frame from
+    * [[readEnvelope]], whose inferred schema has a field only if at
+    * least one record carried it, so only an empty schema (`[]`, `{}`,
+    * `[{}]`) can hide an empty relation. Only then does `head(1)` run a
+    * probe job; it tells `[]` (no row) from `{}` and `[{}]` (one row
+    * each, which the Parquet write then rejects).
     */
   def requireNonEmpty(df: DataFrame, context: String): Either[ProcessorError, DataFrame] =
-    if (df.head(1).isEmpty) Left(ProcessorError.Schema(s"empty relation: $context"))
+    if (df.schema.isEmpty && df.head(1).isEmpty) Left(ProcessorError.Schema(s"empty relation: $context"))
     else Right(df)
 
   /** Full normalization: envelope flatten → technical-column drop →
@@ -155,4 +162,23 @@ object Normalize {
     */
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("compression", "snappy").parquet(path)
+
+  /** Rows committed at Parquet sink `path`: the record counts in its
+    * part files' footers, read on the driver. Names starting with `_` or
+    * `.` (`_SUCCESS`, checksums) are skipped, as Spark's file index skips
+    * them, so this is the number `spark.read.parquet(path).count()`
+    * returns, without running a Spark job.
+    */
+  def committedRows(spark: SparkSession, path: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    dir.getFileSystem(conf).listStatus(dir).iterator
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+      .map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try reader.getRecordCount
+        finally reader.close()
+      }
+      .sum
+  }
 }

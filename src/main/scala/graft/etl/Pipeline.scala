@@ -3,6 +3,7 @@ package graft.etl
 import graft.config.Config
 import graft.ingest.Http
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
@@ -26,9 +27,9 @@ object Pipeline {
       seconds: Double
   )
 
-  /** Run every resolvable, non-templated route. Each route becomes one
-    * Spark job (read.json → normalize → write.parquet), internally
-    * distributed across executors.
+  /** Run every resolvable, non-templated route: fetch its envelope to
+    * a staging file, then [[processStaged]] it (two Spark jobs per
+    * successful route, each distributed across executors).
     *
     * `parallelism = 1` (the default) is the reference's sequential
     * driver loop. `parallelism > 1` overlaps routes on a bounded
@@ -109,6 +110,14 @@ object Pipeline {
   /** Transform one staged JSON file to Parquet
     * (reference: src/processor.rs:17-97). Kept public so local files
     * can be processed without the HTTP leg (used by tests).
+    *
+    * A successful route runs two Spark jobs: the envelope's schema
+    * inference and the Parquet write. The empty-relation probe runs
+    * only for an empty inferred schema, and the returned row count is
+    * read from the committed part files' footers on the driver. A
+    * failed write leaves nothing at the target; the staging file is
+    * deleted only after a successful write, so a failed route can be
+    * replayed from it.
     */
   def processStaged(
       spark: SparkSession,
@@ -119,9 +128,14 @@ object Pipeline {
     try {
       val raw = Normalize.readEnvelope(spark, stagingPath)
       Normalize.requireNonEmpty(raw, stagingPath).map { df =>
-        val normalized = Normalize.normalize(df, rootPath)
-        Normalize.writeParquet(normalized, targetPath)
-        val rows = spark.read.parquet(targetPath).count()
+        try Normalize.writeParquet(Normalize.normalize(df, rootPath), targetPath)
+        catch {
+          case NonFatal(e) =>
+            val target = new Path(targetPath)
+            target.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(target, true)
+            throw e
+        }
+        val rows = Normalize.committedRows(spark, targetPath)
         // staging removed only after a successful write (processor.rs:94)
         Files.deleteIfExists(Paths.get(stagingPath))
         rows

@@ -1,6 +1,6 @@
 package graft
 
-import graft.etl.{Normalize, Pipeline, ProcessorError}
+import graft.etl.{GraftError, Normalize, Pipeline, ProcessorError}
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.Row
 
@@ -68,7 +68,7 @@ class NormalizeSpec extends SparkSpec {
 
   test("empty payload rejected by the non-empty guard") {
     val df = readEnv("""[]""")
-    Normalize.requireNonEmpty(df.limit(0), "t") match {
+    Normalize.requireNonEmpty(df, "t") match {
       case Left(_: ProcessorError.Schema) => ()
       case other                          => fail(s"expected Schema error, got $other")
     }
@@ -100,6 +100,45 @@ class NormalizeSpec extends SparkSpec {
   test("processStaged is fail-soft: bad input yields Left, no throw") {
     val res = Pipeline.processStaged(spark, "/nonexistent/x.json", "/tmp/never.parquet", None)
     assert(res.isLeft)
+  }
+
+  /** Runs `processStaged` on `content` (root_path `resultado`) into a
+    * fresh target; returns the outcome, whether the staging file is still
+    * there, and the target path.
+    */
+  private def processEdge(content: String): (Either[GraftError, Long], Boolean, Path) = {
+    val staging = tmpJson(content)
+    val target = Files.createTempDirectory("graft-edge").resolve("r.parquet")
+    val res = Pipeline.processStaged(spark, staging.toString, target.toString, Some("resultado"))
+    (res, Files.exists(staging), target)
+  }
+
+  // Envelopes that must fail soft: the error kind, the staging file kept
+  // for replay, and nothing written at the target.
+  for ((content, kind) <- Seq(
+      "[]" -> "Schema",
+      "{}" -> "Engine",
+      "[{}]" -> "Engine",
+      """{"resultado":[{"a":1}""" -> "Engine",
+      "5" -> "Engine",
+      "[1,2,3]" -> "Engine"))
+    test(s"processStaged edge: $content gives Left($kind), keeps staging, leaves no parquet") {
+      val (res, stagingKept, target) = processEdge(content)
+      val got = res match {
+        case Left(_: ProcessorError.Schema) => "Schema"
+        case Left(_: ProcessorError.Engine) => "Engine"
+        case other                          => other.toString
+      }
+      assert(got == kind, s"outcome $res")
+      assert(stagingKept, "staging must be kept when the route fails")
+      assert(!Files.exists(target), s"nothing may be left at $target")
+    }
+
+  test("processStaged edge: an empty root list gives Right(0) and a readable parquet") {
+    val (res, stagingKept, target) = processEdge("""{"resultado":[]}""")
+    assert(res == Right(0L))
+    assert(!stagingKept, "staging must be deleted after success")
+    assert(spark.read.parquet(target.toString).count() == 0L)
   }
 
   test("row-level quarantine: malformed lines route to the bad channel, clean rows survive") {

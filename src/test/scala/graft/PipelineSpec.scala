@@ -79,6 +79,121 @@ class PipelineSpec extends SparkSpec {
       s"parallel mode must overlap route dwells: ${parIv.asScala.toMap}")
   }
 
+  /** One envelope per shape of FIXTURES.md §1, keyed by route name,
+    * with the rows it must normalize to. `compras` unwraps `resultado`,
+    * `camara` unwraps `dados`, `bare` has no root_path.
+    */
+  private val shapes: Map[String, (String, Long)] = Map(
+    "list" -> (("""{"resultado":[
+      |  {"codigoGrupo":10,"nomeGrupo":"MATERIAL X","statusGrupo":true},
+      |  {"codigoGrupo":11,"nomeGrupo":"MATERIAL Y","statusGrupo":false}],
+      |"totalRegistros":2,"totalPaginas":1,"paginasRestantes":0,"links":["self"],
+      |"dataHoraConsulta":"2026-01-30T12:00:00","timeZoneAtual":"-03:00",
+      |"dataHoraAtualizacao":"2026-01-29"}""".stripMargin, 2L)),
+    "struct" -> (("""{"resultado":{"id":1,"nome":"unico"},"totalRegistros":1}""", 1L)),
+    "nested" -> (("""{"dados":[{"id":1,"orgao":{"sigla":"A","uf":"SP"}},
+      |{"id":2,"orgao":{"sigla":"B","uf":"RJ"}},{"id":3}],"links":[]}""".stripMargin, 3L)),
+    "sparse" -> (("""{"resultado":[{"a":1},{"b":"x"},{"a":3,"c":true},{}]}""", 4L)),
+    "bytes_int" -> (("""{"resultado":[{"nome":[77,97,195,167,195,163]},{"nome":[79,108,195,161]}]}""", 2L)),
+    "bytes_double" -> (("""{"resultado":[{"nome":[77.0,97.0]},{"nome":[79.0,108.0,195.0,161.0]}],"totalPaginas":1}""", 2L)),
+    "noroot" -> (("""[{"id":1,"v":"a"},{"id":2,"v":"b"},{"id":3,"v":"c"}]""", 3L)))
+
+  private val shapesCfg =
+    """{"apis":{"a":{
+      |  "base_url":"https://localhost:1",
+      |  "endpoints":{
+      |    "compras":{"root_path":"resultado", "list":"/list", "struct":"/struct",
+      |      "sparse":"/sparse", "bytes_int":"/bytes_int", "bytes_double":"/bytes_double"},
+      |    "camara":{"root_path":"dados", "nested":"/nested"},
+      |    "bare":{"noroot":"/noroot"}
+      |}}}}""".stripMargin
+
+  private val shapeFetch: (String, java.nio.file.Path, graft.ingest.Http.Progress) => Either[graft.etl.GraftError, Long] =
+    (url, dest, _) => {
+      Files.createDirectories(dest.getParent)
+      val body = shapes(url.substring(url.lastIndexOf('/') + 1))._1.getBytes("UTF-8")
+      Files.write(dest, body)
+      Right(body.length.toLong)
+    }
+
+  test("the returned row count equals a read-back count for every envelope shape") {
+    val cfg = graft.config.Config.loadFromString(shapesCfg).toOption.get
+    for (parallelism <- Seq(1, 4)) {
+      val out = Files.createTempDirectory("graft-pipe-count").toString
+      val results = Pipeline.run(spark, cfg, out, parallelism = parallelism, fetch = shapeFetch)
+      assert(results.map(_.key).sorted == shapes.keys.toSeq.sorted)
+      for (r <- results) {
+        val readBack = spark.read.parquet(s"$out/a/${r.group}/${r.key}.parquet").count()
+        assert(r.outcome == Right(readBack), s"${r.key} at parallelism $parallelism")
+        assert(readBack == shapes(r.key)._2, s"${r.key} at parallelism $parallelism")
+      }
+    }
+  }
+
+  test("committed rows are summed over every part file's footer") {
+    val target = Files.createTempDirectory("graft-pipe-parts").resolve("t.parquet").toString
+    graft.etl.Normalize.writeParquet(spark.range(0, 1000, 1, 4).toDF(), target)
+    val parts = new java.io.File(target).list().count(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts == 4)
+    assert(graft.etl.Normalize.committedRows(spark, target) == 1000L)
+    assert(graft.etl.Normalize.committedRows(spark, target) == spark.read.parquet(target).count())
+  }
+
+  /** Call sites (`"json at Normalize.scala:41"`) of the Spark jobs
+    * `body` runs on this thread. A marker job run last in the same job
+    * group tells when the listener has seen every earlier job.
+    */
+  private def jobCallSites(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"pipeline-jobs-${java.util.UUID.randomUUID()}"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          sites.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job-count spec", interruptOnCancel = false)
+      try {
+        body
+        sc.setCallSite("marker")
+        try sc.parallelize(Seq(1), 1).count()
+        finally sc.clearCallSite()
+      } finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!sites.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      import scala.jdk.CollectionConverters._
+      val seen = sites.asScala.toSeq
+      assert(seen.lastOption.contains("marker"), s"listener saw $seen")
+      seen.dropRight(1)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a successful route runs two Spark jobs and an empty one two, none from Pipeline.scala") {
+    def route(body: String): (Either[graft.etl.GraftError, Long], Seq[String]) = {
+      val dir = Files.createTempDirectory("graft-pipe-jobs")
+      val staging = dir.resolve("r_temp.json")
+      Files.writeString(staging, body)
+      var res: Either[graft.etl.GraftError, Long] = null
+      val sites = jobCallSites {
+        res = Pipeline.processStaged(spark, staging.toString, dir.resolve("r.parquet").toString, Some("resultado"))
+      }
+      (res, sites)
+    }
+    val (ok, okSites) = route(shapes("list")._1)
+    assert(ok == Right(2L))
+    assert(okSites.size == 2, s"jobs: $okSites")
+    assert(okSites.head.startsWith("json at Normalize.scala"), s"jobs: $okSites")
+    assert(okSites(1).startsWith("parquet at Normalize.scala"), s"jobs: $okSites")
+    val (empty, emptySites) = route("[]")
+    assert(empty.left.exists(_.isInstanceOf[graft.etl.ProcessorError.Schema]), s"got $empty")
+    assert(emptySites.size == 2, s"jobs: $emptySites")
+    assert(emptySites(1).startsWith("head at Normalize.scala"), s"jobs: $emptySites")
+    assert(!(okSites ++ emptySites).exists(_.contains("Pipeline.scala")), s"jobs: $okSites $emptySites")
+  }
+
   test("parallel orchestration stays fail-soft when the fetcher throws") {
     val cfg = graft.config.Config.loadFromString(cfgJson).toOption.get
     val out = Files.createTempDirectory("graft-pipe-throw").toString
