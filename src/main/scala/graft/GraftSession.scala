@@ -23,6 +23,20 @@ import org.apache.spark.sql.SparkSession
   *    predicates still push into the scan instead of hitting a cast.
   *    This matches DuckDB, whose naive TIMESTAMP the oracle compares
   *    against.
+  *  - `file:` goes through [[fs.NioLocalFileSystem]] (FileSystem API)
+  *    and [[fs.NioLocalFs]] (FileContext API): Hadoop's local file
+  *    system, checksums and all, with `chmod` and `readlink` answered
+  *    by java.nio instead of a forked process. Without libhadoop every
+  *    FileContext create, rename and permissioned `mkdirs` forks one
+  *    (4.2–4.8 ms each in a 4 GB driver JVM on a 4-core host): 236 per
+  *    q155 gate run and 54 per ETL pass of the benchmark, mostly on the
+  *    threads state-store commits wait for. With the posture both
+  *    counts are 0, the benchmark's q155 gate pass falls 29% (2.42 →
+  *    1.72 s median, local[4]) and q148's RocksDB commit file sync
+  *    15× (5.8 → 0.4 s). The FileSystem cache is JVM-wide and keyed
+  *    without the conf, so the class applies when the session builds
+  *    the JVM's first `file:` FileSystem, as it does in Verify, Bench
+  *    and the benchmark.
   *  - Graft extensions installed declaratively (SQL functions, the
   *    dot-product rewrite, the top-k planner strategy) — the
   *    config-based path works on a fresh session; for an already-built
@@ -63,17 +77,22 @@ object GraftSession {
   def storageBytes(spark: SparkSession): Long =
     spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
 
+  /** The posture as conf pairs, in the order [[builder]] applies them. */
+  val posture: Seq[(String, String)] = Seq(
+    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    "spark.hadoop.fs.file.impl" -> classOf[fs.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[fs.NioLocalFs].getName)
+
   def builder(
       master: Option[String] = None,
       shufflePartitions: Option[Int] = None
   ): SparkSession.Builder = {
-    val b = SparkSession
-      .builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    val b = SparkSession.builder()
+    posture.foreach { case (k, v) => b.config(k, v) }
     master.foreach(b.master)
     shufflePartitions.foreach(n => b.config("spark.sql.shuffle.partitions", n))
     b

@@ -117,7 +117,7 @@ object Tables {
     * no data, plan or result is ever cached here, and the fixture
     * cannot change under a running JVM (the driver regenerates it
     * between JVMs). Inference runs under the same two session knobs
-    * every caller of [[read]] pins, so the cached schema is
+    * every caller of [[read]] must set, so the cached schema is
     * session-independent.
     */
   private val schemaCache =
@@ -136,15 +136,23 @@ object Tables {
   private val frameCache =
     new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
 
+  /** The two session settings every [[read]] needs. Both matter only
+    * for drifted fixture generations, but a drifted one read without
+    * them fails (NANOS) or falls through conform's generic cast, which
+    * is session-timezone-dependent AND blocks ts predicate pushdown at
+    * the scan (NTZ). [[graft.GraftSession.builder]] sets both; a read
+    * checks them rather than setting them, so it never changes its
+    * caller's session.
+    */
+  private val requiredConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong" -> true,
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> false)
+
   private def read(s: SparkSession, dir: String, name: String): DataFrame = {
-    // Both legacy knobs matter only for drifted fixture generations;
-    // set defensively for sessions built without GraftSession. NTZ
-    // inference must be OFF here too: with it on, an NTZ-drifted
-    // fixture would fall through conform's generic cast, which is
-    // session-timezone-dependent AND blocks ts predicate pushdown at
-    // the scan.
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    requiredConfs.foreach { case (k, v) =>
+      require(s.conf.get(k).trim.toBoolean == v,
+        s"ops.Tables needs $k=$v in the session (GraftSession.builder sets it)")
+    }
     val path = s"$dir/$name.parquet"
     val perSession = frameCache.synchronized {
       var m = frameCache.get(s)

@@ -124,4 +124,18 @@ class FixtureContractSpec extends SparkSpec {
       s"Spark min ts $sparkMinMicros µs != parquet footer $footerMinMicros µs — " +
         "a zone-dependent cast is shifting instants away from DuckDB's naive reading")
   }
+
+  test("a table read checks the two parquet settings and never sets them") {
+    for ((k, wrong) <- Seq(
+           "spark.sql.legacy.parquet.nanosAsLong" -> "false",
+           "spark.sql.parquet.inferTimestampNTZ.enabled" -> "true")) {
+      val prev = spark.conf.get(k)
+      spark.conf.set(k, wrong)
+      try {
+        val e = intercept[IllegalArgumentException](Tables.orders(spark, Sf))
+        assert(e.getMessage.contains(k))
+        assert(spark.conf.get(k) == wrong, "the read must leave the caller's setting alone")
+      } finally spark.conf.set(k, prev)
+    }
+  }
 }

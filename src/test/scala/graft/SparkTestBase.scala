@@ -16,6 +16,8 @@ object SparkTestBase {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // the engine's local file system, so every spec writes through it
+      .config(GraftSession.posture.filter(_._1.startsWith("spark.hadoop.")).toMap)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
