@@ -37,6 +37,15 @@ case class Md5SignVector(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
+      // a constant width fails here, at analysis; any other width
+      // is checked per row by `signs`
+      case (LongType, IntegerType) if right.foldable =>
+        right.eval() match {
+          case n: Int if n < 0 || n > Md5SignVector.MaxLength =>
+            TypeCheckResult.TypeCheckFailure(
+              s"md5_sign_vector length must be in [0, ${Md5SignVector.MaxLength}], got $n")
+          case _ => TypeCheckResult.TypeCheckSuccess
+        }
       case (LongType, IntegerType) => TypeCheckResult.TypeCheckSuccess
       case (l, r) =>
         TypeCheckResult.TypeCheckFailure(
@@ -68,6 +77,11 @@ case class Md5SignVector(left: Expression, right: Expression)
 
 object Md5SignVector {
 
+  /** Longest vector: h stays within the 4 decimal digits `signs`
+    * leaves room for.
+    */
+  val MaxLength = 4096
+
   private val md5 = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
@@ -77,7 +91,7 @@ object Md5SignVector {
     * from bit 4 of digest byte 0.
     */
   def signs(k: Long, n: Int): Array[Long] = {
-    require(n >= 0 && n <= 4096, s"md5_sign_vector length out of range: $n")
+    require(n >= 0 && n <= MaxLength, s"md5_sign_vector length out of range: $n")
     val md = md5.get()
     val ks = java.lang.Long.toString(k)
     val kl = ks.length

@@ -154,77 +154,85 @@ object Streams {
       .drop("__us", "__mn", "__mx")
   }
 
-  /** Serializes the gated queries' session-conf mutation of the
-    * state-store provider (ADVICE closure): the override is GLOBAL to
-    * the SparkSession, so two gates racing set/restore — or a gate
-    * racing any other live streaming query — could leak RocksDB onto
-    * an unrelated query or restore the wrong previous value. Gates
-    * hold this monitor across set → run → restore; Verify/Bench run
-    * queries sequentially already, so the lock documents and enforces
-    * the contract rather than changing behavior.
-    */
-  private val providerConfLock = new Object
-
-  /** Shuffle-partition scope for a whole oracle gate (round 13,
-    * generalizing q237's round-11 finding): every stateful streaming
-    * operator opens/commits ONE state-store instance per shuffle
-    * partition per micro-batch, so a gate's wall carries a constant
-    * factor of `partitions × stateful operators × micro-batches` that
-    * has nothing to do with its data (a few thousand rows here) —
+  /** The one conf scope every oracle gate runs in; `queries` is the
+    * only way to run a gate, so every gate gets it. Under
+    * `providerConfLock` it sets up to three session-conf keys for the
+    * WHOLE gate and, in one `finally`, puts each back as the caller
+    * had it (unset if the caller had not set it):
+    *
+    * (1) Shuffle partitions from `spark.graft.stream.statePartitions`
+    * (default 8, round 13, generalizing q237's round-11 finding): every
+    * stateful streaming operator opens/commits ONE state-store instance
+    * per shuffle partition per micro-batch, so a gate's wall carries a
+    * constant factor of `partitions × stateful operators × micro-batches`
+    * that has nothing to do with its data (a few thousand rows here) —
     * measured at the session's 32 partitions vs 8, same JVM,
     * alternating, sf0.1: q164 11.2 → 4.3 s, q148 7.6 → 4.2,
     * q226 7.1 → 4.1, q222 5.9 → 3.7, q211 4.8 → 2.9, with `collect()`
     * results bit-identical (state is key-partitioned; values are
-    * partition-count independent — only the constant moves, exactly
-    * q237's documented argument). The count is a DEPLOYMENT parameter,
-    * not a constant: production sizes state partitions to stream
-    * volume/parallelism via `spark.graft.stream.statePartitions`; the
-    * local default 8 is the q237 value, applied uniformly at every
-    * core count so the driver's low-core bench stays comparable.
-    * Restores the previous value in `finally`; the scope wraps the
-    * WHOLE gate — q229's two checkpoint-sharing runs see one
-    * consistent value (streaming aggregation bakes the partition
-    * count into the checkpoint at first run).
+    * partition-count independent — only the constant moves). The count
+    * is a DEPLOYMENT parameter, not a constant: production sizes state
+    * partitions to stream volume/parallelism; the local default 8 is
+    * applied uniformly at every core count so the driver's low-core
+    * bench stays comparable. The scope wraps the whole gate, so q229's
+    * two checkpoint-sharing runs see one consistent value (streaming
+    * aggregation bakes the partition count into the checkpoint at
+    * first run).
     *
-    * Round 14 adds two things. (1) The whole gate now runs INSIDE
-    * `providerConfLock` (ADVICE closure: the set/restore pair here
-    * mutates session-global conf, so it must be under the same
-    * monitor the gates' provider overrides use — the inner per-gate
-    * blocks stay correct because the monitor is reentrant, and
-    * concurrent gate callers now serialize instead of racing the
-    * restore). (2) RocksDB CHANGELOG CHECKPOINTING is scoped on for
-    * the gate (`spark.sql.streaming.stateStore.rocksdb.
-    * changelogCheckpointing.enabled`, honored only when the caller
-    * has not set it explicitly): per commit the provider uploads the
-    * batch's changelog instead of zipping and uploading a full
-    * RocksDB snapshot — snapshots move to background maintenance,
-    * exactly the production posture the RocksDB docs recommend for
-    * commit-latency-bound workloads (§5). The state-store claim is
-    * untouched: same provider, same keyed state crossing commits,
-    * same exactly-once replay from the checkpoint (q229's warm
+    * (2) RocksDB CHANGELOG CHECKPOINTING (round 14), honored only when
+    * the caller has not set it: per commit the provider uploads the
+    * batch's changelog instead of zipping and uploading a full RocksDB
+    * snapshot — snapshots move to background maintenance, the
+    * production posture the RocksDB docs recommend for commit-latency-
+    * bound workloads. Same provider, same keyed state crossing
+    * commits, same exactly-once replay from the checkpoint (q229's warm
     * restart exercises snapshot+changelog recovery). Measured
-    * (within-JVM alternating A/B, 3 reps, sf0.1, local[32], round
-    * 14): 13-gate family sum 58.5 → 46.2 s (−21%), every gate's
-    * `collect()` bit-identical in every rep; biggest movers q237
-    * 8.5 → 6.2 s, q204 6.0 → 4.5, q222 5.5 → 3.9, q210 4.3 → 3.0.
+    * (within-JVM alternating A/B, 3 reps, sf0.1, local[32]): 13-gate
+    * family sum 58.5 → 46.2 s (−21%), every gate's `collect()`
+    * bit-identical in every rep; biggest movers q237 8.5 → 6.2 s,
+    * q204 6.0 → 4.5, q222 5.5 → 3.9, q210 4.3 → 3.0.
     * (`trackTotalNumberOfRows=false` was A/B'd in the same harness
     * and measured neutral — dropped, the metric is worth keeping.)
+    *
+    * (3) With `rocksDb`, the [[RocksDb]] state-store provider,
+    * unconditionally: transformWithState needs its column families,
+    * and the other RocksDB gates keep state off the JVM heap. Gates
+    * without it (q155, q164, q237) run on the session's provider. The
+    * key is read only when a streaming query starts; the feed build
+    * and the batch tail never read it, so holding it for the whole
+    * gate changes no plan.
+    *
+    * All three keys are GLOBAL to the SparkSession: two gates racing
+    * set/restore — or a gate racing any other live streaming query —
+    * could leak RocksDB or 8 partitions onto an unrelated query, or
+    * restore the wrong previous value. So concurrent gates on one
+    * session serialize on the lock; Verify/Bench run queries
+    * sequentially already. A child session per gate (`cloneSession()`)
+    * would need no lock, but a `StreamingQueryListener` registered on
+    * the caller's session would not see the gate's progress events,
+    * and every clone registers a listener bus that is never removed.
     */
-  private def withGateParts[T](s: SparkSession)(body: => T): T = providerConfLock.synchronized {
-    val k = "spark.sql.shuffle.partitions"
-    val n = s.conf.getOption("spark.graft.stream.statePartitions").getOrElse("8")
-    val ck = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = s.conf.get(k)
-    val prevCk = s.conf.getOption(ck)
-    try {
-      s.conf.set(k, n)
-      if (prevCk.isEmpty) s.conf.set(ck, "true")
-      body
-    } finally {
-      s.conf.set(k, prev)
-      if (prevCk.isEmpty) s.conf.unset(ck)
+  private def withGateConf[T](s: SparkSession, rocksDb: Boolean)(body: => T): T =
+    providerConfLock.synchronized {
+      val changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+      val scoped = Seq(
+        Some("spark.sql.shuffle.partitions" ->
+          s.conf.getOption("spark.graft.stream.statePartitions").getOrElse("8")),
+        Option.when(s.conf.getOption(changelog).isEmpty)(changelog -> "true"),
+        Option.when(rocksDb)("spark.sql.streaming.stateStore.providerClass" -> RocksDb)).flatten
+      val explicit = s.conf.getAll
+      val prev = scoped.map { case (k, _) => k -> explicit.get(k) }
+      try {
+        scoped.foreach { case (k, v) => s.conf.set(k, v) }
+        body
+      } finally prev.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
     }
-  }
+
+  private val providerConfLock = new Object
+
+  /** The RocksDB state-store provider class. */
+  private[graft] val RocksDb =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Incremental ingestion: the streaming version of the reference's
     * staged-JSON → normalize → parquet pipeline
@@ -1709,7 +1717,7 @@ object Streams {
     * sink would hold the keyed output on the driver); state is one
     * small row per live key; the fixture feed dirs are temp-scoped.
     */
-  def q148StreamCdcLatest(s: SparkSession, dir: String): DataFrame = {
+  private def q148StreamCdcLatest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val o = graft.ops.Tables
       .orders(s, dir)
@@ -1733,31 +1741,20 @@ object Streams {
     // one file per log batch => one micro-batch per log batch below
     appendFeedFiles(feed, batches)
 
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    providerConfLock.synchronized {
-    val prevProv = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val changes = s.readStream
-        .schema("k BIGINT, seq BIGINT, op STRING, cents BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.getAbsolutePath)
-        .as[CdcChange]
-      val q = streamingCdcGate(changes).writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (images: Dataset[CdcImage], _: Long) =>
-          images.write.mode("append").parquet(out.getAbsolutePath)
-        }
-        .start()
-      q.awaitTermination()
-    } finally prevProv match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None    => s.conf.unset(provKey)
-    }
-    }
+    val changes = s.readStream
+      .schema("k BIGINT, seq BIGINT, op STRING, cents BIGINT")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(feed.getAbsolutePath)
+      .as[CdcChange]
+    val q = streamingCdcGate(changes).writeStream
+      .outputMode("update")
+      .option("checkpointLocation", ckpt.getAbsolutePath)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (images: Dataset[CdcImage], _: Long) =>
+        images.write.mode("append").parquet(out.getAbsolutePath)
+      }
+      .start()
+    q.awaitTermination()
 
     val latest = s.read
       .parquet(out.getAbsolutePath)
@@ -1787,7 +1784,7 @@ object Streams {
     * Complete-mode memory sink is deliberate and BOUNDED: the sink
     * holds the window×type table (calendar-sized), not events.
     */
-  def q155StreamWindowAgg(s: SparkSession, dir: String): DataFrame = {
+  private def q155StreamWindowAgg(s: SparkSession, dir: String): DataFrame = {
     val file = s"$dir/events.parquet"
     val schema = s.read.option("mergeSchema", "false").parquet(file).schema
     val feed = gateTempRoot("graft-q155")
@@ -1861,7 +1858,7 @@ object Streams {
     * pattern — never a driver memory sink); the batch tail rolls
     * them up and DuckDB independently recomputes the whole join.
     */
-  def q164StreamIntervalJoin(s: SparkSession, dir: String): DataFrame = {
+  private def q164StreamIntervalJoin(s: SparkSession, dir: String): DataFrame = {
     val ev = graft.ops.Tables
       .events(s, dir)
       .filter(col("event_type").isin("click", "purchase"))
@@ -1930,7 +1927,7 @@ object Streams {
     * q189_clamped_balance's SQL — DuckDB replays the fold and the
     * streamed state must land on it bit-for-bit.
     */
-  def q193StreamWallet(s: SparkSession, dir: String): DataFrame = {
+  private def q193StreamWallet(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val evs = chronoFidx(
       graft.ops.Tables
@@ -1953,31 +1950,20 @@ object Streams {
       feed,
       (1 to 3).map(i => evs.filter(col("fidx") === i).drop("fidx")),
       sortCols = Seq(col("ts_us"), col("event_id")))
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    providerConfLock.synchronized {
-    val prevProv = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = s.readStream
-        .schema("user_id BIGINT, ts_us BIGINT, event_id BIGINT, delta BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.getAbsolutePath)
-        .as[WalletEvent]
-      val q = streamingWalletGate(in).writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (snaps: Dataset[WalletState], _: Long) =>
-          snaps.write.mode("append").parquet(out.getAbsolutePath)
-        }
-        .start()
-      q.awaitTermination()
-    } finally prevProv match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None    => s.conf.unset(provKey)
-    }
-    }
+    val in = s.readStream
+      .schema("user_id BIGINT, ts_us BIGINT, event_id BIGINT, delta BIGINT")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(feed.getAbsolutePath)
+      .as[WalletEvent]
+    val q = streamingWalletGate(in).writeStream
+      .outputMode("update")
+      .option("checkpointLocation", ckpt.getAbsolutePath)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (snaps: Dataset[WalletState], _: Long) =>
+        snaps.write.mode("append").parquet(out.getAbsolutePath)
+      }
+      .start()
+    q.awaitTermination()
     s.read
       .parquet(out.getAbsolutePath)
       .groupBy(col("user_id"))
@@ -2027,7 +2013,7 @@ object Streams {
     * per-trigger work ∝ arriving docs × 32; the verify join expands
     * only emitted candidate edges; the corpus is never re-banded.
     */
-  def q204StreamNeardup(s: SparkSession, dir: String): DataFrame = {
+  private def q204StreamNeardup(s: SparkSession, dir: String): DataFrame = {
     val docs = graft.ops.Tables
       .documents(s, dir)
       .select(col("doc_id"), col("lang"), col("text"))
@@ -2037,30 +2023,19 @@ object Streams {
     val out = new java.io.File(root, "out")
     val ckpt = new java.io.File(root, "ckpt")
     appendFeedFiles(feed, (0 to 2).map(i => docs.filter(col("doc_id") % 3 === i)))
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    providerConfLock.synchronized {
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val in = s.readStream
-          .schema("doc_id BIGINT, lang STRING, text STRING")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(feed.getAbsolutePath)
-        val q = streamingNearDupGate(in.select(col("doc_id"), col("text"))).writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (hits: Dataset[BandHit], _: Long) =>
-            hits.write.mode("append").parquet(out.getAbsolutePath)
-          }
-          .start()
-        q.awaitTermination()
-      } finally prevProv match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None    => s.conf.unset(provKey)
+    val in = s.readStream
+      .schema("doc_id BIGINT, lang STRING, text STRING")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(feed.getAbsolutePath)
+    val q = streamingNearDupGate(in.select(col("doc_id"), col("text"))).writeStream
+      .outputMode("update")
+      .option("checkpointLocation", ckpt.getAbsolutePath)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (hits: Dataset[BandHit], _: Long) =>
+        hits.write.mode("append").parquet(out.getAbsolutePath)
       }
-    }
+      .start()
+    q.awaitTermination()
     // d2's consumer step: exact verification of the emitted candidate
     // edges on the sorted shingle-hash sets, then the flag rollup
     val edges = s.read
@@ -2126,7 +2101,7 @@ object Streams {
     * per-user per-batch event slices, and the tail is the emitted
     * session table — session-count-sized, never raw events.
     */
-  def q207StreamSessionize(s: SparkSession, dir: String): DataFrame = {
+  private def q207StreamSessionize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = graft.ops.Tables
       .events(s, dir)
@@ -2141,31 +2116,20 @@ object Streams {
       feed,
       Seq(ev.filter(col("ts") < lit(cut)), ev.filter(col("ts") >= lit(cut))))
 
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    providerConfLock.synchronized {
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val in = s.readStream
-          .schema("user_id BIGINT, ts TIMESTAMP, event_type STRING")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(feed.getAbsolutePath)
-          .as[Event]
-        val q = sessionize(in, gapMinutes = 30, watermarkDelay = "10 minutes").writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (sessions: Dataset[Session], _: Long) =>
-            sessions.write.mode("append").parquet(out.getAbsolutePath)
-          }
-          .start()
-        q.awaitTermination()
-      } finally prevProv match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None    => s.conf.unset(provKey)
+    val in = s.readStream
+      .schema("user_id BIGINT, ts TIMESTAMP, event_type STRING")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(feed.getAbsolutePath)
+      .as[Event]
+    val q = sessionize(in, gapMinutes = 30, watermarkDelay = "10 minutes").writeStream
+      .outputMode("append")
+      .option("checkpointLocation", ckpt.getAbsolutePath)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (sessions: Dataset[Session], _: Long) =>
+        sessions.write.mode("append").parquet(out.getAbsolutePath)
       }
-    }
+      .start()
+    q.awaitTermination()
     // batch tail: non-final sessions only (see scaladoc), then the
     // bucket rollup; distinct() guards a retried micro-batch's
     // re-appended parquet exactly as q204's edge dedup does
@@ -2209,7 +2173,7 @@ object Streams {
     * per-trigger work ∝ arriving rows; the tail reads the emission
     * log — groups × batches rows, never events.
     */
-  def q210StreamKmv(s: SparkSession, dir: String): DataFrame = {
+  private def q210StreamKmv(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = graft.ops.Tables
       .events(s, dir)
@@ -2220,32 +2184,21 @@ object Streams {
     val out = new java.io.File(root, "out")
     val ckpt = new java.io.File(root, "ckpt")
     appendFeedFiles(feed, (0 to 2).map(i => ev.filter(col("user_id") % 3 === i)))
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    providerConfLock.synchronized {
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val in = s.readStream
-          .schema("event_type STRING, user_id BIGINT")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(feed.getAbsolutePath)
-          .select(col("event_type").as("_1"), col("user_id").as("_2"))
-          .as[(String, Long)]
-        val q = streamingDistinctCountGate(in, 128).writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (ests: Dataset[DistinctEst], _: Long) =>
-            ests.write.mode("append").parquet(out.getAbsolutePath)
-          }
-          .start()
-        q.awaitTermination()
-      } finally prevProv match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None    => s.conf.unset(provKey)
+    val in = s.readStream
+      .schema("event_type STRING, user_id BIGINT")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(feed.getAbsolutePath)
+      .select(col("event_type").as("_1"), col("user_id").as("_2"))
+      .as[(String, Long)]
+    val q = streamingDistinctCountGate(in, 128).writeStream
+      .outputMode("update")
+      .option("checkpointLocation", ckpt.getAbsolutePath)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (ests: Dataset[DistinctEst], _: Long) =>
+        ests.write.mode("append").parquet(out.getAbsolutePath)
       }
-    }
+      .start()
+    q.awaitTermination()
     val exact = ev
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_users_exact"))
@@ -2292,7 +2245,7 @@ object Streams {
     * length. Emitted copies are byte-identical to their originals, so
     * which arrival survives is immaterial to the output.
     */
-  def q211StreamDedup(s: SparkSession, dir: String): DataFrame = {
+  private def q211StreamDedup(s: SparkSession, dir: String): DataFrame = {
     val ev = graft.ops.Tables
       .events(s, dir)
       .select(
@@ -2312,33 +2265,22 @@ object Streams {
         ev.filter(pmod(col("event_id"), lit(7)) === 0),
         ev.filter(pmod(col("event_id"), lit(11)) === 3)))
 
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    providerConfLock.synchronized {
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val in = s.readStream
-          .schema("event_id BIGINT, ts TIMESTAMP, event_type STRING, cents BIGINT")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(feed.getAbsolutePath)
-        val q = in
-          .withWatermark("ts", "365 days")
-          .dropDuplicatesWithinWatermark("event_id")
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(out.getAbsolutePath)
-          }
-          .start()
-        q.awaitTermination()
-      } finally prevProv match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None    => s.conf.unset(provKey)
+    val in = s.readStream
+      .schema("event_id BIGINT, ts TIMESTAMP, event_type STRING, cents BIGINT")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(feed.getAbsolutePath)
+    val q = in
+      .withWatermark("ts", "365 days")
+      .dropDuplicatesWithinWatermark("event_id")
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation", ckpt.getAbsolutePath)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode("append").parquet(out.getAbsolutePath)
       }
-    }
+      .start()
+    q.awaitTermination()
     // batch tail: distinct() guards a retried micro-batch's re-appended
     // parquet (q204's convention); fed counts fold in as a bounded
     // per-type aggregate of the same three feed branches
@@ -2382,7 +2324,7 @@ object Streams {
     * projection of customer — at 100 TB the dim is the small side by
     * construction or it isn't a dim); state is one row per segment.
     */
-  def q217StreamDimJoin(s: SparkSession, dir: String): DataFrame = {
+  private def q217StreamDimJoin(s: SparkSession, dir: String): DataFrame = {
     val ev = graft.ops.Tables
       .events(s, dir)
       .select(
@@ -2396,37 +2338,26 @@ object Streams {
       .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
     val feed = gateTempRoot("graft-q217")
     appendFeedFiles(feed, (0 to 2).map(i => ev.filter(pmod(col("user_id"), lit(3)) === i)))
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
     val qname = "q217_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    providerConfLock.synchronized {
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val in = s.readStream
-          .schema("event_id BIGINT, user_id BIGINT, event_type STRING, cents BIGINT")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(feed.getAbsolutePath)
-        val q = in
-          .join(broadcast(dim), "user_id") // stream-static enrich
-          .groupBy(col("segment"))
-          .agg(
-            count(lit(1)).as("n_events"),
-            sum(col("cents")).as("cents_total"),
-            sum(when(col("event_type") === "purchase", col("cents"))
-              .otherwise(0L)).as("purchase_cents"))
-          .writeStream
-          .format("memory")
-          .queryName(qname)
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally prevProv match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None    => s.conf.unset(provKey)
-      }
-    }
+    val in = s.readStream
+      .schema("event_id BIGINT, user_id BIGINT, event_type STRING, cents BIGINT")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(feed.getAbsolutePath)
+    val q = in
+      .join(broadcast(dim), "user_id") // stream-static enrich
+      .groupBy(col("segment"))
+      .agg(
+        count(lit(1)).as("n_events"),
+        sum(col("cents")).as("cents_total"),
+        sum(when(col("event_type") === "purchase", col("cents"))
+          .otherwise(0L)).as("purchase_cents"))
+      .writeStream
+      .format("memory")
+      .queryName(qname)
+      .outputMode("complete")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
     val rows = s.table(qname).orderBy("segment")
     val out = s.createDataFrame(
       new java.util.ArrayList(java.util.Arrays.asList(rows.collect(): _*)),
@@ -2502,7 +2433,7 @@ object Streams {
     * fold means the cutover point is arbitrary — the spec moves it
     * and pins invariance.
     */
-  def q229StreamWarmStart(s: SparkSession, dir: String): DataFrame = {
+  private def q229StreamWarmStart(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val cut = lit("2024-01-16").cast("timestamp")
     val purchases = graft.ops.Tables
@@ -2528,38 +2459,27 @@ object Streams {
     appendFeedFiles(
       feed,
       (1 to 3).map(i => withIdx.filter(col("fidx") === i).drop("fidx", "ts")))
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    providerConfLock.synchronized {
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val in = s.readStream
-          .schema("user_id BIGINT, event_id BIGINT, cents BIGINT")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(feed.getAbsolutePath)
-          .as[WarmEvent]
-        val q = in
-          .groupByKey(_.user_id)
-          .transformWithState(
-            new WarmStartProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update(),
-            hist.groupByKey(_.user_id))
-          .writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (snaps: Dataset[WarmSnap], _: Long) =>
-            snaps.write.mode("append").parquet(out.getAbsolutePath)
-          }
-          .start()
-        q.awaitTermination()
-      } finally prevProv match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None    => s.conf.unset(provKey)
+    val in = s.readStream
+      .schema("user_id BIGINT, event_id BIGINT, cents BIGINT")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(feed.getAbsolutePath)
+      .as[WarmEvent]
+    val q = in
+      .groupByKey(_.user_id)
+      .transformWithState(
+        new WarmStartProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update(),
+        hist.groupByKey(_.user_id))
+      .writeStream
+      .outputMode("update")
+      .option("checkpointLocation", ckpt.getAbsolutePath)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (snaps: Dataset[WarmSnap], _: Long) =>
+        snaps.write.mode("append").parquet(out.getAbsolutePath)
       }
-    }
+      .start()
+    q.awaitTermination()
     s.read
       .parquet(out.getAbsolutePath)
       .groupBy(col("user_id"))
@@ -2736,7 +2656,7 @@ object Streams {
     * arriving rows · log k. The tail is one max_by aggregate over the
     * snapshot log.
     */
-  def q226StreamUserTopk(s: SparkSession, dir: String): DataFrame = {
+  private def q226StreamUserTopk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val evs = chronoFidx(
       graft.ops.Tables
@@ -2756,37 +2676,26 @@ object Streams {
     appendFeedFiles(
       feed,
       (1 to 3).map(i => evs.filter(col("fidx") === i).drop("fidx", "ts")))
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    providerConfLock.synchronized {
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val in = s.readStream
-          .schema("user_id BIGINT, event_id BIGINT, cents BIGINT")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(feed.getAbsolutePath)
-          .as[TopkEvent]
-        val q = in
-          .groupByKey(_.user_id)
-          .transformWithState(
-            new TopkProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update())
-          .writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (snaps: Dataset[TopkState], _: Long) =>
-            snaps.write.mode("append").parquet(out.getAbsolutePath)
-          }
-          .start()
-        q.awaitTermination()
-      } finally prevProv match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None    => s.conf.unset(provKey)
+    val in = s.readStream
+      .schema("user_id BIGINT, event_id BIGINT, cents BIGINT")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(feed.getAbsolutePath)
+      .as[TopkEvent]
+    val q = in
+      .groupByKey(_.user_id)
+      .transformWithState(
+        new TopkProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+      .writeStream
+      .outputMode("update")
+      .option("checkpointLocation", ckpt.getAbsolutePath)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (snaps: Dataset[TopkState], _: Long) =>
+        snaps.write.mode("append").parquet(out.getAbsolutePath)
       }
-    }
+      .start()
+    q.awaitTermination()
     s.read
       .parquet(out.getAbsolutePath)
       .groupBy(col("user_id"))
@@ -2833,7 +2742,7 @@ object Streams {
     * timers. The tail is one bounded aggregate over the emitted
     * outcome log.
     */
-  def q222StreamSlaTimeout(s: SparkSession, dir: String): DataFrame = {
+  private def q222StreamSlaTimeout(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val evs = chronoFidx(
       graft.ops.Tables
@@ -2858,38 +2767,27 @@ object Streams {
       feed,
       (1 to 3).map(i => evs.filter(col("fidx") === i).drop("fidx", "event_id")),
       sortCols = Seq(col("ts")))
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    providerConfLock.synchronized {
-      val prevProv = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val in = s.readStream
-          .schema("user_id BIGINT, ts TIMESTAMP, kind STRING")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(feed.getAbsolutePath)
-          .withWatermark("ts", "1 day")
-          .as[SlaEvent]
-        val q = in
-          .groupByKey(_.user_id)
-          .transformWithState(
-            new SlaProcessor,
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            OutputMode.Update())
-          .writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (o: Dataset[SlaOutcome], _: Long) =>
-            o.write.mode("append").parquet(out.getAbsolutePath)
-          }
-          .start()
-        q.awaitTermination()
-      } finally prevProv match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None    => s.conf.unset(provKey)
+    val in = s.readStream
+      .schema("user_id BIGINT, ts TIMESTAMP, kind STRING")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(feed.getAbsolutePath)
+      .withWatermark("ts", "1 day")
+      .as[SlaEvent]
+    val q = in
+      .groupByKey(_.user_id)
+      .transformWithState(
+        new SlaProcessor,
+        org.apache.spark.sql.streaming.TimeMode.EventTime(),
+        OutputMode.Update())
+      .writeStream
+      .outputMode("update")
+      .option("checkpointLocation", ckpt.getAbsolutePath)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (o: Dataset[SlaOutcome], _: Long) =>
+        o.write.mode("append").parquet(out.getAbsolutePath)
       }
-    }
+      .start()
+    q.awaitTermination()
     val cut = evs.agg(
       (max(unix_micros(col("ts"))) - lit(3L * 86400000000L)).as("c"))
     s.read
@@ -2933,7 +2831,7 @@ object Streams {
     * watermark-bounded on both sides; per-trigger work ∝ arriving
     * rows; the tail is one bucket rollup.
     */
-  def q237StreamLeftJoin(s: SparkSession, dir: String): DataFrame = {
+  private def q237StreamLeftJoin(s: SparkSession, dir: String): DataFrame = {
     val ev = chronoFidx(
       graft.ops.Tables
         .events(s, dir)
@@ -2949,35 +2847,29 @@ object Streams {
       feed,
       (1 to 3).map(i => ev.filter(col("fidx") === i).drop("fidx")),
       sortCols = Seq(col("ts")))
-    // Shuffle partitions: scoped by [[withGateParts]] like every other
-    // gate (round 14, ADVICE closure — the inner hardcoded "8" scope
-    // ignored spark.graft.stream.statePartitions, contradicting the
-    // deployment-parameter contract; the original round-11 finding —
-    // a stream-stream OUTER join keeps FOUR state stores per
-    // partition per micro-batch, so 32 partitions × 3 batches meant
-    // ~384 store open/commit cycles, 36.9 s cold — is fully carried
-    // by the outer scope).
-    val q = providerConfLock.synchronized {
-      val raw = s.readStream
-        .schema("user_id BIGINT, event_id BIGINT, event_type STRING, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.getAbsolutePath)
-      val pairs = clickAttribution(
-        clicks = raw.filter(col("event_type") === "click"),
-        purchases = raw.filter(col("event_type") === "purchase"),
-        watermarkDelay = "2 days",
-        attributionWindow = "30 minutes",
-        joinType = "leftOuter")
-      val qq = pairs.writeStream
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.write.mode("append").parquet(out.getAbsolutePath)
-        }
-        .start()
-      qq.awaitTermination()
-      qq
-    }
+    // Shuffle partitions: scoped by [[withGateConf]] like every other
+    // gate (the round-11 finding — a stream-stream OUTER join keeps
+    // FOUR state stores per partition per micro-batch, so 32
+    // partitions × 3 batches meant ~384 store open/commit cycles,
+    // 36.9 s cold — is fully carried by the scope).
+    val raw = s.readStream
+      .schema("user_id BIGINT, event_id BIGINT, event_type STRING, ts TIMESTAMP")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(feed.getAbsolutePath)
+    val pairs = clickAttribution(
+      clicks = raw.filter(col("event_type") === "click"),
+      purchases = raw.filter(col("event_type") === "purchase"),
+      watermarkDelay = "2 days",
+      attributionWindow = "30 minutes",
+      joinType = "leftOuter")
+    pairs.writeStream
+      .option("checkpointLocation", ckpt.getAbsolutePath)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+        batch.write.mode("append").parquet(out.getAbsolutePath)
+      }
+      .start()
+      .awaitTermination()
 
     s.read
       .parquet(out.getAbsolutePath)
@@ -2991,25 +2883,24 @@ object Streams {
       .orderBy("bucket")
   }
 
-  // Every gate runs under [[withGateParts]]: the state-store
-  // constant-factor scope (partitions + changelog checkpointing),
-  // held under providerConfLock for the whole gate.
+  // Every gate runs under [[withGateConf]]; the Boolean says whether
+  // it runs on the RocksDB state store.
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q237_stream_left_join" -> q237StreamLeftJoin _,
-    "q229_stream_warm_start" -> q229StreamWarmStart _,
-    "q226_stream_user_topk" -> q226StreamUserTopk _,
-    "q222_stream_sla_timeout" -> q222StreamSlaTimeout _,
-    "q217_stream_dim_join" -> q217StreamDimJoin _,
-    "q211_stream_dedup" -> q211StreamDedup _,
-    "q210_stream_kmv" -> q210StreamKmv _,
-    "q207_stream_sessionize" -> q207StreamSessionize _,
-    "q204_stream_neardup" -> q204StreamNeardup _,
-    "q193_stream_wallet" -> q193StreamWallet _,
-    "q164_stream_interval_join" -> q164StreamIntervalJoin _,
-    "q155_stream_window_agg" -> q155StreamWindowAgg _,
-    "q148_stream_cdc_latest" -> q148StreamCdcLatest _
-  ).map { case (name, fn) =>
-    name -> ((s: SparkSession, dir: String) => withGateParts(s)(fn(s, dir)))
+    "q237_stream_left_join" -> (q237StreamLeftJoin _, false),
+    "q229_stream_warm_start" -> (q229StreamWarmStart _, true),
+    "q226_stream_user_topk" -> (q226StreamUserTopk _, true),
+    "q222_stream_sla_timeout" -> (q222StreamSlaTimeout _, true),
+    "q217_stream_dim_join" -> (q217StreamDimJoin _, true),
+    "q211_stream_dedup" -> (q211StreamDedup _, true),
+    "q210_stream_kmv" -> (q210StreamKmv _, true),
+    "q207_stream_sessionize" -> (q207StreamSessionize _, true),
+    "q204_stream_neardup" -> (q204StreamNeardup _, true),
+    "q193_stream_wallet" -> (q193StreamWallet _, true),
+    "q164_stream_interval_join" -> (q164StreamIntervalJoin _, false),
+    "q155_stream_window_agg" -> (q155StreamWindowAgg _, false),
+    "q148_stream_cdc_latest" -> (q148StreamCdcLatest _, true)
+  ).map { case (name, (fn, rocksDb)) =>
+    name -> ((s: SparkSession, dir: String) => withGateConf(s, rocksDb)(fn(s, dir)))
   }
 
   /** q148's oracle IS the batch q102 formulation: the streamed

@@ -60,8 +60,9 @@ class ForkCensusSpec extends SparkSpec {
   }
 
   test("q155's windowed aggregation (HDFS-backed state, local checkpoint) forks nothing, same rows") {
-    val (engine, engineForks) = census(posture)(Streams.q155StreamWindowAgg(spark, Sf).collect().toSeq)
-    val (default, defaultForks) = census(hadoopDefault)(Streams.q155StreamWindowAgg(spark, Sf).collect().toSeq)
+    def q155 = Streams.queries("q155_stream_window_agg")(spark, Sf).collect().toSeq
+    val (engine, engineForks) = census(posture)(q155)
+    val (default, defaultForks) = census(hadoopDefault)(q155)
     assert(defaultForks > 0, "Hadoop's default local FS forks here, so the census can see forks")
     assert(engineForks == 0)
     assert(engine.nonEmpty && engine == default)

@@ -62,4 +62,18 @@ class Md5SignVectorSpec extends SparkSpec {
     assert(s.forall(v => v == 1L || v == -1L))
     assert(out(1).isNullAt(0))
   }
+
+  test("md5_sign_vector: a constant width outside [0, 4096] fails at analysis") {
+    val keys = Seq(1L, 2L).toDF("k")
+    for (n <- Seq(5000, -1)) {
+      // select analyzes eagerly: the error comes before any action runs
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        keys.select(md5SignVector(col("k"), lit(n)))
+      }
+      assert(e.getMessage.contains(s"got $n"), e.getMessage)
+    }
+    // the bounds themselves are valid widths
+    assert(keys.select(md5SignVector(col("k"), lit(0))).head().getSeq[Long](0).isEmpty)
+    assert(keys.select(md5SignVector(col("k"), lit(4096))).head().getSeq[Long](0).length == 4096)
+  }
 }

@@ -3552,7 +3552,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("q210 KMV gate: below saturation the estimate is exact, error within the bound") {
-    graft.streaming.Streams.q210StreamKmv(spark, Sf).collect().foreach { r =>
+    graft.streaming.Streams.queries("q210_stream_kmv")(spark, Sf).collect().foreach { r =>
       val (est, kn, exact, err) =
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
       assert(kn <= 128L)
@@ -3812,7 +3812,7 @@ class OpsSpec extends SparkSpec {
       .orderBy("segment")
       .collect()
       .map(_.toString)
-    val got = graft.streaming.Streams.q217StreamDimJoin(spark, Sf)
+    val got = graft.streaming.Streams.queries("q217_stream_dim_join")(spark, Sf)
       .collect().map(_.toString)
     assert(got.sameElements(twin), "streamed enrich-join must equal the batch join")
   }
@@ -3870,7 +3870,7 @@ class OpsSpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     val byType = ev.groupBy(_._2)
-    val out = graft.streaming.Streams.q211StreamDedup(spark, Sf).collect()
+    val out = graft.streaming.Streams.queries("q211_stream_dedup")(spark, Sf).collect()
     assert(out.map(_.getString(0)).toSet == byType.keySet)
     out.foreach { r =>
       val rows = byType(r.getString(0))
@@ -4021,7 +4021,7 @@ class OpsSpec extends SparkSpec {
       .agg(count(lit(1)).as("n_users"), sum(col("u")).as("id_sum"),
         sum(col("at_us")).as("at_us_sum"))
       .orderBy("kind").collect().map(_.toString)
-    val got = graft.streaming.Streams.q222StreamSlaTimeout(spark, Sf)
+    val got = graft.streaming.Streams.queries("q222_stream_sla_timeout")(spark, Sf)
       .collect()
     assert(got.map(_.getString(0)).toSet == Set("breach", "convert"),
       "fixture must exercise both the fired-timer and cancelled-timer paths")
@@ -4123,7 +4123,7 @@ class OpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val byUser = ranked.groupBy(_._1).view.mapValues(
       _.sortBy { case (_, eid, c) => (-c, eid) }.map(_._3)).toMap
-    val got = graft.streaming.Streams.q226StreamUserTopk(spark, Sf).collect()
+    val got = graft.streaming.Streams.queries("q226_stream_user_topk")(spark, Sf).collect()
     got.foreach { r =>
       val tops = byUser(r.getLong(0))
       assert(r.getLong(1) == tops.length.toLong)
@@ -4275,7 +4275,7 @@ class OpsSpec extends SparkSpec {
     val touched = p.filter(_._2).map(_._1).toSet
     val expected = p.filter(r => touched(r._1)).groupBy(_._1).view
       .mapValues(rs => (rs.length.toLong, rs.map(_._3).sum)).toMap
-    val got = graft.streaming.Streams.q229StreamWarmStart(spark, Sf).collect()
+    val got = graft.streaming.Streams.queries("q229_stream_warm_start")(spark, Sf).collect()
     assert(got.length == touched.size)
     got.foreach { r =>
       assert((r.getLong(1), r.getLong(2)) == expected(r.getLong(0)),

@@ -7,11 +7,27 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+/** A spec that runs its own streams, some on the RocksDB state store. */
+abstract class StreamingSpec extends SparkSpec {
+
+  /** Runs `body` with the session's state-store provider set to
+    * RocksDB, restoring the previous provider afterwards. Unlike the
+    * engine's gate scope it leaves shuffle partitions alone.
+    */
+  protected def withRocksDb[T](body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, Streams.RocksDb)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+}
+
 /** Structured Streaming behavior: incremental ingest parity with the
   * batch pipeline, watermarked window finalization + late-data drop,
   * and gap sessionization via flatMapGroupsWithState.
   */
-class StreamsSpec extends SparkSpec {
+class StreamsSpec extends StreamingSpec {
 
   private def ts(minutes: Int): Timestamp =
     new Timestamp(1700000000000L + minutes * 60000L)
@@ -194,131 +210,103 @@ class StreamsSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // transformWithState stores each state variable in its own column
     // family — RocksDB provider required (HDFS-backed can't do CFs)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[(Long, Double)]
-    val q = Streams.runningTotals(in.toDS())
-      .writeStream
-      .format("memory")
-      .queryName("running_totals")
-      .outputMode("update")
-      .start()
-    try {
-      in.addData((1L, 10.0), (1L, 5.0), (2L, 1.0))
-      q.processAllAvailable()
-      in.addData((1L, 2.5), (3L, 7.0))
-      q.processAllAvailable()
-      // update mode: keep the LAST emission per user
-      val latest = spark.table("running_totals").collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).maxBy(_._1) }
-      assert(latest == Map(
-        1L -> ((3L, 17.5)), // state carried across the two batches
-        2L -> ((1L, 1.0)),
-        3L -> ((1L, 7.0))))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDb {
+      val in = MemoryStream[(Long, Double)]
+      val q = Streams.runningTotals(in.toDS())
+        .writeStream
+        .format("memory")
+        .queryName("running_totals")
+        .outputMode("update")
+        .start()
+      try {
+        in.addData((1L, 10.0), (1L, 5.0), (2L, 1.0))
+        q.processAllAvailable()
+        in.addData((1L, 2.5), (3L, 7.0))
+        q.processAllAvailable()
+        // update mode: keep the LAST emission per user
+        val latest = spark.table("running_totals").collect()
+          .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
+          .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).maxBy(_._1) }
+        assert(latest == Map(
+          1L -> ((3L, 17.5)), // state carried across the two batches
+          2L -> ((1L, 1.0)),
+          3L -> ((1L, 7.0))))
+      } finally q.stop()
     }
   }
 
   test("streaming near-dup gate flags copies across batches, passes unique docs") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val base = (1 to 60).map(i => s"token$i").mkString(" ")
-    val nearCopy = (1 to 60).map(i => if (i == 30) "CHANGED" else s"token$i").mkString(" ")
-    val unrelated = (1 to 60).map(i => s"other${i * 7}").mkString(" ")
-    val in = MemoryStream[(Long, String)]
-    val q = Streams
-      .streamingNearDupGate(in.toDF().toDF("doc_id", "text"))
-      .writeStream
-      .format("memory")
-      .queryName("neardup_gate")
-      .outputMode("update")
-      .start()
-    try {
-      in.addData((1L, base), (2L, unrelated))
-      q.processAllAvailable()
-      // batch 2: an exact copy and a near copy of doc 1, plus a fresh doc
-      in.addData((3L, base), (4L, nearCopy), (5L, (1 to 60).map(i => s"fresh$i").mkString(" ")))
-      q.processAllAvailable()
-      val hits = spark.table("neardup_gate").as[(Long, Int, Long)].collect()
-      val byDoc = hits.groupBy(_._1)
-      // the exact copy collides in EVERY band, always against doc 1
-      assert(byDoc.get(3L).exists(_.length == 32), s"exact copy hits: ${byDoc.get(3L).map(_.length)}")
-      assert(byDoc(3L).forall(_._3 == 1L))
-      // the near copy (59/60 tokens shared) collides in >=1 band
-      assert(byDoc.contains(4L), "near copy must hit at least one bucket")
-      assert(byDoc(4L).forall(_._3 == 1L))
-      // unique docs never collide — cross-batch state held doc 1/2's buckets
-      assert(!byDoc.contains(1L) && !byDoc.contains(2L) && !byDoc.contains(5L))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDb {
+      val base = (1 to 60).map(i => s"token$i").mkString(" ")
+      val nearCopy = (1 to 60).map(i => if (i == 30) "CHANGED" else s"token$i").mkString(" ")
+      val unrelated = (1 to 60).map(i => s"other${i * 7}").mkString(" ")
+      val in = MemoryStream[(Long, String)]
+      val q = Streams
+        .streamingNearDupGate(in.toDF().toDF("doc_id", "text"))
+        .writeStream
+        .format("memory")
+        .queryName("neardup_gate")
+        .outputMode("update")
+        .start()
+      try {
+        in.addData((1L, base), (2L, unrelated))
+        q.processAllAvailable()
+        // batch 2: an exact copy and a near copy of doc 1, plus a fresh doc
+        in.addData((3L, base), (4L, nearCopy), (5L, (1 to 60).map(i => s"fresh$i").mkString(" ")))
+        q.processAllAvailable()
+        val hits = spark.table("neardup_gate").as[(Long, Int, Long)].collect()
+        val byDoc = hits.groupBy(_._1)
+        // the exact copy collides in EVERY band, always against doc 1
+        assert(byDoc.get(3L).exists(_.length == 32), s"exact copy hits: ${byDoc.get(3L).map(_.length)}")
+        assert(byDoc(3L).forall(_._3 == 1L))
+        // the near copy (59/60 tokens shared) collides in >=1 band
+        assert(byDoc.contains(4L), "near copy must hit at least one bucket")
+        assert(byDoc(4L).forall(_._3 == 1L))
+        // unique docs never collide — cross-batch state held doc 1/2's buckets
+        assert(!byDoc.contains(1L) && !byDoc.contains(2L) && !byDoc.contains(5L))
+      } finally q.stop()
     }
   }
 
   test("near-dup gate: a LOWER doc_id arriving at an occupied bucket still emits the collision") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val base = (1 to 60).map(i => s"word$i").mkString(" ")
-    val in = MemoryStream[(Long, String)]
-    val q = Streams
-      .streamingNearDupGate(in.toDF().toDF("doc_id", "text"))
-      .writeStream
-      .format("memory")
-      .queryName("neardup_gate_ooo")
-      .outputMode("update")
-      .start()
-    try {
-      // doc 5 registers the buckets first; its exact copy doc 0 arrives
-      // LATER with a smaller id, displacing the representative. Round 4
-      // dropped this collision entirely (emissions depended on arrival
-      // order); now the displaced occupant must be emitted against the
-      // new representative in every band.
-      in.addData((5L, base))
-      q.processAllAvailable()
-      in.addData((0L, base))
-      q.processAllAvailable()
-      val hits = spark.table("neardup_gate_ooo").as[(Long, Int, Long)].collect()
-      assert(hits.nonEmpty, "out-of-order copy must still produce collisions")
-      // displaced representative 5 emitted against new representative 0
-      assert(hits.count(h => h._1 == 5L && h._3 == 0L) == 32,
-        s"displaced occupant must collide in every band: ${hits.toSeq}")
-      // the covered pair set is exactly {0,5} in some orientation
-      assert(hits.forall(h => Set(h._1, h._3) == Set(0L, 5L)), s"got ${hits.toSeq}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDb {
+      val base = (1 to 60).map(i => s"word$i").mkString(" ")
+      val in = MemoryStream[(Long, String)]
+      val q = Streams
+        .streamingNearDupGate(in.toDF().toDF("doc_id", "text"))
+        .writeStream
+        .format("memory")
+        .queryName("neardup_gate_ooo")
+        .outputMode("update")
+        .start()
+      try {
+        // doc 5 registers the buckets first; its exact copy doc 0 arrives
+        // LATER with a smaller id, displacing the representative. Round 4
+        // dropped this collision entirely (emissions depended on arrival
+        // order); now the displaced occupant must be emitted against the
+        // new representative in every band.
+        in.addData((5L, base))
+        q.processAllAvailable()
+        in.addData((0L, base))
+        q.processAllAvailable()
+        val hits = spark.table("neardup_gate_ooo").as[(Long, Int, Long)].collect()
+        assert(hits.nonEmpty, "out-of-order copy must still produce collisions")
+        // displaced representative 5 emitted against new representative 0
+        assert(hits.count(h => h._1 == 5L && h._3 == 0L) == 32,
+          s"displaced occupant must collide in every band: ${hits.toSeq}")
+        // the covered pair set is exactly {0,5} in some orientation
+        assert(hits.forall(h => Set(h._1, h._3) == Set(0L, 5L)), s"got ${hits.toSeq}")
+      } finally q.stop()
     }
   }
 
   test("near-dup gate state survives a query restart from the checkpoint") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-gate-ckpt").toString
     val base = (1 to 60).map(i => s"tok$i").mkString(" ")
     val in = MemoryStream[(Long, String)]
@@ -333,7 +321,7 @@ class StreamsSpec extends SparkSpec {
         ()
       }
       .start()
-    try {
+    withRocksDb {
       // run 1: the original registers its buckets, then the query dies
       val q1 = start()
       in.addData((1L, base))
@@ -351,11 +339,6 @@ class StreamsSpec extends SparkSpec {
       assert(hits.forall(h => h.doc_id == 2L && h.rep_doc_id == 1L),
         s"collisions must point at the pre-restart representative: $hits")
       assert(hits.length == 32, s"exact copy collides in every band: ${hits.length}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -508,38 +491,32 @@ class StreamsSpec extends SparkSpec {
   test("delivery-contract violations bump the LateArrivals counters; in-order stays silent") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    Streams.LateArrivals.reset("last_touch")
-    Streams.LateArrivals.reset("funnel")
-    val in = MemoryStream[Streams.TouchEvent]
-    val q = Streams
-      .streamingAttributionGate(in.toDS())
-      .writeStream.format("memory").queryName("late_counter_attr")
-      .outputMode("update").start()
-    try {
-      // in-order: touch at t=100, purchase at t=200 -> no late rows
-      in.addData(Streams.TouchEvent(1L, 100L, 1L, Some("email"), None))
-      q.processAllAvailable()
-      in.addData(Streams.TouchEvent(1L, 200L, 2L, None, Some(500L)))
-      q.processAllAvailable()
-      assert(Streams.LateArrivals.count("last_touch") == 0L,
-        "ordered delivery must not count as late")
-      // a touch OLDER than the retained state arrives in a later
-      // trigger: silently dropped before, now counted
-      in.addData(Streams.TouchEvent(1L, 50L, 3L, Some("social"), None))
-      q.processAllAvailable()
-      assert(Streams.LateArrivals.count("last_touch") == 1L,
-        "out-of-order touch must bump the counter")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDb {
       Streams.LateArrivals.reset("last_touch")
+      Streams.LateArrivals.reset("funnel")
+      val in = MemoryStream[Streams.TouchEvent]
+      val q = Streams
+        .streamingAttributionGate(in.toDS())
+        .writeStream.format("memory").queryName("late_counter_attr")
+        .outputMode("update").start()
+      try {
+        // in-order: touch at t=100, purchase at t=200 -> no late rows
+        in.addData(Streams.TouchEvent(1L, 100L, 1L, Some("email"), None))
+        q.processAllAvailable()
+        in.addData(Streams.TouchEvent(1L, 200L, 2L, None, Some(500L)))
+        q.processAllAvailable()
+        assert(Streams.LateArrivals.count("last_touch") == 0L,
+          "ordered delivery must not count as late")
+        // a touch OLDER than the retained state arrives in a later
+        // trigger: silently dropped before, now counted
+        in.addData(Streams.TouchEvent(1L, 50L, 3L, Some("social"), None))
+        q.processAllAvailable()
+        assert(Streams.LateArrivals.count("last_touch") == 1L,
+          "out-of-order touch must bump the counter")
+      } finally {
+        q.stop()
+        Streams.LateArrivals.reset("last_touch")
+      }
     }
   }
 }
@@ -548,7 +525,7 @@ class StreamsSpec extends SparkSpec {
   * windowed aggregate over a bounded file stream (AvailableNow) must
   * account for every batch row.
   */
-class StreamBatchParitySpec extends SparkSpec {
+class StreamBatchParitySpec extends StreamingSpec {
   import org.apache.spark.sql.functions._
 
   test("windowed counts over a file stream equal the batch totals") {
@@ -633,67 +610,59 @@ class StreamBatchParitySpec extends SparkSpec {
   test("streaming heavy-hitter gate matches an exact CMS simulation; heavy keys never missed") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val threshold = 5L
-    // batch 1: user 1 ×3, user 3 ×6 (crosses in-batch), noise keys once each
-    // batch 2: user 1 ×4 (crosses cumulatively), user 2 ×4 (stays below)
-    val b1 = Seq.fill(3)(1L) ++ Seq.fill(6)(3L) ++ (100L to 119L)
-    val b2 = Seq.fill(4)(1L) ++ Seq.fill(4)(2L)
-    val in = MemoryStream[Long]
-    val q = graft.streaming.Streams
-      .streamingHeavyHitterGate(in.toDF().toDF("user_id"), threshold)
-      .writeStream
-      .format("memory")
-      .queryName("heavy_gate")
-      .outputMode("update")
-      .start()
-    try {
-      in.addData(b1); q.processAllAvailable()
-      in.addData(b2); q.processAllAvailable()
-      val got = spark.table("heavy_gate").as[(Long, Long)].collect().toSet
+    withRocksDb {
+      val threshold = 5L
+      // batch 1: user 1 ×3, user 3 ×6 (crosses in-batch), noise keys once each
+      // batch 2: user 1 ×4 (crosses cumulatively), user 2 ×4 (stays below)
+      val b1 = Seq.fill(3)(1L) ++ Seq.fill(6)(3L) ++ (100L to 119L)
+      val b2 = Seq.fill(4)(1L) ++ Seq.fill(4)(2L)
+      val in = MemoryStream[Long]
+      val q = graft.streaming.Streams
+        .streamingHeavyHitterGate(in.toDF().toDF("user_id"), threshold)
+        .writeStream
+        .format("memory")
+        .queryName("heavy_gate")
+        .outputMode("update")
+        .start()
+      try {
+        in.addData(b1); q.processAllAvailable()
+        in.addData(b2); q.processAllAvailable()
+        val got = spark.table("heavy_gate").as[(Long, Long)].collect().toSet
 
-      // exact simulation of the processor over the same batch splits
-      import graft.ops.Relational.{cmsBucket, CmsHashes, CmsWidth}
-      val cells = scala.collection.mutable.Map
-        .empty[Int, Array[Long]] // shard -> d×w
-      val flaggedSim = scala.collection.mutable.Set.empty[Long]
-      val expected = scala.collection.mutable.Set.empty[(Long, Long)]
-      Seq(b1, b2).foreach { batch =>
-        batch.groupBy(k => (k % 32).toInt).foreach { case (shard, ks) =>
-          val arr = cells.getOrElseUpdate(
-            shard, new Array[Long](CmsHashes.length * CmsWidth))
-          val m = ks.groupBy(identity).view.mapValues(_.size.toLong)
-          m.foreach { case (k, n) =>
-            CmsHashes.foreach { case (d, a, b) =>
-              arr(d * CmsWidth + cmsBucket(a, b, k)) += n
+        // exact simulation of the processor over the same batch splits
+        import graft.ops.Relational.{cmsBucket, CmsHashes, CmsWidth}
+        val cells = scala.collection.mutable.Map
+          .empty[Int, Array[Long]] // shard -> d×w
+        val flaggedSim = scala.collection.mutable.Set.empty[Long]
+        val expected = scala.collection.mutable.Set.empty[(Long, Long)]
+        Seq(b1, b2).foreach { batch =>
+          batch.groupBy(k => (k % 32).toInt).foreach { case (shard, ks) =>
+            val arr = cells.getOrElseUpdate(
+              shard, new Array[Long](CmsHashes.length * CmsWidth))
+            val m = ks.groupBy(identity).view.mapValues(_.size.toLong)
+            m.foreach { case (k, n) =>
+              CmsHashes.foreach { case (d, a, b) =>
+                arr(d * CmsWidth + cmsBucket(a, b, k)) += n
+              }
             }
-          }
-          m.keys.toSeq.sorted.foreach { k =>
-            val est = CmsHashes.map { case (d, a, b) =>
-              arr(d * CmsWidth + cmsBucket(a, b, k))
-            }.min
-            if (est >= threshold && !flaggedSim(k)) {
-              flaggedSim += k
-              expected += ((k, est))
+            m.keys.toSeq.sorted.foreach { k =>
+              val est = CmsHashes.map { case (d, a, b) =>
+                arr(d * CmsWidth + cmsBucket(a, b, k))
+              }.min
+              if (est >= threshold && !flaggedSim(k)) {
+                flaggedSim += k
+                expected += ((k, est))
+              }
             }
           }
         }
-      }
-      assert(got == expected.toSet, s"got $got expected $expected")
-      // the one-sided guarantee: truly-heavy keys are always flagged
-      val exactCounts = (b1 ++ b2).groupBy(identity).view.mapValues(_.size)
-      exactCounts.filter(_._2 >= threshold).keys.foreach { k =>
-        assert(got.exists(_._1 == k), s"heavy key $k was never flagged")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+        assert(got == expected.toSet, s"got $got expected $expected")
+        // the one-sided guarantee: truly-heavy keys are always flagged
+        val exactCounts = (b1 ++ b2).groupBy(identity).view.mapValues(_.size)
+        exactCounts.filter(_._2 >= threshold).keys.foreach { k =>
+          assert(got.exists(_._1 == k), s"heavy key $k was never flagged")
+        }
+      } finally q.stop()
     }
   }
 
@@ -730,30 +699,22 @@ class StreamBatchParitySpec extends SparkSpec {
   test("heavy-hitter gate survives negative keys (no negative array index)") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Long]
-    val q = graft.streaming.Streams
-      .streamingHeavyHitterGate(in.toDF().toDF("user_id"), threshold = 4L)
-      .writeStream
-      .format("memory")
-      .queryName("neg_gate")
-      .outputMode("update")
-      .start()
-    try {
-      in.addData(Seq.fill(5)(-7L) ++ Seq.fill(5)(8400000000L) ++ (-120L to -100L))
-      q.processAllAvailable()
-      val got = spark.table("neg_gate").as[(Long, Long)].collect().toMap
-      assert(got.contains(-7L), s"heavy negative key not flagged: $got")
-      assert(got.contains(8400000000L), s"heavy wrap-range key not flagged: $got")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDb {
+      val in = MemoryStream[Long]
+      val q = graft.streaming.Streams
+        .streamingHeavyHitterGate(in.toDF().toDF("user_id"), threshold = 4L)
+        .writeStream
+        .format("memory")
+        .queryName("neg_gate")
+        .outputMode("update")
+        .start()
+      try {
+        in.addData(Seq.fill(5)(-7L) ++ Seq.fill(5)(8400000000L) ++ (-120L to -100L))
+        q.processAllAvailable()
+        val got = spark.table("neg_gate").as[(Long, Long)].collect().toMap
+        assert(got.contains(-7L), s"heavy negative key not flagged: $got")
+        assert(got.contains(8400000000L), s"heavy wrap-range key not flagged: $got")
+      } finally q.stop()
     }
   }
 
@@ -822,11 +783,7 @@ class StreamBatchParitySpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val docs = graft.ops.Tables.documents(spark, Sf)
         .select(col("doc_id"), col("text"))
         .filter(size(split(col("text"), " ")) >= 3)
@@ -893,22 +850,13 @@ class StreamBatchParitySpec extends SparkSpec {
             s"split $i: stream components diverge from batch candidate components")
         } finally q.stop()
       }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("streaming KMV gate: estimates are a pure function of the set — any order, any split") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val k = 128
       val M = 1000000007L
       // (event_type, user_id) stream off the fixture, with replays
@@ -941,76 +889,62 @@ class StreamBatchParitySpec extends SparkSpec {
           assert(got == expected, s"$name delivery diverged from the batch KMV")
         } finally q.stop()
       }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("streaming EWMA gate: final scores match the batch dyadic algebra exactly") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-    val horizon = 16
-    // (user, epoch_day, cents) off the fixture — same cents convention
-    // as batch q113 (floor(value*100+0.5))
-    val rows = graft.ops.Tables.events(spark, Sf)
-      .select(
-        col("user_id"),
-        datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    // batch reference: per-user daily totals, newest-first horizon,
-    // exact dyadic num/den — the q113 algebra with a per-user anchor
-    val expected = rows
-      .groupBy(r => (r._1, r._2)).view
-      .mapValues(_.map(_._3).sum).toSeq
-      .map { case ((u, d), c) => (u, d, c) }
-      .groupBy(_._1).map { case (u, ds) =>
-        val kept = ds.sortBy(-_._2).take(horizon)
-        val num = kept.zipWithIndex.map { case ((_, _, c), j) =>
-          c * (1L << (horizon - 1 - j)) }.sum
-        val den = kept.indices.map(j => 1L << (horizon - 1 - j)).sum
-        u -> ((kept.length, kept.head._2, num, den))
-      }
-    // day-ordered delivery (the documented contract): batches split by
-    // day; WITHIN a day rows arrive shuffled and split across batches
-    val byDay = rows.sortBy(_._2)
-    val mid = byDay.count(_._2 <= byDay(byDay.size / 2)._2)
-    val batches = Seq(
-      byDay.take(mid).reverse, // within-horizon reordering is fine
-      byDay.drop(mid).grouped(97).toSeq.flatten)
-      .flatMap(b => Seq(b.take(b.size / 2), b.drop(b.size / 2)))
-    val in = MemoryStream[(Long, Long, Long)]
-    val q = graft.streaming.Streams.streamingEwmaGate(in.toDS(), horizon)
-      .writeStream.format("memory").queryName("ewma_gate")
-      .outputMode("update").start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      val got = spark.table("ewma_gate")
-        .collect().zipWithIndex
-        .groupBy(_._1.getLong(0))
-        .map { case (u, emits) =>
-          val last = emits.maxBy(_._2)._1
-          u -> ((last.getInt(1), last.getLong(2), last.getLong(3), last.getLong(4)))
+    withRocksDb {
+      val horizon = 16
+      // (user, epoch_day, cents) off the fixture — same cents convention
+      // as batch q113 (floor(value*100+0.5))
+      val rows = graft.ops.Tables.events(spark, Sf)
+        .select(
+          col("user_id"),
+          datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day"),
+          floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      // batch reference: per-user daily totals, newest-first horizon,
+      // exact dyadic num/den — the q113 algebra with a per-user anchor
+      val expected = rows
+        .groupBy(r => (r._1, r._2)).view
+        .mapValues(_.map(_._3).sum).toSeq
+        .map { case ((u, d), c) => (u, d, c) }
+        .groupBy(_._1).map { case (u, ds) =>
+          val kept = ds.sortBy(-_._2).take(horizon)
+          val num = kept.zipWithIndex.map { case ((_, _, c), j) =>
+            c * (1L << (horizon - 1 - j)) }.sum
+          val den = kept.indices.map(j => 1L << (horizon - 1 - j)).sum
+          u -> ((kept.length, kept.head._2, num, den))
         }
-      assert(got == expected, "streaming EWMA diverged from the batch dyadic algebra")
-      // the derived double is the one num/den division
-      spark.table("ewma_gate").collect().foreach { r =>
-        assert(r.getDouble(5) == r.getLong(3).toDouble / r.getLong(4))
-      }
-    } finally q.stop()
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
+      // day-ordered delivery (the documented contract): batches split by
+      // day; WITHIN a day rows arrive shuffled and split across batches
+      val byDay = rows.sortBy(_._2)
+      val mid = byDay.count(_._2 <= byDay(byDay.size / 2)._2)
+      val batches = Seq(
+        byDay.take(mid).reverse, // within-horizon reordering is fine
+        byDay.drop(mid).grouped(97).toSeq.flatten)
+        .flatMap(b => Seq(b.take(b.size / 2), b.drop(b.size / 2)))
+      val in = MemoryStream[(Long, Long, Long)]
+      val q = graft.streaming.Streams.streamingEwmaGate(in.toDS(), horizon)
+        .writeStream.format("memory").queryName("ewma_gate")
+        .outputMode("update").start()
+      try {
+        batches.foreach { b => in.addData(b); q.processAllAvailable() }
+        val got = spark.table("ewma_gate")
+          .collect().zipWithIndex
+          .groupBy(_._1.getLong(0))
+          .map { case (u, emits) =>
+            val last = emits.maxBy(_._2)._1
+            u -> ((last.getInt(1), last.getLong(2), last.getLong(3), last.getLong(4)))
+          }
+        assert(got == expected, "streaming EWMA diverged from the batch dyadic algebra")
+        // the derived double is the one num/den division
+        spark.table("ewma_gate").collect().foreach { r =>
+          assert(r.getDouble(5) == r.getLong(3).toDouble / r.getLong(4))
+        }
+      } finally q.stop()
     }
   }
 
@@ -1018,11 +952,7 @@ class StreamBatchParitySpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.Streams.{CdcChange, CdcImage}
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       // q102's synthesized log, as change events
       val o = graft.ops.Tables.orders(spark, Sf)
         .select(col("o_orderkey").as("k"),
@@ -1068,11 +998,6 @@ class StreamBatchParitySpec extends SparkSpec {
       assert(deletedStay.nonEmpty && resurrected.nonEmpty, "fixture must cover both paths")
       deletedStay.foreach(k => assert(expected(k)._2 == "D"))
       resurrected.foreach(k => assert(expected(k)._2 == "U" && expected(k)._3.isDefined))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1248,29 +1173,21 @@ class StreamBatchParitySpec extends SparkSpec {
       }
       .sortBy(e => (e.ts_us, e.event_id)) // the gate's delivery contract
     // transformWithState needs the RocksDB provider (column families)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[TouchEvent]
-    val q = Streams
-      .streamingAttributionGate(in.toDS())
-      .writeStream.format("memory").queryName("attr_parity")
-      .outputMode("update").start()
-    try {
-      rows.grouped(500).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
-      val got = spark.table("attr_parity").as[Attribution].collect()
-        .map(a => (a.user_id, a.event_id, a.channel, a.cents))
-        .toSet
-      assert(got == expected,
-        s"stream != batch; only-stream=${(got -- expected).take(3)}, " +
-          s"only-batch=${(expected -- got).take(3)}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDb {
+      val in = MemoryStream[TouchEvent]
+      val q = Streams
+        .streamingAttributionGate(in.toDS())
+        .writeStream.format("memory").queryName("attr_parity")
+        .outputMode("update").start()
+      try {
+        rows.grouped(500).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
+        val got = spark.table("attr_parity").as[Attribution].collect()
+          .map(a => (a.user_id, a.event_id, a.channel, a.cents))
+          .toSet
+        assert(got == expected,
+          s"stream != batch; only-stream=${(got -- expected).take(3)}, " +
+            s"only-batch=${(expected -- got).take(3)}")
+      } finally q.stop()
     }
   }
 
@@ -1305,33 +1222,25 @@ class StreamBatchParitySpec extends SparkSpec {
       .toMap
 
     val live = e.filter(!col("in_a")).select("v").collect().map(_.getLong(0))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Long]
-    val q = Streams
-      .streamingPsiGate(in.toDS(), bounds, refCounts)
-      .writeStream.format("memory").queryName("psi_parity")
-      .outputMode("update").start()
-    try {
-      live.grouped(500).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
-      // the CURRENT table per bucket = the emission with the highest
-      // live count (monotone; sink row order is not contractual)
-      val got = spark.table("psi_parity").as[PsiBucket].collect()
-        .groupBy(_.bucket).map { case (b, rows) => b.toLong -> rows.maxBy(_.n_live) }
-      expected.foreach { case (bucket, (nf, ns, psi)) =>
-        val g = got(bucket)
-        assert(g.n_ref == nf, s"bucket $bucket: ref ${g.n_ref} != $nf")
-        assert(g.n_live == ns, s"bucket $bucket: live ${g.n_live} != $ns")
-        assert(g.psi_contrib == psi, s"bucket $bucket: psi ${g.psi_contrib} != $psi")
-      }
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDb {
+      val in = MemoryStream[Long]
+      val q = Streams
+        .streamingPsiGate(in.toDS(), bounds, refCounts)
+        .writeStream.format("memory").queryName("psi_parity")
+        .outputMode("update").start()
+      try {
+        live.grouped(500).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
+        // the CURRENT table per bucket = the emission with the highest
+        // live count (monotone; sink row order is not contractual)
+        val got = spark.table("psi_parity").as[PsiBucket].collect()
+          .groupBy(_.bucket).map { case (b, rows) => b.toLong -> rows.maxBy(_.n_live) }
+        expected.foreach { case (bucket, (nf, ns, psi)) =>
+          val g = got(bucket)
+          assert(g.n_ref == nf, s"bucket $bucket: ref ${g.n_ref} != $nf")
+          assert(g.n_live == ns, s"bucket $bucket: live ${g.n_live} != $ns")
+          assert(g.psi_contrib == psi, s"bucket $bucket: psi ${g.psi_contrib} != $psi")
+        }
+      } finally q.stop()
     }
   }
 
@@ -1364,30 +1273,22 @@ class StreamBatchParitySpec extends SparkSpec {
     val rows = daily.collect()
       .map(r => DayTotal(r.getString(0), r.getLong(3), r.getLong(2)))
       .sortBy(_.epoch_day) // the gate's delivery contract
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[DayTotal]
-    val q = Streams
-      .streamingAnomalyGate(in.toDS())
-      .writeStream.format("memory").queryName("anomaly_parity")
-      .outputMode("update").start()
-    try {
-      rows.grouped(25).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
-      val got = spark.table("anomaly_parity").as[AnomalyVerdict].collect()
-      assert(got.length == nScored, s"scored ${got.length} days, expected $nScored")
-      val gotFlagged = got.filter(_.flagged)
-        .map(v => (v.event_type, v.epoch_day, v.direction)).toSet
-      assert(gotFlagged == expectedFlagged,
-        s"stream != batch; only-stream=${(gotFlagged -- expectedFlagged).take(3)}, " +
-          s"only-batch=${(expectedFlagged -- gotFlagged).take(3)}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDb {
+      val in = MemoryStream[DayTotal]
+      val q = Streams
+        .streamingAnomalyGate(in.toDS())
+        .writeStream.format("memory").queryName("anomaly_parity")
+        .outputMode("update").start()
+      try {
+        rows.grouped(25).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
+        val got = spark.table("anomaly_parity").as[AnomalyVerdict].collect()
+        assert(got.length == nScored, s"scored ${got.length} days, expected $nScored")
+        val gotFlagged = got.filter(_.flagged)
+          .map(v => (v.event_type, v.epoch_day, v.direction)).toSet
+        assert(gotFlagged == expectedFlagged,
+          s"stream != batch; only-stream=${(gotFlagged -- expectedFlagged).take(3)}, " +
+            s"only-batch=${(expectedFlagged -- gotFlagged).take(3)}")
+      } finally q.stop()
     }
   }
 
@@ -1419,90 +1320,74 @@ class StreamBatchParitySpec extends SparkSpec {
     val rows = evDf.collect()
       .map(r => FunnelEvent(r.getLong(0), r.getLong(1), r.getString(2)))
       .sortBy(_.ts_us) // the gate's delivery contract
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[FunnelEvent]
-    val q = graft.streaming.Streams
-      .streamingFunnelGate(in.toDS())
-      .writeStream.format("memory").queryName("funnel_parity")
-      .outputMode("update").start()
-    try {
-      rows.grouped(500).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
-      val got = spark.table("funnel_parity").as[StageCross].collect()
-        .map(sc => (sc.user_id, sc.stage, sc.ts_us))
-        .toSet
-      assert(got == expected,
-        s"stream != batch; only-stream=${(got -- expected).take(3)}, " +
-          s"only-batch=${(expected -- got).take(3)}")
-      // and the live populations equal q120's published counts (a
-      // stage nobody reached emits no crossings but q120 reports 0)
-      val counts = got.groupBy(_._2).view.mapValues(_.size.toLong).toMap
-      val q120 = graft.ops.Relational.q120FunnelWindowed(spark, Sf).collect()
-        .map(r => r.getLong(0).toInt -> r.getLong(2)).toMap
-      assert(q120.forall { case (stage, n) => counts.getOrElse(stage, 0L) == n },
-        s"stage counts $counts != q120 $q120")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v2) => spark.conf.set(key, v2)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDb {
+      val in = MemoryStream[FunnelEvent]
+      val q = graft.streaming.Streams
+        .streamingFunnelGate(in.toDS())
+        .writeStream.format("memory").queryName("funnel_parity")
+        .outputMode("update").start()
+      try {
+        rows.grouped(500).foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
+        val got = spark.table("funnel_parity").as[StageCross].collect()
+          .map(sc => (sc.user_id, sc.stage, sc.ts_us))
+          .toSet
+        assert(got == expected,
+          s"stream != batch; only-stream=${(got -- expected).take(3)}, " +
+            s"only-batch=${(expected -- got).take(3)}")
+        // and the live populations equal q120's published counts (a
+        // stage nobody reached emits no crossings but q120 reports 0)
+        val counts = got.groupBy(_._2).view.mapValues(_.size.toLong).toMap
+        val q120 = graft.ops.Relational.q120FunnelWindowed(spark, Sf).collect()
+          .map(r => r.getLong(0).toInt -> r.getLong(2)).toMap
+        assert(q120.forall { case (stage, n) => counts.getOrElse(stage, 0L) == n },
+          s"stage counts $counts != q120 $q120")
+      } finally q.stop()
     }
   }
 
   test("streaming wallet gate replays q189's batch fold exactly") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the batch twin's exact input, in the contract's event-time order
-    val evs = graft.ops.Tables.events(spark, Sf)
-      .filter(col("event_type").isin("signup", "click", "purchase"))
-      .select(
-        col("user_id"),
-        unix_micros(col("ts")).as("ts_us"),
-        col("event_id"),
-        when(col("event_type") === "purchase",
-          -floor(col("value") * 100 + 0.5).cast("long"))
-          .otherwise(floor(col("value") * 100 + 0.5).cast("long")).as("delta"))
-      .collect()
-      .map(r => graft.streaming.Streams.WalletEvent(
-        r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(e => (e.ts_us, e.event_id))
-    val in = MemoryStream[graft.streaming.Streams.WalletEvent]
-    val q = graft.streaming.Streams.streamingWalletGate(in.toDS())
-      .writeStream
-      .format("memory")
-      .queryName("wallet_gate")
-      .outputMode("update")
-      .start()
-    try {
-      // two triggers split mid-history: state must carry across
-      val (first, second) = evs.splitAt(evs.length / 2)
-      in.addData(first.toSeq)
-      q.processAllAvailable()
-      in.addData(second.toSeq)
-      q.processAllAvailable()
-      val latest = spark.table("wallet_gate").collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
-        .groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).maxBy(_._1) }
-      val batch = graft.ops.Relational.q189ClampedBalance(spark, Sf).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
-        .toMap
-      assert(latest == batch,
-        "the streamed wallet snapshots must equal q189's batch rows bit-for-bit")
-      assert(graft.streaming.Streams.LateArrivals.count("wallet") == 0L,
-        "ordered delivery must not trip the late counter")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v2) => spark.conf.set(key, v2)
-        case None => spark.conf.unset(key)
-      }
+    withRocksDb {
+      // the batch twin's exact input, in the contract's event-time order
+      val evs = graft.ops.Tables.events(spark, Sf)
+        .filter(col("event_type").isin("signup", "click", "purchase"))
+        .select(
+          col("user_id"),
+          unix_micros(col("ts")).as("ts_us"),
+          col("event_id"),
+          when(col("event_type") === "purchase",
+            -floor(col("value") * 100 + 0.5).cast("long"))
+            .otherwise(floor(col("value") * 100 + 0.5).cast("long")).as("delta"))
+        .collect()
+        .map(r => graft.streaming.Streams.WalletEvent(
+          r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .sortBy(e => (e.ts_us, e.event_id))
+      val in = MemoryStream[graft.streaming.Streams.WalletEvent]
+      val q = graft.streaming.Streams.streamingWalletGate(in.toDS())
+        .writeStream
+        .format("memory")
+        .queryName("wallet_gate")
+        .outputMode("update")
+        .start()
+      try {
+        // two triggers split mid-history: state must carry across
+        val (first, second) = evs.splitAt(evs.length / 2)
+        in.addData(first.toSeq)
+        q.processAllAvailable()
+        in.addData(second.toSeq)
+        q.processAllAvailable()
+        val latest = spark.table("wallet_gate").collect()
+          .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
+          .groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).maxBy(_._1) }
+        val batch = graft.ops.Relational.q189ClampedBalance(spark, Sf).collect()
+          .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
+          .toMap
+        assert(latest == batch,
+          "the streamed wallet snapshots must equal q189's batch rows bit-for-bit")
+        assert(graft.streaming.Streams.LateArrivals.count("wallet") == 0L,
+          "ordered delivery must not trip the late counter")
+      } finally q.stop()
     }
   }
 
@@ -1528,7 +1413,7 @@ class StreamBatchParitySpec extends SparkSpec {
         sum(col("e") - col("s")).as("dur_us_total"), max(col("n")).as("max_session_events"))
       .orderBy("bucket")
       .collect().map(_.toString)
-    val got = graft.streaming.Streams.q207StreamSessionize(spark, Sf)
+    val got = graft.streaming.Streams.queries("q207_stream_sessionize")(spark, Sf)
       .collect().map(_.toString)
     assert(got.nonEmpty, "gate emitted no non-final sessions on the fixture")
     assert(got.sameElements(expected),
@@ -1536,7 +1421,7 @@ class StreamBatchParitySpec extends SparkSpec {
   }
 
   test("q237 gate: the streamed left-outer rollup equals the batch left join exactly") {
-    val out = graft.streaming.Streams.q237StreamLeftJoin(spark, Sf).collect()
+    val out = graft.streaming.Streams.queries("q237_stream_left_join")(spark, Sf).collect()
     val ev = graft.ops.Tables.events(spark, Sf)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
@@ -1648,7 +1533,7 @@ class StreamBatchParitySpec extends SparkSpec {
   }
 
   test("gate state-partition scope: results partition-count independent, conf restored") {
-    // the withGateParts contract behind every Streams.queries entry
+    // the withGateConf contract behind every Streams.queries entry
     // (round 13): the scoped shuffle-partition count is a pure
     // constant factor — gate VALUES must be identical at any setting
     // — and the session's previous value must survive the gate.
@@ -1669,20 +1554,30 @@ class StreamBatchParitySpec extends SparkSpec {
     assert(spark.conf.get(k) == before, "shuffle partitions not restored after the gate scope")
   }
 
+  private val Provider = "spark.sql.streaming.stateStore.providerClass"
+
+  /** The three keys the gate scope sets, as the session holds them. */
+  private def gateConf(): Seq[Option[String]] = Seq(
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+    Provider).map(spark.conf.getAll.get)
+
   test("gate changelog-checkpoint scope: results checkpoint-mode independent, conf restored") {
-    // round 14: withGateParts scopes RocksDB changelog checkpointing
+    // round 14: withGateConf scopes RocksDB changelog checkpointing
     // on for each gate (commit = changelog upload, snapshots in
     // maintenance). The mode is a pure commit-mechanism choice — gate
     // VALUES must be identical either way — and the scope must honor
     // an explicit caller setting and leave the session clean.
     val ck = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     assert(spark.conf.getOption(ck).isEmpty, "precondition: changelog key unset")
+    assert(!spark.conf.getAll.contains(Provider), "precondition: provider key unset")
     def run(): Seq[String] =
       graft.streaming.Streams
         .queries("q148_stream_cdc_latest")(spark, Sf)
         .collect().map(_.toString).toSeq
     val withDefault = run() // scope applies changelog=true
     assert(spark.conf.getOption(ck).isEmpty, "changelog key leaked past the gate scope")
+    assert(!spark.conf.getAll.contains(Provider), "provider key leaked past the gate scope")
     spark.conf.set(ck, "false") // explicit caller setting wins over the scope default
     val withoutChangelog =
       try run()
@@ -1690,6 +1585,33 @@ class StreamBatchParitySpec extends SparkSpec {
     assert(withDefault.nonEmpty, "gate emitted nothing on the fixture")
     assert(withDefault == withoutChangelog,
       s"gate rollup depends on the checkpoint mode: ${withDefault.take(2)} vs ${withoutChangelog.take(2)}")
+  }
+
+  test("gate scope: a gate that throws inside the scope leaves the session conf as it was") {
+    val before = gateConf()
+    // the orders read fails its path check inside the RocksDB gate's scope
+    intercept[org.apache.spark.sql.AnalysisException] {
+      graft.streaming.Streams.queries("q148_stream_cdc_latest")(spark, "/nonexistent")
+    }
+    assert(gateConf() == before)
+  }
+
+  test("gate scope: two gates on one session from two threads, results as run serially") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    def run(name: String): Seq[String] =
+      graft.streaming.Streams.queries(name)(spark, Sf).collect().map(_.toString).toSeq
+    val names = Seq("q155_stream_window_agg", "q148_stream_cdc_latest")
+    val before = gateConf()
+    val serial = names.map(run)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val concurrent = Await.result(Future.traverse(names)(n => Future(run(n))), 10.minutes)
+      assert(serial.forall(_.nonEmpty), "gate emitted nothing on the fixture")
+      assert(concurrent == serial)
+    } finally pool.shutdown()
+    assert(gateConf() == before)
   }
 }
 
