@@ -5,7 +5,11 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.graftshim.JsonInferShim
+import org.apache.spark.sql.catalyst.json.JSONOptionsInRead
+import org.apache.spark.sql.execution.datasources.CodecStreams
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** The engine's core transform: schema-driven envelope normalization.
@@ -35,11 +39,31 @@ object Normalize {
     * staged file as ONE JSON document with schema inferred from the
     * first 1000 values (reference: src/processor.rs:23-29); Spark's
     * `multiLine=true` JSON mode has exactly those whole-document
-    * semantics. Inference here is full-scan (a cost knob, not a
-    * correctness knob — SURVEY.md §4).
+    * semantics. The schema comes from [[envelopeSchema]], so building
+    * the frame runs no Spark job.
     */
   def readEnvelope(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("multiLine", "true").json(path)
+    spark.read.schema(envelopeSchema(spark, path)).option("multiLine", "true").json(path)
+
+  /** The schema `spark.read.option("multiLine", "true").json(path)`
+    * infers for the one JSON document at `path`, inferred on the driver
+    * with Spark's own inference code instead of in a Spark job, as the
+    * reference infers in-process (reference: src/processor.rs:23-29).
+    * Inference is full-scan (a cost knob, not a correctness knob —
+    * SURVEY.md §4) and streams token types, so memory stays constant
+    * whatever the document's size. It runs under the session's conf,
+    * so a [[Pipeline.run]] pool thread sees the caller's settings.
+    */
+  def envelopeSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.conf
+    SQLConf.withExistingConf(conf) {
+      val options = new JSONOptionsInRead(
+        Map("multiLine" -> "true"), conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+      val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options.parameters)
+      JsonInferShim.inferMultiLine(
+        options, () => CodecStreams.createInputStreamWithCloseResource(hadoopConf, new Path(path)))
+    }
+  }
 
   /** Line-delimited ingest with a row-level bad-record channel: the
     * reference's fail-soft error handling stops at file granularity

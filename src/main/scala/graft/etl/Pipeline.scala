@@ -28,8 +28,8 @@ object Pipeline {
   )
 
   /** Run every resolvable, non-templated route: fetch its envelope to
-    * a staging file, then [[processStaged]] it (two Spark jobs per
-    * successful route, each distributed across executors).
+    * a staging file, then [[processStaged]] it (one Spark job per
+    * successful route, the Parquet write, distributed across executors).
     *
     * `parallelism = 1` (the default) is the reference's sequential
     * driver loop. `parallelism > 1` overlaps routes on a bounded
@@ -111,10 +111,11 @@ object Pipeline {
     * (reference: src/processor.rs:17-97). Kept public so local files
     * can be processed without the HTTP leg (used by tests).
     *
-    * A successful route runs two Spark jobs: the envelope's schema
-    * inference and the Parquet write. The empty-relation probe runs
-    * only for an empty inferred schema, and the returned row count is
-    * read from the committed part files' footers on the driver. A
+    * A successful route runs one Spark job: the Parquet write. The
+    * envelope's schema is inferred on the driver
+    * ([[Normalize.envelopeSchema]]), the empty-relation probe runs only
+    * for an empty inferred schema, and the returned row count is read
+    * from the committed part files' footers on the driver. A
     * failed write leaves nothing at the target; the staging file is
     * deleted only after a successful write, so a failed route can be
     * replayed from it.

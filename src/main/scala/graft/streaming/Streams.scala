@@ -243,8 +243,9 @@ object Streams {
     * parquet sink exactly-once via the checkpoint.
     *
     * File streams require an explicit schema (no inference at stream
-    * start); callers pass the envelope schema, e.g. from a one-file
-    * batch read of the first staged file.
+    * start); callers pass the envelope schema, e.g.
+    * [[graft.etl.Normalize.envelopeSchema]] of the first staged file,
+    * which infers it on the driver without a Spark job.
     */
   def incrementalIngest(
       spark: SparkSession,

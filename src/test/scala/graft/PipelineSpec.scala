@@ -79,24 +79,7 @@ class PipelineSpec extends SparkSpec {
       s"parallel mode must overlap route dwells: ${parIv.asScala.toMap}")
   }
 
-  /** One envelope per shape of FIXTURES.md §1, keyed by route name,
-    * with the rows it must normalize to. `compras` unwraps `resultado`,
-    * `camara` unwraps `dados`, `bare` has no root_path.
-    */
-  private val shapes: Map[String, (String, Long)] = Map(
-    "list" -> (("""{"resultado":[
-      |  {"codigoGrupo":10,"nomeGrupo":"MATERIAL X","statusGrupo":true},
-      |  {"codigoGrupo":11,"nomeGrupo":"MATERIAL Y","statusGrupo":false}],
-      |"totalRegistros":2,"totalPaginas":1,"paginasRestantes":0,"links":["self"],
-      |"dataHoraConsulta":"2026-01-30T12:00:00","timeZoneAtual":"-03:00",
-      |"dataHoraAtualizacao":"2026-01-29"}""".stripMargin, 2L)),
-    "struct" -> (("""{"resultado":{"id":1,"nome":"unico"},"totalRegistros":1}""", 1L)),
-    "nested" -> (("""{"dados":[{"id":1,"orgao":{"sigla":"A","uf":"SP"}},
-      |{"id":2,"orgao":{"sigla":"B","uf":"RJ"}},{"id":3}],"links":[]}""".stripMargin, 3L)),
-    "sparse" -> (("""{"resultado":[{"a":1},{"b":"x"},{"a":3,"c":true},{}]}""", 4L)),
-    "bytes_int" -> (("""{"resultado":[{"nome":[77,97,195,167,195,163]},{"nome":[79,108,195,161]}]}""", 2L)),
-    "bytes_double" -> (("""{"resultado":[{"nome":[77.0,97.0]},{"nome":[79.0,108.0,195.0,161.0]}],"totalPaginas":1}""", 2L)),
-    "noroot" -> (("""[{"id":1,"v":"a"},{"id":2,"v":"b"},{"id":3,"v":"c"}]""", 3L)))
+  private val shapes = EnvelopeShapes.shapes
 
   private val shapesCfg =
     """{"apis":{"a":{
@@ -139,7 +122,7 @@ class PipelineSpec extends SparkSpec {
     assert(graft.etl.Normalize.committedRows(spark, target) == spark.read.parquet(target).count())
   }
 
-  /** Call sites (`"json at Normalize.scala:41"`) of the Spark jobs
+  /** Call sites (`"parquet at Normalize.scala:188"`) of the Spark jobs
     * `body` runs on this thread. A marker job run last in the same job
     * group tells when the listener has seen every earlier job.
     */
@@ -171,7 +154,7 @@ class PipelineSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("a successful route runs two Spark jobs and an empty one two, none from Pipeline.scala") {
+  test("a successful route runs one Spark job and an empty one one, none a json read") {
     def route(body: String): (Either[graft.etl.GraftError, Long], Seq[String]) = {
       val dir = Files.createTempDirectory("graft-pipe-jobs")
       val staging = dir.resolve("r_temp.json")
@@ -184,14 +167,14 @@ class PipelineSpec extends SparkSpec {
     }
     val (ok, okSites) = route(shapes("list")._1)
     assert(ok == Right(2L))
-    assert(okSites.size == 2, s"jobs: $okSites")
-    assert(okSites.head.startsWith("json at Normalize.scala"), s"jobs: $okSites")
-    assert(okSites(1).startsWith("parquet at Normalize.scala"), s"jobs: $okSites")
+    assert(okSites.size == 1, s"jobs: $okSites")
+    assert(okSites.head.startsWith("parquet at Normalize.scala"), s"jobs: $okSites")
     val (empty, emptySites) = route("[]")
     assert(empty.left.exists(_.isInstanceOf[graft.etl.ProcessorError.Schema]), s"got $empty")
-    assert(emptySites.size == 2, s"jobs: $emptySites")
-    assert(emptySites(1).startsWith("head at Normalize.scala"), s"jobs: $emptySites")
-    assert(!(okSites ++ emptySites).exists(_.contains("Pipeline.scala")), s"jobs: $okSites $emptySites")
+    assert(emptySites.size == 1, s"jobs: $emptySites")
+    assert(emptySites.head.startsWith("head at Normalize.scala"), s"jobs: $emptySites")
+    val all = okSites ++ emptySites
+    assert(!all.exists(s => s.startsWith("json at") || s.contains("Pipeline.scala")), s"jobs: $all")
   }
 
   test("parallel orchestration stays fail-soft when the fetcher throws") {

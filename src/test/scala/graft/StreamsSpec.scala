@@ -45,9 +45,7 @@ class StreamsSpec extends StreamingSpec {
     stage("a.json", """{"id":1,"v":"x"},{"id":2,"v":"y"}""")
     stage("b.json", """{"id":3,"v":"z"}""")
 
-    val schema = graft.etl.Normalize
-      .readEnvelope(spark, staging.resolve("a.json").toString)
-      .schema
+    val schema = graft.etl.Normalize.envelopeSchema(spark, staging.resolve("a.json").toString)
 
     def runOnce(): Unit = {
       val q = Streams.incrementalIngest(
