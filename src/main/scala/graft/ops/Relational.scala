@@ -8712,8 +8712,9 @@ object Relational {
     * Scale: the overwrite's cost is the corrected months' data plus
     * O(affected files) commit metadata — independent of table size,
     * which is the entire point of partition-granular restatement at
-    * 100 TB. Session config is set-and-restored around the single
-    * write (the q148 provider-override discipline).
+    * 100 TB. The mode is a write option on the one restating write,
+    * which takes precedence over the session's
+    * `partitionOverwriteMode`, so the caller's conf is never touched.
     */
   def q219DynamicOverwrite(s: SparkSession, dir: String): DataFrame = {
     val tmp = Tables.scratchDir("graft-q219-dyn")
@@ -8732,20 +8733,13 @@ object Relational {
     val restated = base
       .filter(col("ym").isin("2000-03", "2000-04") && pmod(col("k"), lit(3)) =!= 0)
       .withColumn("cents", col("cents") + 50L)
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = s.conf.getOption(modeKey)
-    try {
-      s.conf.set(modeKey, "dynamic")
-      restated
-        .repartition(col("ym"))
-        .write
-        .partitionBy("ym")
-        .mode("overwrite")
-        .parquet(tmp.getAbsolutePath)
-    } finally prev match {
-      case Some(v) => s.conf.set(modeKey, v)
-      case None    => s.conf.unset(modeKey)
-    }
+    restated
+      .repartition(col("ym"))
+      .write
+      .partitionBy("ym")
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(tmp.getAbsolutePath)
     s.read
       .parquet(tmp.getAbsolutePath)
       .filter(col("ym") >= "2000-01" && col("ym") <= "2000-06")
@@ -9029,15 +9023,16 @@ object Relational {
   /** q228 — bucketed-table co-located join UNDER THE ORACLE: both join
     * sides land as 8-bucket sorted tables on the join key, and the
     * join then plans as a SortMergeJoin with NO Exchange on either
-    * side (PlanSpec pins it) — the storage-layout contract ScaleSpec
+    * side (OpsSpec pins it) — the storage-layout contract ScaleSpec
     * has proven since round 7, promoted to a gated query so the
     * WRITE → catalog → exchange-free-read path itself is
     * hash-verified end to end. This is THE 100 TB join posture for a
     * fact table joined repeatedly on one key: pay the shuffle once at
     * layout time, never per query; bucket count scales with data
-    * volume while the plan stays identical. Broadcast is disabled
-    * (scoped, restored in finally) because at fixture scale AQE would
-    * otherwise broadcast the dim and hide the property under test.
+    * volume while the plan stays identical. A `merge` join hint keeps
+    * the sort-merge join, because at fixture scale AQE would otherwise
+    * broadcast the dim and hide the property under test; a hint,
+    * unlike the session's broadcast threshold, is this plan's own.
     * The rollup is collected (schema-bounded 5×5 cells) and returned
     * as a local frame so the temp tables can be dropped eagerly —
     * the q217 pattern; the oracle recomputes the rollup relationally
@@ -9071,12 +9066,10 @@ object Relational {
       .sortBy("o_custkey")
       .option("path", new java.io.File(tmp, "ord").getAbsolutePath)
       .saveAsTable(ordT)
-    val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val joined = s
         .table(custT)
-        .join(s.table(ordT), col("c_custkey") === col("o_custkey"))
+        .join(s.table(ordT).hint("merge"), col("c_custkey") === col("o_custkey"))
         .groupBy(col("c_mktsegment").as("segment"), col("o_orderpriority").as("prio"))
         .agg(
           count(lit(1)).as("n_orders"),
@@ -9088,7 +9081,6 @@ object Relational {
         new java.util.ArrayList(java.util.Arrays.asList(rows: _*)),
         joined.schema)
     } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       s.sql(s"DROP TABLE IF EXISTS $custT")
       s.sql(s"DROP TABLE IF EXISTS $ordT")
       // recursive delete NOW (ADVICE closure): deleteOnExit is a no-op

@@ -13,18 +13,18 @@ object Tables {
 
   /** Scratch directory for operators that materialize a fixture
     * artifact (an Avro envelope, a partitioned layout, a CSV
-    * round-trip) and RETURN a DataFrame that lazily re-reads it —
-    * eager deletion would break the returned plan, and
-    * `File.deleteOnExit` is a no-op on non-empty directories, so
-    * repeated verify/bench passes were accumulating hundreds of temp
-    * trees under /tmp (the q228 ADVICE class at nine more sites).
-    * Same contract as the streaming gates' temp root: RECURSIVE
-    * delete on JVM exit — /tmp is flat across passes because every
-    * Verify/Bench invocation is its own JVM. ONE shutdown hook for
-    * the whole JVM, appending roots to a shared list: the nine call
-    * sites re-run across a cold pass + warm passes + floors in one
-    * bench JVM, and a hook THREAD per invocation was accumulating
-    * dozens of registered threads per run (ADVICE round 11).
+    * round-trip, a streaming gate's feed, checkpoint and sink) and
+    * RETURN a DataFrame that lazily re-reads it — eager deletion
+    * would break the returned plan, and `File.deleteOnExit` is a
+    * no-op on non-empty directories, so repeated verify/bench passes
+    * were accumulating hundreds of temp trees under /tmp. So the
+    * delete is RECURSIVE and runs at JVM exit — /tmp is flat across
+    * passes because every Verify/Bench invocation is its own JVM. ONE
+    * shutdown hook for the whole JVM, appending roots to a shared
+    * list: the call sites re-run across a cold pass + warm passes +
+    * floors in one bench JVM, and a hook THREAD per invocation was
+    * accumulating dozens of registered threads per run (ADVICE round
+    * 11).
     */
   private val scratchRoots =
     java.util.Collections.synchronizedList(new java.util.ArrayList[java.io.File]())

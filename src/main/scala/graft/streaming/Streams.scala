@@ -42,36 +42,6 @@ object Streams {
     */
   private def timerMsAfter(us: Long): Long = Math.floorDiv(us, 1000L) + 1L
 
-  /** Temp root for a run-to-completion gate, RECURSIVELY deleted on
-    * JVM exit (ADVICE closure: `File.deleteOnExit` only removes empty
-    * dirs, so repeated verify/bench passes were accumulating feed
-    * parquet + RocksDB checkpoint trees under /tmp unbounded). Eager
-    * deletion is not an option — the gates RETURN DataFrames that
-    * lazily re-read their `out` directory.
-    */
-  private val gateRoots =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[java.io.File]())
-  private lazy val gateHook: Unit = {
-    // ONE hook thread for every gate root (the Tables.scratchDir
-    // ADVICE class): a bench JVM re-runs 13 gates across passes, and a
-    // hook thread per invocation accumulated dozens of registered
-    // threads per run.
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles()
-        if (cs != null) cs.foreach(rm)
-        f.delete(); ()
-      }
-      gateRoots.synchronized { gateRoots.forEach(rm(_)) }
-    }))
-  }
-  private def gateTempRoot(prefix: String): java.io.File = {
-    val root = java.nio.file.Files.createTempDirectory(prefix).toFile
-    gateHook
-    gateRoots.add(root)
-    root
-  }
-
   /** Append each frame to `feed` as ONE parquet file per element, in
     * order, each append's files stamped with a strictly increasing
     * mtime. Callers pass frames that share one `localCheckpoint()`ed
@@ -111,6 +81,80 @@ object Streams {
             stamped += f.getName
           }
     }
+  }
+
+  /** A Parquet file stream over `dir` that delivers ONE file per
+    * micro-batch, so a gate's feed files arrive as separate batches
+    * and its state genuinely crosses checkpoint commits.
+    */
+  private def fileStream(s: SparkSession, dir: java.io.File, schema: StructType): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir.getAbsolutePath)
+
+  /** `parts` written to `dir` by [[appendFeedFiles]] and opened as a
+    * [[fileStream]] with the schema they were written with (every
+    * gate's parts are filters of one frame).
+    */
+  private def gateFeed(
+      s: SparkSession,
+      dir: java.io.File,
+      parts: Seq[DataFrame],
+      sortCols: Seq[org.apache.spark.sql.Column]): DataFrame = {
+    appendFeedFiles(dir, parts, sortCols)
+    fileStream(s, dir, parts.head.schema)
+  }
+
+  /** Runs a gate to completion through an executor-side Parquet sink:
+    * `parts` become the feed ([[gateFeed]]) under a fresh
+    * [[graft.ops.Tables.scratchDir]] root, `gate` transforms the feed
+    * stream, and `Trigger.AvailableNow` drains it with a checkpoint
+    * under the root while `foreachBatch` appends each micro-batch to
+    * `out` — never a driver sink, since an update-mode gate emits a row
+    * per live key per batch. Returns a lazy read of `out` for the
+    * gate's batch tail, which is why the root is deleted at JVM exit
+    * rather than here.
+    */
+  private[graft] def runGate[T](
+      s: SparkSession,
+      prefix: String,
+      parts: Seq[DataFrame],
+      sortCols: Seq[org.apache.spark.sql.Column] = Nil,
+      outputMode: String = "append")(gate: DataFrame => Dataset[T]): DataFrame = {
+    val root = graft.ops.Tables.scratchDir(prefix)
+    val out = new java.io.File(root, "out").getAbsolutePath
+    gate(gateFeed(s, new java.io.File(root, "feed"), parts, sortCols)).writeStream
+      .outputMode(outputMode)
+      .option("checkpointLocation", new java.io.File(root, "ckpt").getAbsolutePath)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: Dataset[T], _: Long) => batch.write.mode("append").parquet(out) }
+      .start()
+      .awaitTermination()
+    s.read.parquet(out)
+  }
+
+  /** Runs a complete-mode streaming aggregate to completion into a
+    * memory sink, then collects `tail` of its final table and returns
+    * it as a local frame. The sink's temp view is dropped whether or
+    * not the drain and the tail succeed, so repeated runs (bench
+    * passes, failed ones included) never accumulate tables on the
+    * driver. Bounded only for an aggregate whose group domain is small
+    * (calendar windows, segments): the sink holds the whole table.
+    */
+  private[graft] def drainToMemory(s: SparkSession, name: String, agg: DataFrame)(
+      tail: DataFrame => DataFrame): DataFrame = {
+    val view = name + "_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    try {
+      agg.writeStream
+        .format("memory")
+        .queryName(view)
+        .outputMode("complete")
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+      val rows = tail(s.table(view))
+      s.createDataFrame(
+        new java.util.ArrayList(java.util.Arrays.asList(rows.collect(): _*)),
+        rows.schema)
+    } finally s.catalog.dropTempView(view)
   }
 
   /** 3-way CHRONOLOGICAL feed split WITHOUT a global sort, replacing
@@ -1735,30 +1779,9 @@ object Streams {
       batch(3L, "I", o.filter(col("k") % 4 === 0)),
       batch(4L, "U", o.filter(col("k") % 40 === 22).withColumn("cents", col("cents") + 999L)))
 
-    val root = gateTempRoot("graft-q148")
-    val feed = new java.io.File(root, "feed")
-    val out = new java.io.File(root, "out")
-    val ckpt = new java.io.File(root, "ckpt")
-    // one file per log batch => one micro-batch per log batch below
-    appendFeedFiles(feed, batches)
-
-    val changes = s.readStream
-      .schema("k BIGINT, seq BIGINT, op STRING, cents BIGINT")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed.getAbsolutePath)
-      .as[CdcChange]
-    val q = streamingCdcGate(changes).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (images: Dataset[CdcImage], _: Long) =>
-        images.write.mode("append").parquet(out.getAbsolutePath)
-      }
-      .start()
-    q.awaitTermination()
-
-    val latest = s.read
-      .parquet(out.getAbsolutePath)
+    // one file per log batch => one micro-batch per log batch
+    val latest = runGate(s, "graft-q148", batches, outputMode = "update")(changes =>
+      streamingCdcGate(changes.as[CdcChange]))
       .groupBy(col("k"))
       .agg(max_by(struct(col("op"), col("cents")), col("seq")).as("last"))
       .select(col("k"), col("last.op").as("op"), col("last.cents").as("cents"))
@@ -1788,52 +1811,33 @@ object Streams {
   private def q155StreamWindowAgg(s: SparkSession, dir: String): DataFrame = {
     val file = s"$dir/events.parquet"
     val schema = s.read.option("mergeSchema", "false").parquet(file).schema
-    val feed = gateTempRoot("graft-q155")
+    val feed = graft.ops.Tables.scratchDir("graft-q155")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(file),
       new java.io.File(feed, "events.parquet").toPath)
-    val raw = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed.getAbsolutePath)
+    val raw = fileStream(s, feed, schema)
     val ev = schema("ts").dataType.typeName match {
       case "long" => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case "timestamp_ntz" =>
         raw.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => raw
     }
-    val qname = "q155_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = ev
+    val windows = ev
       .select(
         col("ts"),
         col("event_type"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
-      .writeStream
-      .format("memory")
-      .queryName(qname)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // the rollup is type-count-sized: materialize it, then DROP the
-    // memory sink's temp view so repeated invocations (bench passes)
-    // don't accumulate window tables on the driver
-    val rows = s
-      .table(qname)
-      .groupBy(col("event_type"))
-      .agg(
-        count(lit(1)).as("n_windows"),
-        sum(col("n")).as("n_events"),
-        sum(col("cents")).as("cents_total"),
-        max(col("n")).as("max_window_n"))
-      .orderBy("event_type")
-    val out = s.createDataFrame(
-      new java.util.ArrayList(java.util.Arrays.asList(rows.collect(): _*)),
-      rows.schema)
-    s.catalog.dropTempView(qname)
-    out
+    // the rollup is type-count-sized
+    drainToMemory(s, "q155", windows)(
+      _.groupBy(col("event_type"))
+        .agg(
+          count(lit(1)).as("n_windows"),
+          sum(col("n")).as("n_events"),
+          sum(col("cents")).as("cents_total"),
+          max(col("n")).as("max_window_n"))
+        .orderBy("event_type"))
   }
 
   /** The streaming module's oracle-gated surface (everything else in
@@ -1867,40 +1871,22 @@ object Streams {
       .localCheckpoint() // both feed halves and the batch-tail cents replay this
     // deterministic midpoint split into two time-ordered feed files
     val cut = java.sql.Timestamp.valueOf("2024-01-16 00:00:00")
-    val root = gateTempRoot("graft-q164")
-    val feed = new java.io.File(root, "feed")
-    val out = new java.io.File(root, "out")
-    val ckpt = new java.io.File(root, "ckpt")
-    appendFeedFiles(
-      feed,
-      Seq(ev.filter(col("ts") < lit(cut)), ev.filter(col("ts") >= lit(cut))))
-
-    val raw = s.readStream
-      .schema("user_id BIGINT, event_id BIGINT, event_type STRING, ts TIMESTAMP, value DOUBLE")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed.getAbsolutePath)
-    val pairs = clickAttribution(
-      clicks = raw.filter(col("event_type") === "click"),
-      purchases = raw.filter(col("event_type") === "purchase"),
-      watermarkDelay = "45 days",
-      attributionWindow = "30 minutes",
-      joinType = "inner")
-    val q = pairs.writeStream
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        batch.write.mode("append").parquet(out.getAbsolutePath)
-      }
-      .start()
-    q.awaitTermination()
-
+    val pairs = runGate(
+      s,
+      "graft-q164",
+      Seq(ev.filter(col("ts") < lit(cut)), ev.filter(col("ts") >= lit(cut))))(raw =>
+      clickAttribution(
+        clicks = raw.filter(col("event_type") === "click"),
+        purchases = raw.filter(col("event_type") === "purchase"),
+        watermarkDelay = "45 days",
+        attributionWindow = "30 minutes",
+        joinType = "inner"))
     // batch tail: purchase value re-attaches by id (clickAttribution's
     // contract emits ids + timestamps only), then the bucket rollup
     val cents = ev
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-    s.read
-      .parquet(out.getAbsolutePath)
+    pairs
       .join(cents, "purchase_id")
       .groupBy((col("user_id") % 10L).as("bucket"))
       .agg(
@@ -1943,30 +1929,12 @@ object Streams {
             .otherwise(floor(col("value") * 100 + 0.5).cast("long")).as("delta")),
       col("ts_us"))
       .localCheckpoint() // the three per-file writes replay this, not the fact scan
-    val root = gateTempRoot("graft-q193")
-    val feed = new java.io.File(root, "feed")
-    val out = new java.io.File(root, "out")
-    val ckpt = new java.io.File(root, "ckpt")
-    appendFeedFiles(
-      feed,
+    runGate(
+      s,
+      "graft-q193",
       (1 to 3).map(i => evs.filter(col("fidx") === i).drop("fidx")),
-      sortCols = Seq(col("ts_us"), col("event_id")))
-    val in = s.readStream
-      .schema("user_id BIGINT, ts_us BIGINT, event_id BIGINT, delta BIGINT")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed.getAbsolutePath)
-      .as[WalletEvent]
-    val q = streamingWalletGate(in).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (snaps: Dataset[WalletState], _: Long) =>
-        snaps.write.mode("append").parquet(out.getAbsolutePath)
-      }
-      .start()
-    q.awaitTermination()
-    s.read
-      .parquet(out.getAbsolutePath)
+      sortCols = Seq(col("ts_us"), col("event_id")),
+      outputMode = "update")(in => streamingWalletGate(in.as[WalletEvent]))
       .groupBy(col("user_id"))
       .agg(
         max_by(
@@ -2019,28 +1987,14 @@ object Streams {
       .documents(s, dir)
       .select(col("doc_id"), col("lang"), col("text"))
       .localCheckpoint() // feed shards ×3 and the lang rollup replay this
-    val root = gateTempRoot("graft-q204")
-    val feed = new java.io.File(root, "feed")
-    val out = new java.io.File(root, "out")
-    val ckpt = new java.io.File(root, "ckpt")
-    appendFeedFiles(feed, (0 to 2).map(i => docs.filter(col("doc_id") % 3 === i)))
-    val in = s.readStream
-      .schema("doc_id BIGINT, lang STRING, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed.getAbsolutePath)
-    val q = streamingNearDupGate(in.select(col("doc_id"), col("text"))).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (hits: Dataset[BandHit], _: Long) =>
-        hits.write.mode("append").parquet(out.getAbsolutePath)
-      }
-      .start()
-    q.awaitTermination()
+    val hits = runGate(
+      s,
+      "graft-q204",
+      (0 to 2).map(i => docs.filter(col("doc_id") % 3 === i)),
+      outputMode = "update")(in => streamingNearDupGate(in.select(col("doc_id"), col("text"))))
     // d2's consumer step: exact verification of the emitted candidate
     // edges on the sorted shingle-hash sets, then the flag rollup
-    val edges = s.read
-      .parquet(out.getAbsolutePath)
+    val edges = hits
       .select(col("doc_id"), col("rep_doc_id"))
       .distinct()
     val sets = graft.ops.Dedup
@@ -2109,34 +2063,16 @@ object Streams {
       .select(col("user_id"), col("ts"), col("event_type"))
       .localCheckpoint() // both feed halves replay this, not the fact scan
     val cut = java.sql.Timestamp.valueOf("2024-01-16 00:00:00")
-    val root = gateTempRoot("graft-q207")
-    val feed = new java.io.File(root, "feed")
-    val out = new java.io.File(root, "out")
-    val ckpt = new java.io.File(root, "ckpt")
-    appendFeedFiles(
-      feed,
-      Seq(ev.filter(col("ts") < lit(cut)), ev.filter(col("ts") >= lit(cut))))
-
-    val in = s.readStream
-      .schema("user_id BIGINT, ts TIMESTAMP, event_type STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed.getAbsolutePath)
-      .as[Event]
-    val q = sessionize(in, gapMinutes = 30, watermarkDelay = "10 minutes").writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (sessions: Dataset[Session], _: Long) =>
-        sessions.write.mode("append").parquet(out.getAbsolutePath)
-      }
-      .start()
-    q.awaitTermination()
+    val sessions = runGate(
+      s,
+      "graft-q207",
+      Seq(ev.filter(col("ts") < lit(cut)), ev.filter(col("ts") >= lit(cut))))(in =>
+      sessionize(in.as[Event], gapMinutes = 30, watermarkDelay = "10 minutes"))
     // batch tail: non-final sessions only (see scaladoc), then the
     // bucket rollup; distinct() guards a retried micro-batch's
     // re-appended parquet exactly as q204's edge dedup does
     val userMax = ev.groupBy(col("user_id")).agg(max(col("ts")).as("maxts"))
-    s.read
-      .parquet(out.getAbsolutePath)
+    sessions
       .distinct()
       .join(userMax, "user_id")
       .filter(col("session_end") < col("maxts"))
@@ -2180,31 +2116,18 @@ object Streams {
       .events(s, dir)
       .select(col("event_type"), col("user_id"))
       .localCheckpoint() // feed shards ×3 (and the exact tail) replay this
-    val root = gateTempRoot("graft-q210")
-    val feed = new java.io.File(root, "feed")
-    val out = new java.io.File(root, "out")
-    val ckpt = new java.io.File(root, "ckpt")
-    appendFeedFiles(feed, (0 to 2).map(i => ev.filter(col("user_id") % 3 === i)))
-    val in = s.readStream
-      .schema("event_type STRING, user_id BIGINT")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed.getAbsolutePath)
-      .select(col("event_type").as("_1"), col("user_id").as("_2"))
-      .as[(String, Long)]
-    val q = streamingDistinctCountGate(in, 128).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (ests: Dataset[DistinctEst], _: Long) =>
-        ests.write.mode("append").parquet(out.getAbsolutePath)
-      }
-      .start()
-    q.awaitTermination()
+    val ests = runGate(
+      s,
+      "graft-q210",
+      (0 to 2).map(i => ev.filter(col("user_id") % 3 === i)),
+      outputMode = "update")(in =>
+      streamingDistinctCountGate(
+        in.select(col("event_type").as("_1"), col("user_id").as("_2")).as[(String, Long)],
+        128))
     val exact = ev
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_users_exact"))
-    s.read
-      .parquet(out.getAbsolutePath)
+    ests
       .groupBy(col("group").as("event_type"))
       .agg(
         max(col("n_est")).as("n_users_est"),
@@ -2255,43 +2178,20 @@ object Streams {
         col("event_type"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
       .localCheckpoint() // the full copy + two replay shards all replay this
-    val root = gateTempRoot("graft-q211")
-    val feed = new java.io.File(root, "feed")
-    val out = new java.io.File(root, "out")
-    val ckpt = new java.io.File(root, "ckpt")
-    appendFeedFiles(
-      feed,
-      Seq(
-        ev,
-        ev.filter(pmod(col("event_id"), lit(7)) === 0),
-        ev.filter(pmod(col("event_id"), lit(11)) === 3)))
-
-    val in = s.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, event_type STRING, cents BIGINT")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed.getAbsolutePath)
-    val q = in
-      .withWatermark("ts", "365 days")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out.getAbsolutePath)
-      }
-      .start()
-    q.awaitTermination()
+    val parts = Seq(
+      ev,
+      ev.filter(pmod(col("event_id"), lit(7)) === 0),
+      ev.filter(pmod(col("event_id"), lit(11)) === 3))
+    val emitted = runGate(s, "graft-q211", parts)(
+      _.withWatermark("ts", "365 days").dropDuplicatesWithinWatermark("event_id"))
     // batch tail: distinct() guards a retried micro-batch's re-appended
     // parquet (q204's convention); fed counts fold in as a bounded
     // per-type aggregate of the same three feed branches
-    val fed = ev
-      .unionAll(ev.filter(pmod(col("event_id"), lit(7)) === 0))
-      .unionAll(ev.filter(pmod(col("event_id"), lit(11)) === 3))
+    val fed = parts
+      .reduce(_.unionAll(_))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_fed"))
-    s.read
-      .parquet(out.getAbsolutePath)
+    emitted
       .distinct()
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_emitted"), sum(col("cents")).as("cents_total"))
@@ -2337,14 +2237,11 @@ object Streams {
     val dim = graft.ops.Tables
       .customer(s, dir)
       .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
-    val feed = gateTempRoot("graft-q217")
-    appendFeedFiles(feed, (0 to 2).map(i => ev.filter(pmod(col("user_id"), lit(3)) === i)))
-    val qname = "q217_sink_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val in = s.readStream
-      .schema("event_id BIGINT, user_id BIGINT, event_type STRING, cents BIGINT")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed.getAbsolutePath)
-    val q = in
+    val segments = gateFeed(
+      s,
+      graft.ops.Tables.scratchDir("graft-q217"),
+      (0 to 2).map(i => ev.filter(pmod(col("user_id"), lit(3)) === i)),
+      Nil)
       .join(broadcast(dim), "user_id") // stream-static enrich
       .groupBy(col("segment"))
       .agg(
@@ -2352,19 +2249,7 @@ object Streams {
         sum(col("cents")).as("cents_total"),
         sum(when(col("event_type") === "purchase", col("cents"))
           .otherwise(0L)).as("purchase_cents"))
-      .writeStream
-      .format("memory")
-      .queryName(qname)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val rows = s.table(qname).orderBy("segment")
-    val out = s.createDataFrame(
-      new java.util.ArrayList(java.util.Arrays.asList(rows.collect(): _*)),
-      rows.schema)
-    s.catalog.dropTempView(qname)
-    out
+    drainToMemory(s, "q217", segments)(_.orderBy("segment"))
   }
 
   final case class WarmEvent(user_id: Long, event_id: Long, cents: Long)
@@ -2451,38 +2336,20 @@ object Streams {
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
       .as[WarmInit]
     val live = purchases.filter(col("ts") >= cut)
-    val root = gateTempRoot("graft-q229")
-    val feed = new java.io.File(root, "feed")
-    val out = new java.io.File(root, "out")
-    val ckpt = new java.io.File(root, "ckpt")
     val withIdx = chronoFidx(live, unix_micros(col("ts")))
       .localCheckpoint() // the three per-file writes replay this, not the fact scan
-    appendFeedFiles(
-      feed,
-      (1 to 3).map(i => withIdx.filter(col("fidx") === i).drop("fidx", "ts")))
-    val in = s.readStream
-      .schema("user_id BIGINT, event_id BIGINT, cents BIGINT")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed.getAbsolutePath)
-      .as[WarmEvent]
-    val q = in
-      .groupByKey(_.user_id)
-      .transformWithState(
-        new WarmStartProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update(),
-        hist.groupByKey(_.user_id))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (snaps: Dataset[WarmSnap], _: Long) =>
-        snaps.write.mode("append").parquet(out.getAbsolutePath)
-      }
-      .start()
-    q.awaitTermination()
-    s.read
-      .parquet(out.getAbsolutePath)
+    runGate(
+      s,
+      "graft-q229",
+      (1 to 3).map(i => withIdx.filter(col("fidx") === i).drop("fidx", "ts")),
+      outputMode = "update")(
+      _.as[WarmEvent]
+        .groupByKey(_.user_id)
+        .transformWithState(
+          new WarmStartProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update(),
+          hist.groupByKey(_.user_id)))
       .groupBy(col("user_id"))
       .agg(
         max_by(
@@ -2670,35 +2537,17 @@ object Streams {
           col("ts")),
       unix_micros(col("ts")))
       .localCheckpoint() // the three per-file writes replay this, not the fact scan
-    val root = gateTempRoot("graft-q226")
-    val feed = new java.io.File(root, "feed")
-    val out = new java.io.File(root, "out")
-    val ckpt = new java.io.File(root, "ckpt")
-    appendFeedFiles(
-      feed,
-      (1 to 3).map(i => evs.filter(col("fidx") === i).drop("fidx", "ts")))
-    val in = s.readStream
-      .schema("user_id BIGINT, event_id BIGINT, cents BIGINT")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed.getAbsolutePath)
-      .as[TopkEvent]
-    val q = in
-      .groupByKey(_.user_id)
-      .transformWithState(
-        new TopkProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (snaps: Dataset[TopkState], _: Long) =>
-        snaps.write.mode("append").parquet(out.getAbsolutePath)
-      }
-      .start()
-    q.awaitTermination()
-    s.read
-      .parquet(out.getAbsolutePath)
+    runGate(
+      s,
+      "graft-q226",
+      (1 to 3).map(i => evs.filter(col("fidx") === i).drop("fidx", "ts")),
+      outputMode = "update")(
+      _.as[TopkEvent]
+        .groupByKey(_.user_id)
+        .transformWithState(
+          new TopkProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update()))
       .groupBy(col("user_id"))
       .agg(
         max_by(
@@ -2756,43 +2605,26 @@ object Streams {
           col("event_id")),
       unix_micros(col("ts")))
       .localCheckpoint() // the three per-file writes replay this, not the fact scan
-    val root = gateTempRoot("graft-q222")
-    val feed = new java.io.File(root, "feed")
-    val out = new java.io.File(root, "out")
-    val ckpt = new java.io.File(root, "ckpt")
     // The SLA processor is order-sensitive ACROSS batches — a purchase
     // batch surfacing before its signup batch is silently dropped,
     // flipping a convert into a breach; appendFeedFiles' forced
     // strictly-increasing mtimes guarantee write-order replay.
-    appendFeedFiles(
-      feed,
+    val outcomes = runGate(
+      s,
+      "graft-q222",
       (1 to 3).map(i => evs.filter(col("fidx") === i).drop("fidx", "event_id")),
-      sortCols = Seq(col("ts")))
-    val in = s.readStream
-      .schema("user_id BIGINT, ts TIMESTAMP, kind STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed.getAbsolutePath)
-      .withWatermark("ts", "1 day")
-      .as[SlaEvent]
-    val q = in
-      .groupByKey(_.user_id)
-      .transformWithState(
-        new SlaProcessor,
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Update())
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (o: Dataset[SlaOutcome], _: Long) =>
-        o.write.mode("append").parquet(out.getAbsolutePath)
-      }
-      .start()
-    q.awaitTermination()
+      sortCols = Seq(col("ts")),
+      outputMode = "update")(
+      _.withWatermark("ts", "1 day")
+        .as[SlaEvent]
+        .groupByKey(_.user_id)
+        .transformWithState(
+          new SlaProcessor,
+          org.apache.spark.sql.streaming.TimeMode.EventTime(),
+          OutputMode.Update()))
     val cut = evs.agg(
       (max(unix_micros(col("ts"))) - lit(3L * 86400000000L)).as("c"))
-    s.read
-      .parquet(out.getAbsolutePath)
+    outcomes
       .crossJoin(broadcast(cut))
       .filter(col("kind") === "convert" || col("at_us") <= col("c"))
       .groupBy(col("kind"))
@@ -2840,40 +2672,22 @@ object Streams {
         .select(col("user_id"), col("event_id"), col("event_type"), col("ts")),
       unix_micros(col("ts")))
       .localCheckpoint() // the three per-file writes replay this, not the fact scan
-    val root = gateTempRoot("graft-q237")
-    val feed = new java.io.File(root, "feed")
-    val out = new java.io.File(root, "out")
-    val ckpt = new java.io.File(root, "ckpt")
-    appendFeedFiles(
-      feed,
-      (1 to 3).map(i => ev.filter(col("fidx") === i).drop("fidx")),
-      sortCols = Seq(col("ts")))
     // Shuffle partitions: scoped by [[withGateConf]] like every other
     // gate (the round-11 finding — a stream-stream OUTER join keeps
     // FOUR state stores per partition per micro-batch, so 32
     // partitions × 3 batches meant ~384 store open/commit cycles,
     // 36.9 s cold — is fully carried by the scope).
-    val raw = s.readStream
-      .schema("user_id BIGINT, event_id BIGINT, event_type STRING, ts TIMESTAMP")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed.getAbsolutePath)
-    val pairs = clickAttribution(
-      clicks = raw.filter(col("event_type") === "click"),
-      purchases = raw.filter(col("event_type") === "purchase"),
-      watermarkDelay = "2 days",
-      attributionWindow = "30 minutes",
-      joinType = "leftOuter")
-    pairs.writeStream
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        batch.write.mode("append").parquet(out.getAbsolutePath)
-      }
-      .start()
-      .awaitTermination()
-
-    s.read
-      .parquet(out.getAbsolutePath)
+    runGate(
+      s,
+      "graft-q237",
+      (1 to 3).map(i => ev.filter(col("fidx") === i).drop("fidx")),
+      sortCols = Seq(col("ts")))(raw =>
+      clickAttribution(
+        clicks = raw.filter(col("event_type") === "click"),
+        purchases = raw.filter(col("event_type") === "purchase"),
+        watermarkDelay = "2 days",
+        attributionWindow = "30 minutes",
+        joinType = "leftOuter"))
       .filter(col("click_ts") <= lit(java.sql.Timestamp.valueOf("2024-01-24 00:00:00")))
       .groupBy((col("user_id") % 10L).as("bucket"))
       .agg(

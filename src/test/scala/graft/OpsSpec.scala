@@ -3694,7 +3694,8 @@ class OpsSpec extends SparkSpec {
   }
 
   test("q219 dynamic overwrite: exactly the two target months restate, others survive") {
-    val out = Relational.q219DynamicOverwrite(spark, Sf).collect()
+    val rows = Relational.q219DynamicOverwrite(spark, Sf).collect().toSeq
+    val out = rows
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     val base = Tables.orders(spark, Sf)
       .select(col("o_orderkey"),
@@ -3713,6 +3714,16 @@ class OpsSpec extends SparkSpec {
       assert(out(ym) == expected, s"$ym: got ${out(ym)} expected $expected")
     }
     assert(out.keySet == base.keySet)
+    // the dynamic mode is the restating write's own option: a session
+    // explicitly at static neither changes the answer nor is changed
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, "static")
+    try {
+      assert(Relational.q219DynamicOverwrite(spark, Sf).collect().toSeq == rows,
+        "a static session overwrite mode reached the restating write")
+      assert(spark.conf.get(key) == "static", "q219 changed the session's overwrite mode")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("d35 tfidf cosine: imperative replay of weights, norms and the pair set") {
@@ -4263,6 +4274,39 @@ class OpsSpec extends SparkSpec {
     val got = Relational.q228BucketedJoin(spark, Sf).collect().map(_.toString)
     assert(got.sameElements(expected),
       "bucketed layout changed the answer — write or read path corrupt")
+  }
+
+  test("q228 bucketed join: plans a sort-merge join with no exchange below it, threshold untouched") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getAll.get(key)
+    // the session's default threshold would broadcast the fixture's
+    // customer side; only the query's own merge hint can keep the SMJ
+    val collects = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "collect") collects.put(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // listener events arrive asynchronously: poll before unregistering
+    val qe =
+      try {
+        Relational.q228BucketedJoin(spark, Sf)
+        collects.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      } finally spark.listenerManager.unregister(listener)
+    assert(qe != null, "q228's collect never reached the listener")
+    object Plans extends AdaptiveSparkPlanHelper
+    val plan = qe.executedPlan
+    val joins = Plans.collect(plan) { case j: SortMergeJoinExec => j }
+    assert(joins.size == 1, s"expected one sort-merge join:\n$plan")
+    assert(Plans.collect(joins.head) { case e: Exchange => e }.isEmpty,
+      s"the bucketed join still exchanges:\n$plan")
+    assert(spark.conf.getAll.get(key) == before, "q228 changed the broadcast threshold")
   }
 
   test("q229 warm start: equals the full-range rollup, and the seed provably contributed") {

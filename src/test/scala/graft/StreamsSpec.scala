@@ -1594,6 +1594,39 @@ class StreamBatchParitySpec extends StreamingSpec {
     assert(gateConf() == before)
   }
 
+  test("gate drains: a failing transform or tail leaves no active query, no sink view, the conf as it was") {
+    import spark.implicits._
+    def views(): Set[String] =
+      spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val conf = spark.conf.getAll
+    val viewsBefore = views()
+    val parts = Seq(Seq(1L, 2L).toDF("k").localCheckpoint(), Seq(3L).toDF("k").localCheckpoint())
+    // throws in the first micro-batch's tasks, i.e. inside the drain
+    val boom = udf((k: Long) => if (k > 0) throw new IllegalStateException("boom") else k)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Streams.runGate(spark, "graft-drainspec", parts)(_.select(boom(col("k")).as("k")))
+    }
+    assert(spark.streams.active.isEmpty, "the parquet drain left a query running")
+    val feed = Files.createTempDirectory("graft-drainspec").toFile
+    Streams.appendFeedFiles(feed, parts)
+    def counts() = spark.readStream.schema("k BIGINT").parquet(feed.getAbsolutePath)
+      .groupBy(col("k")).count()
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Streams.drainToMemory(spark, "drainspec", counts().select(boom(col("k")).as("k")))(identity)
+    }
+    assert(spark.streams.active.isEmpty, "the memory drain left a query running")
+    assert(views() == viewsBefore, "a failed memory drain left its sink view")
+    // a clean drain whose batch tail throws: the view used to leak here
+    intercept[IllegalStateException] {
+      Streams.drainToMemory(spark, "drainspec", counts())(_ => throw new IllegalStateException("tail"))
+    }
+    assert(views() == viewsBefore, "a failed tail left the sink view")
+    assert(Streams.drainToMemory(spark, "drainspec", counts())(_.orderBy("k"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 1L), (2L, 1L), (3L, 1L)))
+    assert(views() == viewsBefore, "a clean memory drain left its sink view")
+    assert(spark.conf.getAll == conf, "a drain changed the session conf")
+  }
+
   test("gate scope: two gates on one session from two threads, results as run serially") {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
