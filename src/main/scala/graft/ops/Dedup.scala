@@ -92,23 +92,10 @@ object Dedup {
       .select(col("doc_id").as(idName), explode(bandKeys(numBands, rowsPerBand)).as("bk"))
     val cand = bands(pa, "probe_id")
       .join(bands(ca, "corpus_id"), "bk")
-      .select(col("probe_id"), col("corpus_id"))
+      .select(col("probe_id").as("id_a"), col("corpus_id").as("id_b"))
       .distinct()
-    cand
-      .join(
-        pa.select(col("doc_id").as("probe_id"), col("hs").as("sa"), size(col("hs")).as("na")),
-        "probe_id")
-      .join(
-        ca.select(col("doc_id").as("corpus_id"), col("hs").as("sb"), size(col("hs")).as("nb")),
-        "corpus_id")
-      .withColumn(
-        "shared",
-        graft.functions.SortedArrayIntersectCount
-          .sortedIntersectCount(col("sa"), col("sb"))
-          .cast("double"))
-      .withColumn("jac", col("shared") / (col("na") + col("nb") - col("shared")))
-      .filter(col("jac") >= threshold)
-      .select(col("probe_id"), col("corpus_id"), col("jac"))
+    jaccardVerify(cand, pa, ca, threshold)
+      .select(col("id_a").as("probe_id"), col("id_b").as("corpus_id"), col("jac"))
   }
 
   /** d1 — exact dedup by content fingerprint: canonical hash-groupBy
@@ -144,11 +131,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("jac"), 4).as("jaccard"))
       .orderBy("id_a", "id_b")
 
-  /** MinHash+LSH candidate generation + exact verify over a shingled
-    * relation (output of [[shingled]]): returns (id_a, id_b, jac) for
-    * every pair with exact shingle-Jaccard ≥ `threshold`, id_a < id_b.
-    * Shapes and guarantees as documented on [[d2MinHashLsh]].
-    */
   /** LSH band keys off a minhash `sig` column: array of (band, h1, h2)
     * structs, r=2 rows per band. Shared by d2's batch banding and the
     * streaming near-dup gate (graft.streaming.Streams), so both paths
@@ -163,6 +145,11 @@ object Dedup {
       )
     }: _*)
 
+  /** MinHash+LSH candidate generation + exact verify over a shingled
+    * relation (output of [[shingled]]): returns (id_a, id_b, jac) for
+    * every pair with exact shingle-Jaccard ≥ `threshold`, id_a < id_b.
+    * Shapes and guarantees as documented on [[d2MinHashLsh]].
+    */
   private[ops] def nearDupPairs(sh: DataFrame, threshold: Double): DataFrame = {
     val numHashes = 64
     val rowsPerBand = 2
@@ -196,17 +183,35 @@ object Dedup {
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
 
-    // exact-verify on the sorted hash sets with the native merge count
-    val sets = shCk.select(col("doc_id"), col("hs"), size(col("hs")).as("n"))
-    candidates
-      .join(
-        sets.withColumnRenamed("doc_id", "id_a").withColumnRenamed("hs", "sa")
-          .withColumnRenamed("n", "na"),
-        "id_a")
-      .join(
-        sets.withColumnRenamed("doc_id", "id_b").withColumnRenamed("hs", "sb")
-          .withColumnRenamed("n", "nb"),
-        "id_b")
+    jaccardVerify(candidates, shCk, shCk, threshold)
+  }
+
+  /** Exact shingle-Jaccard verify of candidate pairs, the step every
+    * candidate generator (LSH bands, sorted neighborhoods, prefix
+    * postings, the streaming gate's bucket hits) ends in. `cand`
+    * carries (id_a, id_b); `setsA` and `setsB` carry (doc_id, hs), the
+    * sorted distinct hash sets of the id_a and id_b sides (the same
+    * frame for a self-join). Returns (id_a, id_b, jac) for every
+    * candidate with jac ≥ `threshold`, computed by the native
+    * allocation-free merge count
+    * ([[graft.functions.SortedArrayIntersectCount]]).
+    *
+    * The count is wrapped in a 1-element `explode(array(...))`: a
+    * Generate is a projection barrier, so `shared` is a materialized
+    * attribute and the merge runs ONCE per pair. Without it
+    * CollapseProject inlines the count into the threshold filter and
+    * the output projection, and it runs three times per pair.
+    */
+  private[graft] def jaccardVerify(
+      cand: DataFrame,
+      setsA: DataFrame,
+      setsB: DataFrame,
+      threshold: Double): DataFrame = {
+    def side(sets: DataFrame, id: String, hs: String, n: String) =
+      sets.select(col("doc_id").as(id), col("hs").as(hs), size(col("hs")).as(n))
+    cand
+      .join(side(setsA, "id_a", "sa", "na"), "id_a")
+      .join(side(setsB, "id_b", "sb", "nb"), "id_b")
       .select(
         col("id_a"),
         col("id_b"),
@@ -475,11 +480,7 @@ object Dedup {
     * is the LSH bucketing in [[Similarity.s2KnnLsh]].
     */
   def d5EmbedNearDup(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables
-      .spread(Tables.embeddings(s, dir))
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("norm", sqrt(Similarity.dot(col("v"), col("v"))))
-
+    val e = normedEmbeddings(s, dir)
     e.as("a")
       .join(broadcast(e.as("b")), col("a.vec_id") < col("b.vec_id"))
       .withColumn("cos", Similarity.dot(col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm")))
@@ -490,6 +491,29 @@ object Dedup {
         round(col("cos"), 4).as("cosine"))
       .orderBy("id_a", "id_b")
   }
+
+  /** The embeddings table as (vec_id: long, v: array<double>). */
+  private def longEmbeddings(s: SparkSession, dir: String): DataFrame =
+    Tables
+      .embeddings(s, dir)
+      .select(
+        col("vec_id").cast("long").as("vec_id"),
+        col("embedding").cast("array<double>").as("v"))
+
+  /** `orig` (vec_id, v) plus a deterministic near-dup copy of every
+    * vector, id offset 1e6: d10, d14 and d15's corpus. The plant is
+    * multiplicative ±5% alternating by dimension — cosine to the
+    * original ≈ 1 − ε²/2 regardless of the vector's norm, and IEEE
+    * multiplication reproduces bit-for-bit in any engine (Spark's
+    * transform index is 0-based, the oracle lambda's is 1-based;
+    * i%2===0 here ↔ i%2=1 there).
+    */
+  private def withNearDupPlant(orig: DataFrame): DataFrame =
+    orig.unionAll(
+      orig.select(
+        (col("vec_id") + lit(1000000L)).as("vec_id"),
+        transform(col("v"), (x, i) =>
+          x * when(i % 2 === 0, lit(1.05)).otherwise(lit(0.95))).as("v")))
 
   /** d10 — BUCKETED threshold-pair embedding near-dup: the scale path
     * for [[d5EmbedNearDup]]'s pair-list form. Candidates come from
@@ -531,20 +555,7 @@ object Dedup {
     */
   def d10EmbedNearDupLsh(s: SparkSession, dir: String): DataFrame = {
     val theta = 0.9
-    val orig = Tables
-      .embeddings(s, dir)
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding").cast("array<double>").as("v"))
-    // deterministic near-dup plant: multiplicative ±5% alternating by
-    // dimension — cosine to the original ≈ 1 − ε²/2 regardless of the
-    // vector's norm, and IEEE multiplication reproduces bit-for-bit in
-    // any engine (Spark's transform index is 0-based, the oracle
-    // lambda's is 1-based; i%2===0 here ↔ i%2=1 there)
-    val pert = orig.select(
-      (col("vec_id") + lit(1000000L)).as("vec_id"),
-      transform(col("v"), (x, i) =>
-        x * when(i % 2 === 0, lit(1.05)).otherwise(lit(0.95))).as("v"))
-    val aug = orig
-      .unionAll(pert)
+    val aug = withNearDupPlant(longEmbeddings(s, dir))
       .withColumn("norm", sqrt(Similarity.dot(col("v"), col("v"))))
 
     val planes = Similarity.lcgPlanes(0xC2B2AE3D27D4EB4FL, tables = 16, planes = 12, dim = 64)
@@ -571,38 +582,25 @@ object Dedup {
       .orderBy("id_a", "id_b")
   }
 
-  /** d6 — near-dup CLUSTER formation: the pair list (d2's LSH +
-    * exact-verify machinery) is only half of dedup — a pipeline must
-    * then pick one representative per connected component of the
-    * pair graph (A~B, B~C ⇒ {A,B,C} keep one). Components are
-    * computed with Hash-Min label propagation: every node starts
-    * labeled with itself; each round, a node takes the min label in
-    * its neighborhood; fixpoint in O(component diameter) rounds —
-    * near-dup clusters are clique-ish, so 2–3 rounds in practice.
-    *
-    * Scale posture: this is the standard Spark connected-components
-    * loop — one key shuffle per round over the PAIR GRAPH only (docs
-    * that matched at θ — orders of magnitude smaller than the
-    * corpus), with `localCheckpoint()` truncating lineage each round
-    * so the plan does not grow with iteration count. The driver loop
-    * carries no data, only the convergence decision (a count).
+  /** Hash-Min connected components over a mirrored edge list `edges`
+    * (id_a, id_b): every node of `nodes` (id) starts labeled with
+    * itself; each round, a node takes the min label in its closed
+    * neighborhood; fixpoint after O(component diameter) rounds.
+    * Returns (id → component-min label, rounds taken), where the last
+    * round is the one that moved no label (a 33-node path takes 33, a
+    * clique 2; OpsSpec pins both). Per round: one key shuffle over the
+    * edge list, `localCheckpoint()` truncating lineage so the plan does
+    * not grow with the round count, and a 1-row moved count as the
+    * only driver-side data. `edges` is read every round, so callers
+    * pass it checkpointed. d6 and d16 run it; [[twoStarLabels]] is the
+    * diameter-independent alternative.
     */
-  def d6DupClusters(s: SparkSession, dir: String): DataFrame = {
-    val pairs = nearDupPairs(docsWithShingles(s, dir, 3), 0.5)
-      .select(col("id_a"), col("id_b"))
-    // materialize once: every propagation round re-reads the edges,
-    // and the LSH pipeline above must not re-run per round
-    val edges = pairs
-      .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .localCheckpoint()
-
-    var labels = edges
-      .select(col("id_a").as("id"))
-      .distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint()
+  private[graft] def hashMinLabels(edges: DataFrame, nodes: DataFrame): (DataFrame, Int) = {
+    var labels = nodes.withColumn("label", col("id")).localCheckpoint()
+    var rounds = 0
     var changed = 1L
     while (changed > 0) {
+      rounds += 1
       val nbrMin = edges
         .join(labels, edges("id_b") === labels("id"))
         .groupBy(edges("id_a").as("nid"))
@@ -621,12 +619,47 @@ object Dedup {
       changed = next.filter(col("moved")).count()
       labels = next.select(col("id"), col("label"))
     }
+    (labels, rounds)
+  }
 
+  /** Pair list (id_a, id_b) plus its mirror image: the undirected edge
+    * list the component loops read.
+    */
+  private def mirrored(pairs: DataFrame): DataFrame =
+    pairs.union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
+
+  /** The dedup cluster table (doc_id, cluster_rep, cluster_size) from
+    * component labels (id, label): d6, d30 and d31's output.
+    */
+  private def clusterTable(labels: DataFrame): DataFrame = {
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
     labels
       .join(sizes, "label")
       .select(col("id").as("doc_id"), col("label").as("cluster_rep"), col("cluster_size"))
       .orderBy("doc_id")
+  }
+
+  /** d6 — near-dup CLUSTER formation: the pair list (d2's LSH +
+    * exact-verify machinery) is only half of dedup — a pipeline must
+    * then pick one representative per connected component of the
+    * pair graph (A~B, B~C ⇒ {A,B,C} keep one). Components are
+    * computed with Hash-Min label propagation ([[hashMinLabels]]):
+    * near-dup clusters are clique-ish, so 2–3 rounds in practice.
+    *
+    * Scale posture: this is the standard Spark connected-components
+    * loop — one key shuffle per round over the PAIR GRAPH only (docs
+    * that matched at θ — orders of magnitude smaller than the
+    * corpus), lineage truncated per round. The driver loop carries no
+    * data, only the convergence decision (a count).
+    */
+  def d6DupClusters(s: SparkSession, dir: String): DataFrame = {
+    val pairs = nearDupPairs(docsWithShingles(s, dir, 3), 0.5)
+      .select(col("id_a"), col("id_b"))
+    // materialize once: every propagation round re-reads the edges,
+    // and the LSH pipeline above must not re-run per round
+    val edges = mirrored(pairs).localCheckpoint()
+    val (labels, _) = hashMinLabels(edges, edges.select(col("id_a").as("id")).distinct())
+    clusterTable(labels)
   }
 
   /** d7 — benchmark decontamination: flag training documents sharing
@@ -828,21 +861,27 @@ object Dedup {
     * closure — d6's Hash-Min components is the closure step when
     * chains matter.
     */
-  def d14SemanticDedup(s: SparkSession, dir: String): DataFrame = {
+  def d14SemanticDedup(s: SparkSession, dir: String): DataFrame =
+    semDeDupPairs(s, dir, cellsPerVec = 1)
+      .groupBy(col("cell"), col("drop_id"))
+      .agg(
+        min(col("id_a")).as("keep_id"),
+        round(min_by(col("cos"), col("id_a")), 4).as("cosine"))
+      .orderBy("drop_id")
+
+  /** SemDeDup's pair stage, shared by d14 (hard assignment) and d15
+    * (soft): each vector of d10's augmented corpus joins its
+    * `cellsPerVec` best cells among K=16 sample centroids (cosine,
+    * ties to the lower cell), and vectors sharing a cell pair up.
+    * Returns (cell, id_a, drop_id, cos) for every within-cell pair
+    * id_a < drop_id at cosine ≥ 0.9. With soft assignment a pair that
+    * shares two cells appears once per cell.
+    */
+  private def semDeDupPairs(s: SparkSession, dir: String, cellsPerVec: Int): DataFrame = {
     val theta = 0.9
-    val orig = Tables
-      .embeddings(s, dir)
-      .select(
-        col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-    val pert = orig.select(
-      (col("vec_id") + lit(1000000L)).as("vec_id"),
-      transform(
-        col("v"),
-        (x, i) => x * when(i % 2 === 0, lit(1.05)).otherwise(lit(0.95)))
-        .as("v"))
+    val orig = longEmbeddings(s, dir)
     val aug = Tables
-      .spread(orig.unionAll(pert))
+      .spread(withNearDupPlant(orig))
       .withColumn("norm", sqrt(Similarity.dot(col("v"), col("v"))))
     val centroids = orig
       .filter(pmod(col("vec_id"), lit(31L)) === 0 && col("vec_id") < lit(496L))
@@ -850,7 +889,7 @@ object Dedup {
         expr("CAST(vec_id div 31 AS INT)").as("cell"),
         col("v").as("cv"))
       .withColumn("cnorm", sqrt(Similarity.dot(col("cv"), col("cv"))))
-    val byVec = org.apache.spark.sql.expressions.Window
+    val byVec = Window
       .partitionBy(col("vec_id"))
       .orderBy(col("ccos").desc, col("cell").asc)
     val assigned = aug
@@ -859,7 +898,7 @@ object Dedup {
         "ccos",
         Similarity.dot(col("v"), col("cv")) / (col("norm") * col("cnorm")))
       .withColumn("crn", row_number().over(byVec))
-      .filter(col("crn") === 1)
+      .filter(col("crn") <= cellsPerVec)
       .select(col("vec_id"), col("v"), col("norm"), col("cell"))
     assigned
       .as("a")
@@ -870,11 +909,11 @@ object Dedup {
         "cos",
         Similarity.dot(col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm")))
       .filter(col("cos") >= theta)
-      .groupBy(col("b.cell").as("cell"), col("b.vec_id").as("drop_id"))
-      .agg(
-        min(col("a.vec_id")).as("keep_id"),
-        round(min_by(col("cos"), col("a.vec_id")), 4).as("cosine"))
-      .orderBy("drop_id")
+      .select(
+        col("b.cell").as("cell"),
+        col("a.vec_id").as("id_a"),
+        col("b.vec_id").as("drop_id"),
+        col("cos"))
   }
 
   /** d15 — SemDeDup with TOP-2 SOFT ASSIGNMENT: the standard remedy
@@ -890,56 +929,15 @@ object Dedup {
     * legitimately live in two cells); keeper rule and rounding are
     * unchanged.
     */
-  def d15SemanticDedupSoft(s: SparkSession, dir: String): DataFrame = {
-    val theta = 0.9
-    val orig = Tables
-      .embeddings(s, dir)
-      .select(
-        col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-    val pert = orig.select(
-      (col("vec_id") + lit(1000000L)).as("vec_id"),
-      transform(
-        col("v"),
-        (x, i) => x * when(i % 2 === 0, lit(1.05)).otherwise(lit(0.95)))
-        .as("v"))
-    val aug = Tables
-      .spread(orig.unionAll(pert))
-      .withColumn("norm", sqrt(Similarity.dot(col("v"), col("v"))))
-    val centroids = orig
-      .filter(pmod(col("vec_id"), lit(31L)) === 0 && col("vec_id") < lit(496L))
-      .select(
-        expr("CAST(vec_id div 31 AS INT)").as("cell"),
-        col("v").as("cv"))
-      .withColumn("cnorm", sqrt(Similarity.dot(col("cv"), col("cv"))))
-    val byVec = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("cell").asc)
-    val assigned = aug
-      .crossJoin(broadcast(centroids))
-      .withColumn(
-        "ccos",
-        Similarity.dot(col("v"), col("cv")) / (col("norm") * col("cnorm")))
-      .withColumn("crn", row_number().over(byVec))
-      .filter(col("crn") <= 2)
-      .select(col("vec_id"), col("v"), col("norm"), col("cell"))
-    assigned
-      .as("a")
-      .join(
-        assigned.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .withColumn(
-        "cos",
-        Similarity.dot(col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm")))
-      .filter(col("cos") >= theta)
-      .select(col("b.vec_id").as("drop_id"), col("a.vec_id").as("id_a"), col("cos"))
+  def d15SemanticDedupSoft(s: SparkSession, dir: String): DataFrame =
+    semDeDupPairs(s, dir, cellsPerVec = 2)
+      .select(col("drop_id"), col("id_a"), col("cos"))
       .distinct()
       .groupBy(col("drop_id"))
       .agg(
         min(col("id_a")).as("keep_id"),
         round(min_by(col("cos"), col("id_a")), 4).as("cosine"))
       .orderBy("drop_id")
-  }
 
   /** d16 — density-based (DBSCAN-style) clustering of the near-dup
     * graph: where d6 merges EVERY connected doc into one component, a
@@ -953,9 +951,9 @@ object Dedup {
     * chain at the sparse bridge (a degree-1 bridge can never be core,
     * so families stay separate) — the standard reason DBSCAN beats
     * single-linkage CC for dedup-family mining. Clusters form by
-    * Hash-Min label propagation over CORE–CORE edges only (the d6
-    * loop: one pair-graph-sized shuffle per round, localCheckpoint
-    * truncating lineage, a 1-row convergence count driver-side);
+    * Hash-Min label propagation over CORE–CORE edges only
+    * ([[hashMinLabels]], d6's loop: one pair-graph-sized shuffle per
+    * round, a 1-row convergence count driver-side);
     * borders then attach to the min label among their core neighbors
     * — a deterministic tie-break, one extra pair-graph join, no
     * iteration. The ε-graph itself is d2's machinery: LSH-banded
@@ -975,8 +973,7 @@ object Dedup {
     * near-dup graph happens to contain.
     */
   private[graft] def densityRoles(pairs: DataFrame): DataFrame = {
-    val edges = pairs
-      .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
+    val edges = mirrored(pairs)
       .localCheckpoint() // degree pass + every propagation round + border attach
     val core = edges
       .groupBy(col("id_a").as("id"))
@@ -988,24 +985,7 @@ object Dedup {
       .join(core.select(col("id").as("id_b")), "id_b")
       .select(col("id_a"), col("id_b"))
       .localCheckpoint()
-    var labels = core.withColumn("label", col("id")).localCheckpoint()
-    var changed = 1L
-    while (changed > 0) {
-      val nbrMin = coreEdges
-        .join(labels, coreEdges("id_b") === labels("id"))
-        .groupBy(coreEdges("id_a").as("nid"))
-        .agg(min(col("label")).as("nlabel"))
-      val next = labels
-        .join(nbrMin, labels("id") === nbrMin("nid"), "left")
-        .select(
-          col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("nl"),
-          col("label").as("old"))
-        .select(col("id"), col("nl").as("label"), (col("nl") =!= col("old")).as("moved"))
-        .localCheckpoint()
-      changed = next.filter(col("moved")).count()
-      labels = next.select(col("id"), col("label"))
-    }
+    val (labels, _) = hashMinLabels(coreEdges, core)
     val borders = edges
       .join(labels.select(col("id").as("id_b"), col("label")), "id_b")
       .join(core.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
@@ -1048,29 +1028,14 @@ object Dedup {
       .distinct()
   }
 
-  /** Jaccard-verify candidate pairs on the shared hashed-shingle sets
-    * (the d2 machinery) — the exact-verify stage d17/d19 share.
+  /** d17/d19/d23's output: candidate pairs verified at Jaccard ≥ 0.5
+    * on the hashed-shingle sets `sets` ([[jaccardVerify]]), as
+    * (id_a, id_b, jaccard) rounded to 4 places.
     */
-  private def snVerify(s: SparkSession, dir: String, cand: DataFrame): DataFrame = {
-    val sets = docsWithShingles(s, dir, 3)
-      .select(col("doc_id"), col("hs"), size(col("hs")).as("n"))
-    cand
-      .join(
-        sets.select(col("doc_id").as("id_a"), col("hs").as("sa"), col("n").as("na")),
-        "id_a")
-      .join(
-        sets.select(col("doc_id").as("id_b"), col("hs").as("sb"), col("n").as("nb")),
-        "id_b")
-      .withColumn(
-        "shared",
-        graft.functions.SortedArrayIntersectCount
-          .sortedIntersectCount(col("sa"), col("sb"))
-          .cast("double"))
-      .withColumn("jac", col("shared") / (col("na") + col("nb") - col("shared")))
-      .filter(col("jac") >= 0.5)
+  private def verifiedPairTable(cand: DataFrame, sets: DataFrame): DataFrame =
+    jaccardVerify(cand, sets, sets, 0.5)
       .select(col("id_a"), col("id_b"), round(col("jac"), 4).as("jaccard"))
       .orderBy("id_a", "id_b")
-  }
 
   /** d17 — sorted-neighborhood near-dup blocking: record linkage's
     * classic alternative to LSH banding (Hernández–Stolfo). Docs sort
@@ -1090,7 +1055,7 @@ object Dedup {
     * is true Jaccard ≥ 0.5 pairs.
     */
   def d17SortedNeighborhood(s: SparkSession, dir: String): DataFrame =
-    snVerify(s, dir, snCandidates(snForwardKey(s, dir), 3))
+    verifiedPairTable(snCandidates(snForwardKey(s, dir), 3), docsWithShingles(s, dir, 3))
 
   /** The forward canonical key both d17 and d19's pass 1 sort by:
     * whitespace-normalized lowercased text.
@@ -1125,7 +1090,7 @@ object Dedup {
     val base = snForwardKey(s, dir)
     val p1 = snCandidates(base, w)
     val p2 = snCandidates(base.select(col("doc_id"), reverse(col("sk")).as("sk")), w)
-    snVerify(s, dir, p1.unionAll(p2).distinct())
+    verifiedPairTable(p1.unionAll(p2).distinct(), docsWithShingles(s, dir, 3))
   }
 
   /** d20 — survivorship policy over the dup clusters: dedup's LAST
@@ -1217,22 +1182,7 @@ object Dedup {
     */
   def d21ThresholdSweep(s: SparkSession, dir: String): DataFrame = {
     val sh = docsWithShingles(s, dir, 3)
-    val sizes = sh.select(col("doc_id"), size(col("hs")).as("n"))
-    val postings = sh.select(col("doc_id"), explode(col("hs")).as("h"))
-    val pairs = postings
-      .as("a")
-      .join(
-        postings.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("shared"))
-    val buckets = pairs
-      .join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "na"), "id_a")
-      .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "nb"), "id_b")
-      .withColumn(
-        "jac",
-        col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
-      .filter(col("jac") >= 0.5)
+    val buckets = jaccardTruth(sh.withColumn("n", size(col("hs"))))
       .withColumn("bucket", least(floor(col("jac") * 10), lit(9L)))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_pairs"))
@@ -1296,8 +1246,8 @@ object Dedup {
     * skew d13 caps away, avoided here by construction). The
     * global df-rank window is VOCABULARY-sized (the t-family bound:
     * shingle types, not rows) and ⌈θ·n⌉ is exact integer
-    * `(n + 1) div 2` at θ = 0.5. Verify is the shared sorted-merge
-    * intersect on the full hash sets.
+    * `(n + 1) div 2` at θ = 0.5. Verify is [[jaccardVerify]] on the
+    * full hash sets.
     */
   def d23AllPairsPrefix(s: SparkSession, dir: String): DataFrame = {
     val sh = docsWithShingles(s, dir, 3).localCheckpoint() // postings + both verify sides
@@ -1327,23 +1277,7 @@ object Dedup {
       .join(prefix.as("b"), col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    val sets = sh.select(col("doc_id"), col("hs"), size(col("hs")).as("n"))
-    cands
-      .join(
-        sets.select(col("doc_id").as("id_a"), col("hs").as("sa"), col("n").as("na")),
-        "id_a")
-      .join(
-        sets.select(col("doc_id").as("id_b"), col("hs").as("sb"), col("n").as("nb")),
-        "id_b")
-      .withColumn(
-        "shared",
-        graft.functions.SortedArrayIntersectCount
-          .sortedIntersectCount(col("sa"), col("sb"))
-          .cast("double"))
-      .withColumn("jac", col("shared") / (col("na") + col("nb") - col("shared")))
-      .filter(col("jac") >= 0.5)
-      .select(col("id_a"), col("id_b"), round(col("jac"), 4).as("jaccard"))
-      .orderBy("id_a", "id_b")
+    verifiedPairTable(cands, sh)
   }
 
   /** d24 — space-filling-curve (Morton/Z-order) blocking for
@@ -1376,11 +1310,7 @@ object Dedup {
     */
   def d24ZorderNeighbors(s: SparkSession, dir: String): DataFrame = {
     val theta = 0.9
-    val orig = Tables
-      .embeddings(s, dir)
-      .select(
-        col("vec_id").cast("long").as("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
+    val orig = longEmbeddings(s, dir)
     // the near-identical plant: additive alternating ±2e-4 (the
     // re-ingest regime), id offset 1e6 — d10's planting convention
     // with the delta this operator's regime is FOR
@@ -1477,6 +1407,64 @@ object Dedup {
     Seq(3L, 17L, 29L, 43L, 59L, 71L, 101L, 131L, 163L, 197L, 239L, 281L, 337L, 397L, 457L, 521L)
   private val D25P = 1000000007L
 
+  /** (doc_id, hs, n, sig): portable 3-gram shingle-hash sets plus the
+    * 16-coordinate affine MinHash signature — the oracle-replicable
+    * twin of [[docsWithShingles]] + [[graft.functions.MinHashFromHashes]],
+    * shared by d25's estimator audit and d26's blocking audit.
+    */
+  private[graft] def portableShingleSets(s: SparkSession, dir: String): DataFrame = {
+    val hashShingles =
+      """array_distinct(transform(sequence(1, size(t) - 2), i ->
+        |  aggregate(
+        |    transform(split(concat_ws(' ', t[i-1], t[i], t[i+1]), ''),
+        |              c -> CAST(ascii(c) AS BIGINT)),
+        |    0L, (a, x) -> (a * 131 + x) % 1000000007)))""".stripMargin
+    val sigExprs = D25As.zip(D25Bs).map { case (a, b) =>
+      array_min(transform(col("hs"), h => (h * a + b) % D25P))
+    }
+    Tables
+      .spread(Tables.documents(s, dir))
+      .select(col("doc_id"), split(col("text"), " ").as("t"))
+      .filter(size(col("t")) >= 3)
+      .select(col("doc_id"), expr(hashShingles).as("hs"))
+      .select(
+        col("doc_id"),
+        col("hs"),
+        size(col("hs")).as("n"),
+        array(sigExprs: _*).as("sig"))
+  }
+
+  /** Exhaustive shared-shingle counts: (id_a, id_b, shared) for every
+    * doc pair id_a < id_b sharing at least one hash of `sets`'
+    * (doc_id, hs) — the unblocked postings self-join, work
+    * Σ df(shingle)² (the d4/d13 regime rule applies). The exact pair
+    * side of d21 and of the d25–d37 audits.
+    */
+  private def sharedShingles(sets: DataFrame): DataFrame = {
+    val postings = sets.select(col("doc_id"), explode(col("hs")).as("h"))
+    postings
+      .as("a")
+      .join(
+        postings.as("b"),
+        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .agg(count(lit(1)).as("shared"))
+  }
+
+  /** The exhaustive near-dup truth over `sets` (doc_id, hs, n):
+    * (id_a, id_b, jac) for every pair with exact shingle-Jaccard
+    * ≥ 0.5, from [[sharedShingles]] and the set sizes `n`.
+    */
+  private def jaccardTruth(sets: DataFrame): DataFrame =
+    sharedShingles(sets)
+      .join(sets.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
+      .join(sets.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
+      .withColumn(
+        "jac",
+        col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
+      .filter(col("jac") >= 0.5)
+      .select(col("id_a"), col("id_b"), col("jac"))
+
   /** d25 — MinHash estimator-error audit: for every TRUE near-dup pair
     * (exact shingle-Jaccard ≥ 0.5), how far is the 16-hash MinHash
     * ESTIMATE (matching signature coordinates / 16) from the exact
@@ -1505,45 +1493,10 @@ object Dedup {
     * mean |Ĵ−J| = 0.029 — right at Broder's sqrt(J(1−J)/16) ≈ 0.07
     * envelope, the number that justifies d2's 64-hash production width.
     */
-  /** (doc_id, hs, n, sig): portable 3-gram shingle-hash sets plus the
-    * 16-coordinate affine MinHash signature — the oracle-replicable
-    * twin of [[docsWithShingles]] + [[graft.functions.MinHashFromHashes]],
-    * shared by d25's estimator audit and d26's blocking audit.
-    */
-  private[graft] def portableShingleSets(s: SparkSession, dir: String): DataFrame = {
-    val hashShingles =
-      """array_distinct(transform(sequence(1, size(t) - 2), i ->
-        |  aggregate(
-        |    transform(split(concat_ws(' ', t[i-1], t[i], t[i+1]), ''),
-        |              c -> CAST(ascii(c) AS BIGINT)),
-        |    0L, (a, x) -> (a * 131 + x) % 1000000007)))""".stripMargin
-    val sigExprs = D25As.zip(D25Bs).map { case (a, b) =>
-      array_min(transform(col("hs"), h => (h * a + b) % D25P))
-    }
-    Tables
-      .spread(Tables.documents(s, dir))
-      .select(col("doc_id"), split(col("text"), " ").as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), expr(hashShingles).as("hs"))
-      .select(
-        col("doc_id"),
-        col("hs"),
-        size(col("hs")).as("n"),
-        array(sigExprs: _*).as("sig"))
-  }
-
   def d25MinhashError(s: SparkSession, dir: String): DataFrame = {
     val sets = portableShingleSets(s, dir)
       .localCheckpoint() // consumed three times: postings + both pair sides
-    val postings = sets.select(col("doc_id"), explode(col("hs")).as("h"))
-    val pairs = postings
-      .as("a")
-      .join(
-        postings.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("shared"))
-    pairs
+    sharedShingles(sets)
       .join(
         sets.select(col("doc_id").as("id_a"), col("n").as("na"), col("sig").as("siga")),
         "id_a")
@@ -1605,18 +1558,7 @@ object Dedup {
   def d26BlockingEfficiency(s: SparkSession, dir: String): DataFrame = {
     val sets = portableShingleSets(s, dir).localCheckpoint()
     val postings = sets.select(col("doc_id"), explode(col("hs")).as("h"))
-    val sizes = sets.select(col("doc_id"), col("n"))
-    val truth = postings
-      .as("a")
-      .join(
-        postings.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("shared"))
-      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
-      .filter(
-        col("shared").cast("double") / (col("na") + col("nb") - col("shared")) >= 0.5)
+    val truth = jaccardTruth(sets)
       .select(col("id_a"), col("id_b"))
       .localCheckpoint() // intersected with all four candidate sets
     val keyed = snForwardKey(s, dir)
@@ -1628,14 +1570,7 @@ object Dedup {
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
     val candSnm = snCandidates(keyed, 3)
-    val banded = sets.select(
-      col("doc_id"),
-      explode(array((0 until 8).map { b =>
-        struct(
-          lit(b).as("band"),
-          element_at(col("sig"), 2 * b + 1).as("h1"),
-          element_at(col("sig"), 2 * b + 2).as("h2"))
-      }: _*)).as("bk"))
+    val banded = sets.select(col("doc_id"), explode(bandKeys(8, 2)).as("bk"))
     val candLsh = banded
       .as("a")
       .join(
@@ -1706,20 +1641,7 @@ object Dedup {
     */
   def d27BandSweep(s: SparkSession, dir: String): DataFrame = {
     val sets = portableShingleSets(s, dir).localCheckpoint()
-    val postings = sets.select(col("doc_id"), explode(col("hs")).as("h"))
-    val sizes = sets.select(col("doc_id"), col("n"))
-    val truth = postings
-      .as("a")
-      .join(
-        postings.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("shared"))
-      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
-      .filter(
-        col("shared").cast("double") / (col("na") + col("nb") - col("shared")) >= 0.5)
-      .select(col("id_a"), col("id_b"))
+    val truth = jaccardTruth(sets).select(col("id_a"), col("id_b"))
     val banded = sets.select(
       col("doc_id"),
       explode(array((0 until 8).map { b =>
@@ -1781,20 +1703,7 @@ object Dedup {
     */
   def d28MethodAgreement(s: SparkSession, dir: String): DataFrame = {
     val sets = portableShingleSets(s, dir).localCheckpoint()
-    val postings = sets.select(col("doc_id"), explode(col("hs")).as("h"))
-    val sizes = sets.select(col("doc_id"), col("n"))
-    val jacc = postings
-      .as("a")
-      .join(
-        postings.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("shared"))
-      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
-      .filter(
-        col("shared").cast("double") / (col("na") + col("nb") - col("shared")) >= 0.5)
-      .select(col("id_a"), col("id_b"))
+    val jacc = jaccardTruth(sets).select(col("id_a"), col("id_b"))
     val sim = d3SimHash(s, dir).select(col("id_a"), col("id_b"))
     val nJ = jacc.agg(count(lit(1)).as("n_jaccard"))
     val nS = sim.agg(count(lit(1)).as("n_simhash"))
@@ -2041,11 +1950,7 @@ object Dedup {
     val pairs = nearDupPairs(docsWithShingles(s, dir, 3), 0.5)
       .select(col("id_a"), col("id_b"))
     val (labels, _) = twoStarLabels(pairs)
-    val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
-    labels
-      .join(sizes, "label")
-      .select(col("id").as("doc_id"), col("label").as("cluster_rep"), col("cluster_size"))
-      .orderBy("doc_id")
+    clusterTable(labels)
   }
 
   /** d31 — INCREMENTAL connected-components maintenance (CC IVM,
@@ -2088,17 +1993,9 @@ object Dedup {
     // contract: CC over the label graph only (≤ 6 nodes here;
     // cluster-count-bounded in general)
     val (merged, _) = twoStarLabels(delta)
-    val remapped = bl
-      .join(
-        broadcast(merged.toDF("label", "new_label")),
-        Seq("label"),
-        "left")
-      .select(col("id"), coalesce(col("new_label"), col("label")).as("label"))
-    val sizes = remapped.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
-    remapped
-      .join(sizes, "label")
-      .select(col("id").as("doc_id"), col("label").as("cluster_rep"), col("cluster_size"))
-      .orderBy("doc_id")
+    clusterTable(
+      bl.join(broadcast(merged.toDF("label", "new_label")), Seq("label"), "left")
+        .select(col("id"), coalesce(col("new_label"), col("label")).as("label")))
   }
 
   /** d32 — analytic LSH parameter auto-tuner: the closed-form
@@ -2422,15 +2319,7 @@ object Dedup {
   def d36BbitMinhash(s: SparkSession, dir: String): DataFrame = {
     val sets = portableShingleSets(s, dir)
       .localCheckpoint() // postings + both pair sides
-    val postings = sets.select(col("doc_id"), explode(col("hs")).as("h"))
-    val pairs = postings
-      .as("a")
-      .join(
-        postings.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("shared"))
-    pairs
+    sharedShingles(sets)
       .join(
         sets.select(col("doc_id").as("id_a"), col("n").as("na"), col("sig").as("siga")),
         "id_a")
@@ -2490,21 +2379,7 @@ object Dedup {
   def d37SimhashError(s: SparkSession, dir: String): DataFrame = {
     val sets = portableShingleSets(s, dir)
       .localCheckpoint() // postings + both pair sides
-    val postings = sets.select(col("doc_id"), explode(col("hs")).as("h"))
-    val truePairs = postings
-      .as("a")
-      .join(
-        postings.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("shared"))
-      .join(sets.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
-      .join(sets.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
-      .withColumn(
-        "jac",
-        col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
-      .filter(col("jac") >= 0.5)
-      .select(col("id_a"), col("id_b"), col("jac"))
+    val truePairs = jaccardTruth(sets)
       .localCheckpoint() // simhash join + two token-count joins
     val sk = Tables
       .spread(Tables.documents(s, dir))
@@ -2614,6 +2489,39 @@ object Dedup {
       .orderBy("band")
   }
 
+  /** The embeddings table as (vec_id, v: array<double>, norm): the
+    * vector side of d5, d39 and d40.
+    */
+  private[graft] def normedEmbeddings(s: SparkSession, dir: String): DataFrame =
+    Tables
+      .spread(Tables.embeddings(s, dir))
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .withColumn("norm", sqrt(Similarity.dot(col("v"), col("v"))))
+
+  /** A cosine frozen to integer basis points, as column `cos_bp`: the
+    * exact and banded arms of d39/d40 share this expression, so a pair
+    * found by both carries a bit-identical value.
+    */
+  private def cosBp(cos: Column): Column =
+    floor(cos * 10000 + 0.5).cast("long").as("cos_bp")
+
+  /** d39/d40's exact arm: the triangular all-pairs cosine join over
+    * (vec_id, v, norm), frozen to bp, kept at ≥ 0.30 (the loosest
+    * cut): (id_a, id_b, cos_bp).
+    */
+  private[graft] def exactCosineEdges(e: DataFrame): DataFrame =
+    e.as("a")
+      .join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
+      .select(
+        col("a.vec_id").as("id_a"),
+        col("b.vec_id").as("id_b"),
+        cosBp(Similarity.dot(col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm"))))
+      .filter(col("cos_bp") >= 3000L)
+
+  /** The four cuts θ ∈ {0.30, 0.40, 0.50, 0.60} of d39/d40, in bp. */
+  private val CutThetasBp =
+    "array(CAST(3000 AS BIGINT), CAST(4000 AS BIGINT), CAST(5000 AS BIGINT), CAST(6000 AS BIGINT))"
+
   /** d39 — threshold-stability curve of the near-dup CLUSTERING: the
     * connected-component census of the embedding cosine graph at
     * θ ∈ {0.30, 0.40, 0.50, 0.60} — edges, linked nodes, component
@@ -2629,10 +2537,10 @@ object Dedup {
     * (exact doubles, the d5 regime — the embedding table is a
     * dimension; no broadcast hint, AQE picks the build side), frozen
     * to integer bp, then replicated to each θ it survives, and a
-    * single Hash-Min label propagation runs over the COMPOSITE
-    * (θ, node) graph — the d6 loop, 4 clusterings for one driver
-    * loop's latency. Edges nest across θ so the replicated graph is
-    * ≤ 4× the loosest cut. Oracle: the d6 transitive-closure
+    * single [[twoStarLabels]] fixpoint runs over the COMPOSITE
+    * (θ, node) graph — 4 clusterings for one driver loop's latency.
+    * Edges nest across θ so the replicated graph is ≤ 4× the loosest
+    * cut. Oracle: the d6 transitive-closure
     * recursion keyed by (θ, node).
     *
     * The triangular pair stage is this sweep's CONTROL ARM (the
@@ -2644,31 +2552,16 @@ object Dedup {
     * itself against.
     */
   def d39ThresholdStability(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables
-      .spread(Tables.embeddings(s, dir))
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("norm", sqrt(Similarity.dot(col("v"), col("v"))))
+    val e = normedEmbeddings(s, dir)
       .localCheckpoint() // both pair sides + the vec total replay this (d40's posture)
-    val pairs = e
-      .as("a")
-      .join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .withColumn(
-        "cos",
-        Similarity.dot(col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm")))
-      .select(
-        col("a.vec_id").as("id_a"),
-        col("b.vec_id").as("id_b"),
-        expr("CAST(floor(cos * 10000 + 0.5) AS BIGINT)").as("cos_bp"))
-      .filter(col("cos_bp") >= 3000L)
+    val pairs = exactCosineEdges(e)
       .localCheckpoint() // the sweep, the census and every CC round reuse it
     val edgesT = pairs
       .select(
         col("id_a"),
         col("id_b"),
         col("cos_bp"),
-        explode(expr(
-          "array(CAST(3000 AS BIGINT), CAST(4000 AS BIGINT), CAST(5000 AS BIGINT), CAST(6000 AS BIGINT))"))
-          .as("theta_bp"))
+        explode(expr(CutThetasBp)).as("theta_bp"))
       .filter(col("cos_bp") >= col("theta_bp"))
       .select(col("theta_bp"), col("id_a"), col("id_b"))
     // ONE two-star fixpoint for all four cuts: (θ, vec_id) encodes
@@ -2702,9 +2595,7 @@ object Dedup {
     // still report a row (zero edges, everything isolated), not vanish
     // through an inner join
     tot
-      .select(explode(expr(
-        "array(CAST(3000 AS BIGINT), CAST(4000 AS BIGINT), CAST(5000 AS BIGINT), CAST(6000 AS BIGINT))"))
-        .as("theta_bp"))
+      .select(explode(expr(CutThetasBp)).as("theta_bp"))
       .join(ne, Seq("theta_bp"), "left")
       .join(comp, Seq("theta_bp"), "left")
       .crossJoin(broadcast(tot))
@@ -2723,10 +2614,10 @@ object Dedup {
     * hyperplane-LSH bucket co-occupancy (an equi-join on the
     * (table, bucket) key), and their cosines are computed by joining
     * the candidate ids back to the vector table — never by consulting
-    * the O(n²) triangular join. The dot/norm/bp-freeze expression text
-    * is identical to the exact arm's, so a pair surviving both paths
-    * carries a bit-identical cos_bp and d40's output hash is unchanged
-    * by this rewrite; what changed is that the sub-quadratic path now
+    * the O(n²) triangular join. The dot/norm quotient and the
+    * [[cosBp]] freeze are the exact arm's, so a pair surviving both
+    * paths carries a bit-identical cos_bp and d40's output hash is
+    * unchanged by this rewrite; what changed is that the sub-quadratic path now
     * runs (and scales) without the control arm existing at all. The
     * spec pins the plan shape: equi-joins only — no cartesian, no
     * nested-loop — anywhere in this arm.
@@ -2743,11 +2634,10 @@ object Dedup {
     cand
       .join(e.select(col("vec_id").as("id_a"), col("v").as("va"), col("norm").as("na")), Seq("id_a"))
       .join(e.select(col("vec_id").as("id_b"), col("v").as("vb"), col("norm").as("nb")), Seq("id_b"))
-      .withColumn("cos", Similarity.dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .select(
         col("id_a"),
         col("id_b"),
-        expr("CAST(floor(cos * 10000 + 0.5) AS BIGINT)").as("cos_bp"))
+        cosBp(Similarity.dot(col("va"), col("vb")) / (col("na") * col("nb"))))
       .filter(col("cos_bp") >= 3000L)
   }
 
@@ -2777,26 +2667,11 @@ object Dedup {
     * fixture-scale control exactly as in d39.
     */
   def d40BandedThresholdSweep(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables
-      .spread(Tables.embeddings(s, dir))
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("norm", sqrt(Similarity.dot(col("v"), col("v"))))
+    val e = normedEmbeddings(s, dir)
       .localCheckpoint() // pair sides + banding reuse one materialization
-    val pairs = e
-      .as("a")
-      .join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .withColumn(
-        "cos",
-        Similarity.dot(col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm")))
-      .select(
-        col("a.vec_id").as("id_a"),
-        col("b.vec_id").as("id_b"),
-        expr("CAST(floor(cos * 10000 + 0.5) AS BIGINT)").as("cos_bp"))
-      .filter(col("cos_bp") >= 3000L)
+    val pairs = exactCosineEdges(e)
       .localCheckpoint() // exact arm: the censuses and CC rounds reuse it
     val bq = d40BandedEdges(e)
-    val thetas =
-      "array(CAST(3000 AS BIGINT), CAST(4000 AS BIGINT), CAST(5000 AS BIGINT), CAST(6000 AS BIGINT))"
     val et = pairs
       .select(lit(0L).as("arm"), col("id_a"), col("id_b"), col("cos_bp"))
       .unionAll(bq.select(lit(1L).as("arm"), col("id_a"), col("id_b"), col("cos_bp")))
@@ -2805,7 +2680,7 @@ object Dedup {
         col("id_a"),
         col("id_b"),
         col("cos_bp"),
-        explode(expr(thetas)).as("theta_bp"))
+        explode(expr(CutThetasBp)).as("theta_bp"))
       .filter(col("cos_bp") >= col("theta_bp"))
       .select(col("arm"), col("theta_bp"), col("id_a"), col("id_b"))
     // (θ, arm, vec_id) → one long: prefix θ·2 + arm, ids share a
@@ -2843,7 +2718,7 @@ object Dedup {
         sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("ne_b"))
     // anchor on the θ list: a cut with no banded (or no) edges still
     // reports a row with zeros, not a vanished join
-    val one = pairs.sparkSession.range(1).select(explode(expr(thetas)).as("theta_bp"))
+    val one = pairs.sparkSession.range(1).select(explode(expr(CutThetasBp)).as("theta_bp"))
     one
       .join(ne, Seq("theta_bp"), "left")
       .join(census, Seq("theta_bp"), "left")

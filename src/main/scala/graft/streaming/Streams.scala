@@ -1995,30 +1995,13 @@ object Streams {
     // d2's consumer step: exact verification of the emitted candidate
     // edges on the sorted shingle-hash sets, then the flag rollup
     val edges = hits
-      .select(col("doc_id"), col("rep_doc_id"))
+      .select(col("doc_id").as("id_a"), col("rep_doc_id").as("id_b"))
       .distinct()
-    val sets = graft.ops.Dedup
-      .docsWithShingles(s, dir, 3)
-      .select(col("doc_id"), col("hs"), size(col("hs")).as("n"))
-    val verified = edges
-      .join(
-        sets.withColumnRenamed("hs", "sa").withColumnRenamed("n", "na"),
-        "doc_id")
-      .join(
-        sets
-          .withColumnRenamed("doc_id", "rep_doc_id")
-          .withColumnRenamed("hs", "sb")
-          .withColumnRenamed("n", "nb"),
-        "rep_doc_id")
-      .withColumn(
-        "shared",
-        graft.functions.SortedArrayIntersectCount
-          .sortedIntersectCount(col("sa"), col("sb"))
-          .cast("double"))
-      .filter(col("shared") / (col("na") + col("nb") - col("shared")) >= 0.5)
+    val sets = graft.ops.Dedup.docsWithShingles(s, dir, 3)
+    val verified = graft.ops.Dedup.jaccardVerify(edges, sets, sets, 0.5)
     val flagged = verified
-      .select(col("doc_id"))
-      .unionAll(verified.select(col("rep_doc_id").as("doc_id")))
+      .select(col("id_a").as("doc_id"))
+      .unionAll(verified.select(col("id_b").as("doc_id")))
       .distinct()
       .withColumn("f", lit(1L))
     docs

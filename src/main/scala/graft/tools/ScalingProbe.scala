@@ -2,8 +2,7 @@ package graft.tools
 
 import graft.GraftSession
 import graft.ops.{Dedup, Similarity, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** 3-SF scaling probe for the quadratic-control vs banded-arm queries
   * (round-12 verdict mandate #5): d39/d40/s30's 10× sf0.01→0.1 ratio
@@ -38,32 +37,15 @@ object ScalingProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def embeddingsBase(dir: String): DataFrame =
-      Tables
-        .spread(Tables.embeddings(spark, dir))
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .withColumn("norm", sqrt(Similarity.dot(col("v"), col("v"))))
-
     /** d40's exact control arm alone: the triangular all-pairs cosine
-      * join with the same bp freeze and θ floor (Dedup.scala d39/d40).
+      * join d39 and d40 run, with its bp freeze and θ floor.
       */
-    def exactArm(dir: String): DataFrame = {
-      val e = embeddingsBase(dir)
-      e.as("a")
-        .join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
-        .withColumn(
-          "cos",
-          Similarity.dot(col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm")))
-        .select(
-          col("a.vec_id").as("id_a"),
-          col("b.vec_id").as("id_b"),
-          expr("CAST(floor(cos * 10000 + 0.5) AS BIGINT)").as("cos_bp"))
-        .filter(col("cos_bp") >= 3000L)
-    }
+    def exactArm(dir: String): DataFrame =
+      Dedup.exactCosineEdges(Dedup.normedEmbeddings(spark, dir))
 
     def probes(dir: String): Seq[(String, () => DataFrame)] = Seq(
       "d40_exact_arm" -> (() => exactArm(dir)),
-      "d40_banded_arm" -> (() => Dedup.d40BandedEdges(embeddingsBase(dir))),
+      "d40_banded_arm" -> (() => Dedup.d40BandedEdges(Dedup.normedEmbeddings(spark, dir))),
       "d39_exact_control" -> (() => Dedup.d39ThresholdStability(spark, dir)),
       "d40_full" -> (() => Dedup.d40BandedThresholdSweep(spark, dir)),
       "s30_exact_control" -> (() => Similarity.s30KnnGraph(spark, dir)))
@@ -84,7 +66,7 @@ object ScalingProbe {
       val nVecs = Tables.embeddings(spark, dir).count()
       val exactPairs = nVecs * (nVecs - 1) / 2
       val exactEdges = exactArm(dir).count()
-      val bandedEdges = Dedup.d40BandedEdges(embeddingsBase(dir)).count()
+      val bandedEdges = Dedup.d40BandedEdges(Dedup.normedEmbeddings(spark, dir)).count()
       GraftSession.releaseQueryState(spark)
       val timed = probes(dir).map { case (n, f) => n -> time(f) }
       val probesJson = timed.map { case (n, t) => s""""$n":$t""" }.mkString("{", ",", "}")

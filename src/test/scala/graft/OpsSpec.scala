@@ -1144,6 +1144,27 @@ class OpsSpec extends SparkSpec {
     assert(cl.collect().forall(_.getLong(1) == 0L) && cr <= 3)
   }
 
+  test("Hash-Min CC: one round per hop on the planted 33-node path, 2 rounds on a clique") {
+    // label 0 moves one hop per round: 32 moving rounds drag it to
+    // node 32, and a 33rd round sees no label move
+    import spark.implicits._
+    def run(pairs: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
+      val p = pairs.toDF("id_a", "id_b")
+      val edges = p.union(p.select(col("id_b"), col("id_a"))).localCheckpoint()
+      val (labels, rounds) =
+        Dedup.hashMinLabels(edges, edges.select(col("id_a").as("id")).distinct())
+      (labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap, rounds)
+    }
+    val (path, pathRounds) = run((0L until 32L).map(i => (i, i + 1)))
+    assert(path.size == 33 && path.values.forall(_ == 0L),
+      "every path node must label to the component min")
+    assert(pathRounds == 33, s"Hash-Min took $pathRounds rounds on a 33-node path")
+    val (clique, cliqueRounds) =
+      run(for {a <- 0L until 6L; b <- (a + 1) until 6L} yield (a, b))
+    assert(clique.size == 6 && clique.values.forall(_ == 0L))
+    assert(cliqueRounds == 2, s"Hash-Min took $cliqueRounds rounds on a 6-clique")
+  }
+
   test("q195 FIFO matching: the overlap join replays an imperative FIFO allocator exactly") {
     val orders = graft.ops.Tables.orders(spark, Sf)
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderstatus"),

@@ -2,7 +2,23 @@ package graft
 
 import graft.ops.{Corpus, Dedup, Multimodal, Relational, Similarity, Tables, TextAnalysis}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{
+  Aggregate,
+  LogicalPlan,
+  Range => LRange,
+  Window => LWindow
+}
+import org.apache.spark.sql.execution.{
+  InputAdapter,
+  QueryExecution,
+  SparkPlan,
+  TakeOrderedAndProjectExec,
+  WholeStageCodegenExec
+}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Physical-plan audits: the properties that matter at 100 TB, pinned
   * so a refactor can't silently regress them — filters reach the
@@ -759,6 +775,89 @@ class PlanSpec extends SparkSpec {
     assert(pf.contains("ym"), s"month predicate must land in PartitionFilters:\n$pf")
     assert(!plan.contains("PushedFilters: [IsNotNull(ym)"),
       "ym must be a partition column, never a data filter")
+  }
+
+  /** Query executions of every `localCheckpoint` run while `build`
+    * builds its frame: checkpointed intermediates execute there, and
+    * the frame's own plan only reads their blocks.
+    */
+  private def checkpointRuns(build: => DataFrame): Seq[QueryExecution] = {
+    val events = new java.util.concurrent.LinkedBlockingQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        events.put((funcName, qe))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(String, QueryExecution)]
+    try {
+      build
+      // listener events arrive asynchronously but in order: once this
+      // marker collect is seen, every checkpoint before it has been
+      spark.range(1).collect()
+      while (!seen.lastOption.exists(_._1 == "collect")) {
+        val e = events.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        assert(e != null, "the marker collect never reached the listener")
+        seen += e
+      }
+    } finally spark.listenerManager.unregister(listener)
+    seen.collect { case ("localCheckpoint", qe) => qe }.toSeq
+  }
+
+  private def globalWindows(p: LogicalPlan): Seq[LWindow] =
+    p.collect { case w: LWindow if w.partitionSpec.isEmpty => w }
+
+  test("d24 Z-key offsets: the unpartitioned window runs over the per-zkey histogram") {
+    // zkey interleaves two 8-bit quantized dims, so the histogram the
+    // offsets window reads has at most 2^16 rows at any corpus size
+    val windows = checkpointRuns(Dedup.d24ZorderNeighbors(spark, Sf))
+      .flatMap(qe => globalWindows(qe.optimizedPlan))
+    assert(windows.size == 2, s"expected one offsets window per curve, got ${windows.size}")
+    windows.foreach { w =>
+      val keys = w.child.collectFirst { case a: Aggregate =>
+        a.groupingExpressions.flatMap(_.references.map(_.name))
+      }
+      assert(keys.contains(Seq("zkey")), s"offsets window input is not the zkey histogram:\n$w")
+    }
+  }
+
+  test("d31 rep ranking: the unpartitioned rank window reads a top-6, not the cluster table") {
+    // the rank runs inside the delta's checkpoint; rk <= 6 plans as a
+    // per-partition top-6 below the window, so the window sees 6 rows
+    // however many clusters the corpus has
+    object Plans extends AdaptiveSparkPlanHelper
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case i: InputAdapter          => unwrap(i.child)
+      case x                        => x
+    }
+    val ranked = checkpointRuns(Dedup.d31CcIncremental(spark, Sf))
+      .filter(qe => globalWindows(qe.optimizedPlan).nonEmpty)
+    assert(ranked.size == 1, s"expected the rank window in one checkpoint, got ${ranked.size}")
+    val windows = Plans.collect(ranked.head.executedPlan) {
+      case w: WindowExec if w.partitionSpec.isEmpty => w
+    }
+    // one rank per side of the odd/even delta join
+    assert(windows.size == 2, s"expected two global windows:\n${ranked.head.executedPlan}")
+    windows.foreach { w =>
+      unwrap(w.child) match {
+        case t: TakeOrderedAndProjectExec =>
+          assert(t.limit == 6, s"top-k below the rank window keeps ${t.limit} rows")
+        case other => fail(s"the rank window's input is not a top-6:\n$other")
+      }
+    }
+  }
+
+  test("d32 layout ranking: the unpartitioned window reads only the literal (b, r) grid") {
+    val q = Dedup.d32LshTuner(spark, Sf)
+    val windows = globalWindows(q.queryExecution.optimizedPlan)
+    assert(windows.nonEmpty, "expected the layout-ranking window")
+    windows.foreach { w =>
+      assert(w.child.collectLeaves().forall(_.isInstanceOf[LRange]),
+        s"the ranking window reads more than the b x r ranges:\n$w")
+    }
+    // b·r ≤ 64 over b ∈ [1, 64], r ∈ [1, 8]: Σ_r ⌊64/r⌋ layouts
+    assert(q.count() == (1 to 8).map(64 / _).sum)
   }
 
   test("spread parallelizes derived compute beyond the single input split") {

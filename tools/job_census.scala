@@ -1,0 +1,51 @@
+// Loaded by tools/job_census.sh into spark-shell; reads CENSUS_SF and
+// CENSUS_QUERIES (comma list, empty = every query) from the environment.
+import org.apache.spark.scheduler._
+import java.util.concurrent.atomic.AtomicLong
+
+val sfDir = sys.env("CENSUS_SF")
+val wanted = sys.env.getOrElse("CENSUS_QUERIES", "").split(",").map(_.trim).filter(_.nonEmpty)
+val all = graft.SparkEntry.queries
+val unknown = wanted.filterNot(all.contains)
+require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+val names = if (wanted.isEmpty) all.keys.toSeq.sorted else wanted.toSeq
+
+// Listener events arrive asynchronously: a query's counts are read after
+// every started job has ended and no event has arrived for a quiet period.
+object Census extends SparkListener {
+  val jobs, jobEnds, stages, tasks = new AtomicLong
+  override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = jobEnds.incrementAndGet()
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
+  def snapshot: (Long, Long, Long) = (jobs.get, stages.get, tasks.get)
+  def drain(): Unit = {
+    var last = (-1L, -1L, -1L)
+    while (snapshot != last || jobs.get != jobEnds.get) {
+      last = snapshot
+      Thread.sleep(300)
+    }
+  }
+}
+spark.sparkContext.addSparkListener(Census)
+
+for (name <- names) {
+  Census.drain()
+  val (j0, s0, t0) = Census.snapshot
+  val line =
+    try {
+      // building the frame counts too: iterative queries run their
+      // fixpoint loops while the plan is built
+      val rows = all(name)(spark, sfDir).collect().map(_.toString).sorted
+      Census.drain()
+      val (j1, s1, t1) = Census.snapshot
+      val sha = java.security.MessageDigest
+        .getInstance("SHA-1")
+        .digest(rows.mkString("\n").getBytes("UTF-8"))
+        .map("%02x".format(_))
+        .mkString
+      s"$name rows=${rows.length} sha1=$sha jobs=${j1 - j0} stages=${s1 - s0} tasks=${t1 - t0}"
+    } catch { case e: Throwable => s"$name FAILED ${e.getClass.getSimpleName}: ${e.getMessage}" }
+  println("CENSUS " + line)
+  graft.GraftSession.releaseQueryState(spark)
+}
