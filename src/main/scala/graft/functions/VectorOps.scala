@@ -9,24 +9,23 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types._
 
-/** Exact left-to-right dot product of two `array<double>` columns as a
-  * native codegen'd Catalyst expression.
+/** A left-to-right double fold over the element pairs of two
+  * `array<double>` columns: `acc += term(a(i), b(i))` from 0.0, in
+  * index order. The interpreted and generated loops live here once; an
+  * expression supplies only its per-element term, in Scala and in Java.
   *
-  * Semantically identical to the builtin composition
-  * `aggregate(zip_with(a, b, (x,y) -> x*y), 0.0, (acc,x) -> acc+x)` —
-  * the same fold order, so results are bit-for-bit equal to that and to
-  * DuckDB's `list_inner_product` — but evaluated as a single fused loop
-  * with no intermediate array allocation and no per-element lambda
-  * dispatch. On the embedding self-join paths (similarity search,
-  * embedding near-dup) every candidate pair pays one of these, so the
-  * fused loop is the difference between the join being compute-bound
-  * and allocation-bound.
-  *
-  * Null semantics match the builtin composition: a null array, length
-  * mismatch (zip_with pads with null), or any null element yields null.
+  * Null semantics match the builtin `aggregate(zip_with(...))`
+  * composition: a null array, a length mismatch (zip_with pads with
+  * null), or any null element yields null.
   */
-case class DotProductDouble(left: Expression, right: Expression)
-    extends BinaryExpression {
+sealed trait DoubleVectorFold extends BinaryExpression {
+
+  /** The per-element term, interpreted. */
+  protected def term(x: Double, y: Double): Double
+
+  /** Java statements adding the term of `x` and `y` (Java double
+    * expressions) to `acc`. */
+  protected def accumulateCode(ctx: CodegenContext, acc: String, x: String, y: String): String
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
@@ -37,7 +36,7 @@ case class DotProductDouble(left: Expression, right: Expression)
         TypeCheckResult.TypeCheckSuccess
       case (l, r) =>
         TypeCheckResult.TypeCheckFailure(
-          s"dot_product expects (array<double>, array<double>), got (${l.catalogString}, ${r.catalogString})")
+          s"$prettyName expects (array<double>, array<double>), got (${l.catalogString}, ${r.catalogString})")
     }
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
@@ -53,7 +52,7 @@ case class DotProductDouble(left: Expression, right: Expression)
     var i = 0
     while (i < n) {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
-      acc += a.getDouble(i) * b.getDouble(i)
+      acc += term(a.getDouble(i), b.getDouble(i))
       i += 1
     }
     acc
@@ -66,6 +65,7 @@ case class DotProductDouble(left: Expression, right: Expression)
     val b = rightGen.value
     val i = ctx.freshName("i")
     val n = ctx.freshName("n")
+    val step = accumulateCode(ctx, ev.value.toString, s"$a.getDouble($i)", s"$b.getDouble($i)")
     val code =
       code"""
         ${leftGen.code}
@@ -79,7 +79,7 @@ case class DotProductDouble(left: Expression, right: Expression)
               ${ev.isNull} = false;
               for (int $i = 0; $i < $n; $i++) {
                 if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-                ${ev.value} += $a.getDouble($i) * $b.getDouble($i);
+                $step
               }
             }
           }
@@ -87,6 +87,30 @@ case class DotProductDouble(left: Expression, right: Expression)
       """
     ev.copy(code = code)
   }
+}
+
+/** Exact left-to-right dot product of two `array<double>` columns as a
+  * native codegen'd Catalyst expression.
+  *
+  * Semantically identical to the builtin composition
+  * `aggregate(zip_with(a, b, (x,y) -> x*y), 0.0, (acc,x) -> acc+x)` —
+  * the same fold order, so results are bit-for-bit equal to that and to
+  * DuckDB's `list_inner_product` — but evaluated as a single fused loop
+  * with no intermediate array allocation and no per-element lambda
+  * dispatch. On the embedding self-join paths (similarity search,
+  * embedding near-dup) every candidate pair pays one of these, so the
+  * fused loop is the difference between the join being compute-bound
+  * and allocation-bound.
+  */
+case class DotProductDouble(left: Expression, right: Expression) extends DoubleVectorFold {
+
+  override protected def term(x: Double, y: Double): Double = x * y
+
+  override protected def accumulateCode(
+      ctx: CodegenContext,
+      acc: String,
+      x: String,
+      y: String): String = s"$acc += $x * $y;"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression,
@@ -101,72 +125,22 @@ case class DotProductDouble(left: Expression, right: Expression)
   * bit-for-bit equal) to
   * `aggregate(zip_with(a, b, (x,y) -> (x-y)*(x-y)), 0.0, (acc,d) -> acc+d)`,
   * which is what the PQ/ADC paths evaluated as interpreted per-element
-  * lambda dispatch. Null semantics match that composition.
+  * lambda dispatch.
   */
-case class SquaredDistanceDouble(left: Expression, right: Expression)
-    extends BinaryExpression {
+case class SquaredDistanceDouble(left: Expression, right: Expression) extends DoubleVectorFold {
 
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"squared_distance expects (array<double>, array<double>), got (${l.catalogString}, ${r.catalogString})")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val l = left.eval(input)
-    if (l == null) return null
-    val r = right.eval(input)
-    if (r == null) return null
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (b.numElements() != n) return null
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val d = a.getDouble(i) - b.getDouble(i)
-      acc += d * d
-      i += 1
-    }
-    acc
+  override protected def term(x: Double, y: Double): Double = {
+    val d = x - y
+    d * d
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val leftGen = left.genCode(ctx)
-    val rightGen = right.genCode(ctx)
-    val a = leftGen.value
-    val b = rightGen.value
-    val i = ctx.freshName("i")
-    val n = ctx.freshName("n")
+  override protected def accumulateCode(
+      ctx: CodegenContext,
+      acc: String,
+      x: String,
+      y: String): String = {
     val d = ctx.freshName("d")
-    val code =
-      code"""
-        ${leftGen.code}
-        boolean ${ev.isNull} = true;
-        double ${ev.value} = 0.0;
-        if (!${leftGen.isNull}) {
-          ${rightGen.code}
-          if (!${rightGen.isNull}) {
-            final int $n = $a.numElements();
-            if ($b.numElements() == $n) {
-              ${ev.isNull} = false;
-              for (int $i = 0; $i < $n; $i++) {
-                if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-                final double $d = $a.getDouble($i) - $b.getDouble($i);
-                ${ev.value} += $d * $d;
-              }
-            }
-          }
-        }
-      """
-    ev.copy(code = code)
+    s"final double $d = $x - $y; $acc += $d * $d;"
   }
 
   override protected def withNewChildrenInternal(

@@ -1243,31 +1243,24 @@ object Dedup {
     * total order — so the candidate join runs over prefix postings
     * only, and Σ df² is paid only on the rare tail the ordering
     * steered the prefixes toward, not on stop-shingles (the same
-    * skew d13 caps away, avoided here by construction). The
-    * global df-rank window is VOCABULARY-sized (the t-family bound:
-    * shingle types, not rows) and ⌈θ·n⌉ is exact integer
+    * skew d13 caps away, avoided here by construction). The shared
+    * order is (df asc, h asc), applied inside each doc's own position
+    * window, so no window spans the vocabulary; ⌈θ·n⌉ is exact integer
     * `(n + 1) div 2` at θ = 0.5. Verify is [[jaccardVerify]] on the
     * full hash sets.
     */
   def d23AllPairsPrefix(s: SparkSession, dir: String): DataFrame = {
     val sh = docsWithShingles(s, dir, 3).localCheckpoint() // postings + both verify sides
     val postings = sh.select(col("doc_id"), explode(col("hs")).as("h"))
-    val rank = postings
-      .groupBy(col("h"))
-      .agg(count(lit(1)).as("df"))
-      .withColumn(
-        "rk",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window.orderBy(col("df").asc, col("h").asc)))
-      .select(col("h"), col("rk"))
+    val df = postings.groupBy(col("h")).agg(count(lit(1)).as("df"))
     val prefix = postings
-      .join(rank, "h")
+      .join(df, "h")
       .withColumn(
         "pos",
         row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy(col("doc_id"))
-            .orderBy(col("rk"))))
+            .orderBy(col("df").asc, col("h").asc)))
       .join(sh.select(col("doc_id"), size(col("hs")).as("n")), "doc_id")
       // prefix length n − ⌈θn⌉ + 1 with θ = 0.5: ⌈n/2⌉ = (n+1) div 2
       .filter(col("pos") <= col("n") - expr("(n + 1) div 2") + 1)

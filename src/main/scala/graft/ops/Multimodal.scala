@@ -358,6 +358,42 @@ object Multimodal {
     */
   final case class FrameEnergiesLen(doc_id: Long, nb: Long, energies: Array[Long])
 
+  /** Frame energies of every media payload, as (doc_id, energies):
+    * 200-byte frames, decoded once per payload inside `mapPartitions`
+    * (the codec contract). Shared by m8, m17 and m21.
+    */
+  private def frameEnergies(s: SparkSession, dir: String, codecs: Codec.Provider): DataFrame = {
+    import s.implicits._
+    media(s, dir)
+      .select(col("doc_id"), col("payload"))
+      .as[AudioRow]
+      .mapPartitions { rows =>
+        val dec = codecs.openAudioAnalyzer(frameLen = 200, silenceMeanByte = 92)
+        rows.map(r => FrameEnergies(r.doc_id, dec.frameEnergies(r.payload)))
+      }
+      .toDF()
+  }
+
+  /** m8's scene cuts, shared with m21: one (doc_id, i, e) row per frame
+    * with the scene number it falls in — a new scene starts where the
+    * energy moves more than 1000 from the previous frame's, and `scene`
+    * counts the cuts so far along the doc's timeline.
+    */
+  private def sceneFrames(energies: DataFrame): DataFrame = {
+    val theta = 1000L
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("doc_id")
+      .orderBy("i")
+    energies
+      .select(col("doc_id"), posexplode(col("energies")).as(Seq("i", "e")))
+      .withColumn("prev", lag(col("e"), 1).over(w))
+      .withColumn(
+        "cut",
+        (col("prev").isNotNull && abs(col("e") - col("prev")) > theta)
+          .cast("long"))
+      .withColumn("scene", sum(col("cut")).over(w))
+  }
+
   /** m8 — scene segmentation for video-shaped media: cut the frame
     * timeline where consecutive frame energies jump by more than a
     * threshold, then report per-title scene statistics. The shape is
@@ -380,24 +416,7 @@ object Multimodal {
       s: SparkSession,
       dir: String,
       codecs: Codec.Provider = Codec.Stub): DataFrame = {
-    import s.implicits._
-    val theta = 1000L
-    val ds = media(s, dir).select(col("doc_id"), col("payload")).as[AudioRow]
-    val energies = ds.mapPartitions { rows =>
-      val dec = codecs.openAudioAnalyzer(frameLen = 200, silenceMeanByte = 92)
-      rows.map(r => FrameEnergies(r.doc_id, dec.frameEnergies(r.payload)))
-    }.toDF()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id")
-      .orderBy("i")
-    energies
-      .select(col("doc_id"), posexplode(col("energies")).as(Seq("i", "e")))
-      .withColumn("prev", lag(col("e"), 1).over(w))
-      .withColumn(
-        "cut",
-        (col("prev").isNotNull && abs(col("e") - col("prev")) > theta)
-          .cast("long"))
-      .withColumn("scene", sum(col("cut")).over(w))
+    sceneFrames(frameEnergies(s, dir, codecs))
       .groupBy(col("doc_id"), col("scene"))
       .agg(count(lit(1)).as("len"))
       .groupBy(col("doc_id"))
@@ -409,87 +428,15 @@ object Multimodal {
       .orderBy("doc_id")
   }
 
-  /** m9 — chunk-level storage dedup ratio: what a content-addressed
-    * store would actually SAVE per source feed — m5 finds which blobs
-    * share regions; this prices it (total chunk bytes vs bytes after
-    * fingerprint dedup, per source, in exact integer permille). The
-    * content-defined boundaries are the point: an insertion shifts
-    * only its own chunk, so shared runs between re-encoded/extended
-    * payloads still land on identical fingerprints — fixed-size
-    * blocks would lose alignment after the first edit. Chunk length
-    * rides the fingerprint row (same content ⇒ same length; min() is
-    * pure determinism hygiene), so the rollup never re-reads
-    * payloads. At 100 TB the fingerprint table IS the store index:
-    * one (source, fp) exchange of 16-byte keys prices the entire
-    * dedup opportunity without moving a single payload byte.
+  /** The content-defined chunk table m9 and m12 share: every document
+    * of at least 8 characters cut where its rolling fingerprint (window
+    * 8) hits 0 mod 32, one (doc_id, source, fp, len) row per chunk,
+    * `fp` the chunk's md5.
     */
-  def m9ChunkDedupRatio(s: SparkSession, dir: String): DataFrame = {
+  private def contentChunks(s: SparkSession, dir: String): DataFrame = {
     val w = 8
     val modulus = 32
-    val chunks = Tables
-      .documents(s, dir)
-      .filter(length(col("text")) >= w)
-      .select(
-        col("source"),
-        col("text"),
-        graft.functions.CdcCutPoints
-          .cdcCutPoints(col("text"), w, modulus)
-          .as("cuts"))
-      .select(
-        col("source"),
-        col("text"),
-        concat(array(lit(1)), col("cuts")).as("starts"),
-        concat(col("cuts"), array(length(col("text")) + 1)).as("ends"))
-      .select(
-        col("source"),
-        explode(
-          transform(
-            sequence(lit(1), size(col("starts"))),
-            j =>
-              struct(
-                md5(
-                  col("text").substr(
-                    element_at(col("starts"), j),
-                    element_at(col("ends"), j) - element_at(col("starts"), j)))
-                  .as("fp"),
-                (element_at(col("ends"), j) - element_at(col("starts"), j))
-                  .cast("long")
-                  .as("len")))).as("c"))
-      .select(col("source"), col("c.fp").as("fp"), col("c.len").as("len"))
-    val totals = chunks
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_chunks"), sum(col("len")).as("bytes_total"))
-    val unique = chunks
-      .groupBy(col("source"), col("fp"))
-      .agg(min(col("len")).as("len"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_unique"), sum(col("len")).as("bytes_unique"))
-    totals
-      .join(unique, "source")
-      .withColumn(
-        "saved_permille",
-        expr("((bytes_total - bytes_unique) * 1000) div bytes_total"))
-      .orderBy("source")
-  }
-
-  /** m12 — content-addressed store GC planner: given a deletion set
-    * (docs with `doc_id % 7 = 0` — a retention policy stand-in), which
-    * chunks does the per-source dedup store actually FREE, and how
-    * many bytes? A chunk is freed only when its LAST referencing doc
-    * dies — the mark-sweep rule every content-addressed store (and
-    * every dedup'd training-corpus blob cache) runs before reclaiming
-    * space; deleting a doc whose chunks are shared reclaims nothing.
-    * Same content-defined chunking as m5/m9 (boundaries follow
-    * content, so shared regions share fingerprints). Exact integers
-    * end-to-end. Plan: ONE (source, fp) exchange carrying 16-byte
-    * keys + two counts — refcount math never re-reads payloads, so at
-    * 100 TB the GC plan costs one fingerprint-table pass, which is
-    * the point of planning deletes on the index instead of the store.
-    */
-  def m12ChunkGc(s: SparkSession, dir: String): DataFrame = {
-    val w = 8
-    val modulus = 32
-    val chunks = Tables
+    Tables
       .documents(s, dir)
       .filter(length(col("text")) >= w)
       .select(
@@ -522,6 +469,56 @@ object Multimodal {
                   .cast("long")
                   .as("len")))).as("c"))
       .select(col("doc_id"), col("source"), col("c.fp").as("fp"), col("c.len").as("len"))
+  }
+
+  /** m9 — chunk-level storage dedup ratio: what a content-addressed
+    * store would actually SAVE per source feed — m5 finds which blobs
+    * share regions; this prices it (total chunk bytes vs bytes after
+    * fingerprint dedup, per source, in exact integer permille). The
+    * content-defined boundaries are the point: an insertion shifts
+    * only its own chunk, so shared runs between re-encoded/extended
+    * payloads still land on identical fingerprints — fixed-size
+    * blocks would lose alignment after the first edit. Chunk length
+    * rides the fingerprint row (same content ⇒ same length; min() is
+    * pure determinism hygiene), so the rollup never re-reads
+    * payloads. At 100 TB the fingerprint table IS the store index:
+    * one (source, fp) exchange of 16-byte keys prices the entire
+    * dedup opportunity without moving a single payload byte.
+    */
+  def m9ChunkDedupRatio(s: SparkSession, dir: String): DataFrame = {
+    val chunks = contentChunks(s, dir)
+    val totals = chunks
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_chunks"), sum(col("len")).as("bytes_total"))
+    val unique = chunks
+      .groupBy(col("source"), col("fp"))
+      .agg(min(col("len")).as("len"))
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_unique"), sum(col("len")).as("bytes_unique"))
+    totals
+      .join(unique, "source")
+      .withColumn(
+        "saved_permille",
+        expr("((bytes_total - bytes_unique) * 1000) div bytes_total"))
+      .orderBy("source")
+  }
+
+  /** m12 — content-addressed store GC planner: given a deletion set
+    * (docs with `doc_id % 7 = 0` — a retention policy stand-in), which
+    * chunks does the per-source dedup store actually FREE, and how
+    * many bytes? A chunk is freed only when its LAST referencing doc
+    * dies — the mark-sweep rule every content-addressed store (and
+    * every dedup'd training-corpus blob cache) runs before reclaiming
+    * space; deleting a doc whose chunks are shared reclaims nothing.
+    * Same content-defined chunking as m5/m9 (boundaries follow
+    * content, so shared regions share fingerprints). Exact integers
+    * end-to-end. Plan: ONE (source, fp) exchange carrying 16-byte
+    * keys + two counts — refcount math never re-reads payloads, so at
+    * 100 TB the GC plan costs one fingerprint-table pass, which is
+    * the point of planning deletes on the index instead of the store.
+    */
+  def m12ChunkGc(s: SparkSession, dir: String): DataFrame = {
+    val chunks = contentChunks(s, dir)
     chunks
       .groupBy(col("source"), col("fp"))
       .agg(
@@ -861,13 +858,7 @@ object Multimodal {
       s: SparkSession,
       dir: String,
       codecs: Codec.Provider = Codec.Stub): DataFrame = {
-    import s.implicits._
-    val ds = media(s, dir).select(col("doc_id"), col("payload")).as[AudioRow]
-    val energies = ds.mapPartitions { rows =>
-      val dec = codecs.openAudioAnalyzer(frameLen = 200, silenceMeanByte = 92)
-      rows.map(r => FrameEnergies(r.doc_id, dec.frameEnergies(r.payload)))
-    }.toDF()
-    energies
+    frameEnergies(s, dir, codecs)
       .select(
         col("doc_id"),
         size(col("energies")).cast("long").as("n_frames"),
@@ -1112,24 +1103,7 @@ object Multimodal {
       s: SparkSession,
       dir: String,
       codecs: Codec.Provider = Codec.Stub): DataFrame = {
-    import s.implicits._
-    val theta = 1000L
-    val ds = media(s, dir).select(col("doc_id"), col("payload")).as[AudioRow]
-    val energies = ds.mapPartitions { rows =>
-      val dec = codecs.openAudioAnalyzer(frameLen = 200, silenceMeanByte = 92)
-      rows.map(r => FrameEnergies(r.doc_id, dec.frameEnergies(r.payload)))
-    }.toDF()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id")
-      .orderBy("i")
-    energies
-      .select(col("doc_id"), posexplode(col("energies")).as(Seq("i", "e")))
-      .withColumn("prev", lag(col("e"), 1).over(w))
-      .withColumn(
-        "cut",
-        (col("prev").isNotNull && abs(col("e") - col("prev")) > theta)
-          .cast("long"))
-      .withColumn("scene", sum(col("cut")).over(w))
+    sceneFrames(frameEnergies(s, dir, codecs))
       .groupBy(col("doc_id"), col("scene"))
       .agg(
         count(lit(1)).as("n_frames"),

@@ -2554,20 +2554,23 @@ object Relational {
     (edges, outdeg, outdeg.count())
   }
 
-  def q90PagerankTrade(s: SparkSession, dir: String): DataFrame = {
-    val scale = 1000000000000L // 10^12 fixed-point
-    val (edges, outdeg, n) = tradeGraph(s, dir)
-    val base = scale * 15L / (100L * n) // (1-damping)/N teleport mass, floored once
-    val edgesDeg = edges.join(outdeg, "src") // lazy: outdeg broadcast-joins per round
-    var rank = outdeg.select(col("src").as("node"), lit(scale / n).as("rank"))
-    for (_ <- 1 to 3) {
-      rank = edgesDeg
-        .join(rank, edgesDeg("src") === rank("node"))
-        .select(col("dst"), expr("(rank * 85) div (100 * outdeg)").as("c"))
-        .groupBy(col("dst"))
-        .agg((lit(base) + sum(col("c"))).as("rank"))
-        .select(col("dst").as("node"), col("rank"))
-    }
+  /** One fixed-point PageRank round over `edgesDeg` (src, dst, outdeg)
+    * from `rank` (node, rank): each node sends (rank·85) div
+    * (100·outdeg) along its edges and every receiver's new rank is
+    * `base` plus what it received, as (dst, nrank). q90 and q97 share
+    * it; each keeps its own loop.
+    */
+  private def pagerankStep(edgesDeg: DataFrame, rank: DataFrame, base: Long): DataFrame =
+    edgesDeg
+      .join(rank, edgesDeg("src") === rank("node"))
+      .select(col("dst"), expr("(rank * 85) div (100 * outdeg)").as("c"))
+      .groupBy(col("dst"))
+      .agg((lit(base) + sum(col("c"))).as("nrank"))
+
+  /** The 25 highest-ranked nodes of a PageRank table (node, rank) as
+    * (kind, entity_key, rank_fp): even nodes are customers, odd ones
+    * suppliers. */
+  private def pagerankTop25(rank: DataFrame): DataFrame =
     rank
       .select(
         when(col("node") % 2L === 0L, lit("customer"))
@@ -2577,6 +2580,16 @@ object Relational {
         col("rank").as("rank_fp"))
       .orderBy(col("rank_fp").desc, col("kind"), col("entity_key"))
       .limit(25)
+
+  def q90PagerankTrade(s: SparkSession, dir: String): DataFrame = {
+    val scale = 1000000000000L // 10^12 fixed-point
+    val (edges, outdeg, n) = tradeGraph(s, dir)
+    val base = scale * 15L / (100L * n) // (1-damping)/N teleport mass, floored once
+    val edgesDeg = edges.join(outdeg, "src") // lazy: outdeg broadcast-joins per round
+    var rank = outdeg.select(col("src").as("node"), lit(scale / n).as("rank"))
+    for (_ <- 1 to 3)
+      rank = pagerankStep(edgesDeg, rank, base).select(col("dst").as("node"), col("nrank").as("rank"))
+    pagerankTop25(rank)
   }
 
   /** q97 — convergence-DETECTED PageRank: q90's fixed-point algebra
@@ -2610,11 +2623,7 @@ object Relational {
     var delta = Long.MaxValue
     var rounds = 0
     while (delta > eps && rounds < maxRounds) {
-      val next = edgesDeg
-        .join(rank, edgesDeg("src") === rank("node"))
-        .select(col("dst"), expr("(rank * 85) div (100 * outdeg)").as("c"))
-        .groupBy(col("dst"))
-        .agg((lit(base) + sum(col("c"))).as("nrank"))
+      val next = pagerankStep(edgesDeg, rank, base)
         .join(rank.select(col("node"), col("rank").as("old")), col("dst") === col("node"))
         .select(col("dst").as("node"), col("nrank").as("rank"), abs(col("nrank") - col("old")).as("d"))
         .localCheckpoint()
@@ -2622,15 +2631,7 @@ object Relational {
       rank = next.select(col("node"), col("rank"))
       rounds += 1
     }
-    rank
-      .select(
-        when(col("node") % 2L === 0L, lit("customer"))
-          .otherwise(lit("supplier"))
-          .as("kind"),
-        expr("node div 2").as("entity_key"),
-        col("rank").as("rank_fp"))
-      .orderBy(col("rank_fp").desc, col("kind"), col("entity_key"))
-      .limit(25)
+    pagerankTop25(rank)
       .withColumn("n_rounds", lit(rounds.toLong))
       .withColumn("final_l1_delta", lit(delta))
   }
@@ -3190,6 +3191,16 @@ object Relational {
       .unionAll(batch(2L, "D", o.filter(col("k") % 20 === 2).withColumn("cents", lit(null).cast("long"))))
       .unionAll(batch(3L, "I", o.filter(col("k") % 4 === 0)))
       .unionAll(batch(4L, "U", o.filter(col("k") % 40 === 22).withColumn("cents", col("cents") + 999L)))
+    cdcApply(base, log)
+  }
+
+  /** Log compaction and rollup, shared by q102 and the streaming gate
+    * q148: the change log (k, seq, op, cents) reduces to each key's
+    * last image by seq, the base (k, cents) keeps the keys the log never
+    * touched, images that are not deletes union back in, and the final
+    * state rolls up into 10 buckets of k (count and exact cents).
+    */
+  private[graft] def cdcApply(base: DataFrame, log: DataFrame): DataFrame = {
     val latest = log
       .groupBy(col("k"))
       .agg(max_by(struct(col("op"), col("cents")), col("seq")).as("last"))
@@ -3202,6 +3213,84 @@ object Relational {
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents_total"))
       .orderBy("bucket")
   }
+
+  /** The kNN co-sourcing edge list q103, q111, q116 and q208 share:
+    * [[knnSelections]]' top-k selections, their undirected union as
+    * (x < y) edges.
+    */
+  private[graft] def knnEdges(s: SparkSession, dir: String, k: Int): DataFrame =
+    knnSelections(s, dir, k)
+      .select(least(col("u"), col("v")).as("x"), greatest(col("u"), col("v")).as("y"))
+      .distinct()
+
+  /** Each supplier's k strongest co-sourcing partners, directed, as
+    * (u, v, c): c is the number of distinct parts u and v both ship,
+    * ranked per u by (c desc, v asc). [[knnEdges]] and q107 collapse
+    * the selections into undirected edges, each its own way.
+    *
+    * Distinct (s, p) pairs, co-part pair counts, per-node top-k
+    * selection. ONE exchange serves dedup AND the self-join:
+    * repartition on p, then dropDuplicates —
+    * HashPartitioning(p) satisfies the (s, p) dedup clustering (all
+    * (p, ·) co-located) and is exactly the join's requirement on BOTH
+    * sides, so EnsureRequirements plants no further shuffle. The naive
+    * `.distinct()` partitions on (s, p) and forces a second p-exchange
+    * per join side — measured 3.15 → 2.19 s solo at sf0.1.
+    *
+    * Deliberately the SELF-JOIN form. The tempting "one exchange"
+    * alternative — groupBy(part) + sort_array(collect_list) + a
+    * nested transform/slice pair explosion — measured 4.72 s solo at
+    * sf0.1 vs 3.15 s for this join: each lambda slice() copies a
+    * sub-array, so the explosion does O(deg²) allocations in
+    * interpreted HigherOrderFunction code, losing more than the
+    * second sp exchange costs. The codegen'd hash join streams the
+    * same Σ deg² pair rows with zero per-pair allocation.
+    */
+  private def knnSelections(s: SparkSession, dir: String, k: Int): DataFrame = {
+    val sp = Tables
+      .lineitem(s, dir)
+      .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
+      .repartition(col("p"))
+      .dropDuplicates("s", "p")
+    val pairs = sp
+      .as("a")
+      .join(sp.as("b"), col("a.p") === col("b.p") && col("a.s") < col("b.s"))
+      .groupBy(col("a.s").as("sa"), col("b.s").as("sb"))
+      .agg(count(lit(1)).as("c"))
+    val directed = pairs
+      .select(col("sa").as("u"), col("sb").as("v"), col("c"))
+      .unionAll(pairs.select(col("sb").as("u"), col("sa").as("v"), col("c")))
+    val win = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("u"))
+      .orderBy(col("c").desc, col("v").asc)
+    directed
+      .withColumn("rk", row_number().over(win))
+      .filter(col("rk") <= k)
+  }
+
+  /** Triangles through each node of an undirected (x < y) edge list,
+    * as (suppkey, n_triangles): the oriented two-path x→y→z closed by
+    * the edge (x, z) finds each triangle once, and each of its three
+    * corners counts it. Shared by q103, q107 and q116.
+    */
+  private def trianglesPerNode(edges: DataFrame): DataFrame =
+    edges
+      .as("e1")
+      .join(edges.as("e2"), col("e1.y") === col("e2.x"))
+      .join(edges.as("e3"), col("e1.x") === col("e3.x") && col("e2.y") === col("e3.y"))
+      .select(col("e1.x").as("a"), col("e1.y").as("b"), col("e2.y").as("cc"))
+      .select(explode(array(col("a"), col("b"), col("cc"))).as("suppkey"))
+      .groupBy(col("suppkey"))
+      .agg(count(lit(1)).as("n_triangles"))
+
+  /** Degree of each node of an undirected edge list (x, y), as
+    * (suppkey, deg). Shared by q107 and q116. */
+  private def nodeDegrees(edges: DataFrame): DataFrame =
+    edges
+      .select(col("x").as("suppkey"))
+      .unionAll(edges.select(col("y").as("suppkey")))
+      .groupBy(col("suppkey"))
+      .agg(count(lit(1)).as("deg"))
 
   /** q103 — kNN-graph triangle census: supplier co-sourcing strength
     * (distinct parts two suppliers both ship) is a dense similarity
@@ -3226,61 +3315,10 @@ object Relational {
     * everything downstream is node-sized. Emits the 50 most
     * triangle-central suppliers under a total order.
     */
-  /** The kNN co-sourcing edge list q103/q111 share: distinct (s, p)
-    * pairs, co-part pair counts, per-node top-k selection, undirected
-    * union as (x < y) edges. ONE exchange serves dedup AND the
-    * self-join: repartition on p, then dropDuplicates —
-    * HashPartitioning(p) satisfies the (s, p) dedup clustering (all
-    * (p, ·) co-located) and is exactly the join's requirement on BOTH
-    * sides, so EnsureRequirements plants no further shuffle. The naive
-    * `.distinct()` partitions on (s, p) and forces a second p-exchange
-    * per join side — measured 3.15 → 2.19 s solo at sf0.1.
-    *
-    * Deliberately the SELF-JOIN form. The tempting "one exchange"
-    * alternative — groupBy(part) + sort_array(collect_list) + a
-    * nested transform/slice pair explosion — measured 4.72 s solo at
-    * sf0.1 vs 3.15 s for this join: each lambda slice() copies a
-    * sub-array, so the explosion does O(deg²) allocations in
-    * interpreted HigherOrderFunction code, losing more than the
-    * second sp exchange costs. The codegen'd hash join streams the
-    * same Σ deg² pair rows with zero per-pair allocation.
-    */
-  private[graft] def knnEdges(s: SparkSession, dir: String, k: Int): DataFrame = {
-    val sp = Tables
-      .lineitem(s, dir)
-      .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
-      .repartition(col("p"))
-      .dropDuplicates("s", "p")
-    val pairs = sp
-      .as("a")
-      .join(sp.as("b"), col("a.p") === col("b.p") && col("a.s") < col("b.s"))
-      .groupBy(col("a.s").as("sa"), col("b.s").as("sb"))
-      .agg(count(lit(1)).as("c"))
-    val directed = pairs
-      .select(col("sa").as("u"), col("sb").as("v"), col("c"))
-      .unionAll(pairs.select(col("sb").as("u"), col("sa").as("v"), col("c")))
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("u"))
-      .orderBy(col("c").desc, col("v").asc)
-    directed
-      .withColumn("rk", row_number().over(win))
-      .filter(col("rk") <= k)
-      .select(least(col("u"), col("v")).as("x"), greatest(col("u"), col("v")).as("y"))
-      .distinct()
-  }
-
   def q103KnnTriangles(s: SparkSession, dir: String): DataFrame = {
     val edges = knnEdges(s, dir, 5)
       .localCheckpoint() // read three times by the triangle join
-    val tri = edges
-      .as("e1")
-      .join(edges.as("e2"), col("e1.y") === col("e2.x"))
-      .join(edges.as("e3"), col("e1.x") === col("e3.x") && col("e2.y") === col("e3.y"))
-      .select(col("e1.x").as("a"), col("e1.y").as("b"), col("e2.y").as("cc"))
-    tri
-      .select(explode(array(col("a"), col("b"), col("cc"))).as("suppkey"))
-      .groupBy(col("suppkey"))
-      .agg(count(lit(1)).as("n_triangles"))
+    trianglesPerNode(edges)
       .orderBy(desc("n_triangles"), col("suppkey"))
       .limit(50)
   }
@@ -3330,44 +3368,13 @@ object Relational {
   def q107KnnHubTrim(s: SparkSession, dir: String): DataFrame = {
     val k = 5
     val cap = 2 * k
-    val sp = Tables
-      .lineitem(s, dir)
-      .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
-      .repartition(col("p"))
-      .dropDuplicates("s", "p")
-    val pairs = sp
-      .as("a")
-      .join(sp.as("b"), col("a.p") === col("b.p") && col("a.s") < col("b.s"))
-      .groupBy(col("a.s").as("sa"), col("b.s").as("sb"))
-      .agg(count(lit(1)).as("c"))
-    val directed = pairs
-      .select(col("sa").as("u"), col("sb").as("v"), col("c"))
-      .unionAll(pairs.select(col("sb").as("u"), col("sa").as("v"), col("c")))
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("u"))
-      .orderBy(col("c").desc, col("v").asc)
-    val und = directed
-      .withColumn("rk", row_number().over(win))
-      .filter(col("rk") <= k)
+    val und = knnSelections(s, dir, k)
       .select(least(col("u"), col("v")).as("x"), greatest(col("u"), col("v")).as("y"), col("c"))
       .groupBy(col("x"), col("y"))
       .agg(max(col("c")).as("c"))
     val edges = hubTrim(und, cap).localCheckpoint() // read 4× below
-    val deg = edges
-      .select(col("x").as("suppkey"))
-      .unionAll(edges.select(col("y").as("suppkey")))
-      .groupBy(col("suppkey"))
-      .agg(count(lit(1)).as("deg"))
-    val tri = edges
-      .as("e1")
-      .join(edges.as("e2"), col("e1.y") === col("e2.x"))
-      .join(edges.as("e3"), col("e1.x") === col("e3.x") && col("e2.y") === col("e3.y"))
-      .select(col("e1.x").as("a"), col("e1.y").as("b"), col("e2.y").as("cc"))
-    tri
-      .select(explode(array(col("a"), col("b"), col("cc"))).as("suppkey"))
-      .groupBy(col("suppkey"))
-      .agg(count(lit(1)).as("n_triangles"))
-      .join(deg, "suppkey")
+    trianglesPerNode(edges)
+      .join(nodeDegrees(edges), "suppkey")
       .select(col("suppkey"), col("deg"), col("n_triangles"))
       .orderBy(desc("n_triangles"), col("suppkey"))
       .limit(50)
@@ -3507,6 +3514,19 @@ object Relational {
       .orderBy("o_orderpriority")
   }
 
+  /** Event value in exact cents per (`key`, day), as (key, day, c).
+    * q113, q117 and q118 key it by user_id, q121, q123 and q138 by
+    * event_type. */
+  private def dailyCents(s: SparkSession, dir: String, key: String): DataFrame =
+    Tables
+      .events(s, dir)
+      .select(
+        col(key),
+        to_date(col("ts")).as("day"),
+        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+      .groupBy(col(key), col("day"))
+      .agg(sum(col("cents")).as("c"))
+
   /** q113 — exponentially-weighted recency score per user (EWMA over
     * daily spend in the trailing 16 days): the smoothing/decay
     * primitive behind activity scoring and trend dashboards, kept
@@ -3522,14 +3542,7 @@ object Relational {
     * scale.
     */
   def q113EwmaRecency(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables
-      .events(s, dir)
-      .select(
-        col("user_id"),
-        to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .groupBy(col("user_id"), col("day"))
-      .agg(sum(col("cents")).as("c"))
+    val daily = dailyCents(s, dir, "user_id")
     val maxd = daily.agg(max(col("day")).as("maxd"))
     val recent = daily
       .crossJoin(broadcast(maxd))
@@ -3626,23 +3639,8 @@ object Relational {
     */
   def q116ClusteringCoeff(s: SparkSession, dir: String): DataFrame = {
     val edges = knnEdges(s, dir, 5).localCheckpoint() // 3 triangle sides + degree
-    val tri = edges
-      .as("e1")
-      .join(edges.as("e2"), col("e1.y") === col("e2.x"))
-      .join(
-        edges.as("e3"),
-        col("e1.x") === col("e3.x") && col("e2.y") === col("e3.y"))
-      .select(col("e1.x").as("a"), col("e1.y").as("b"), col("e2.y").as("c"))
-    val triPerNode = tri
-      .select(explode(array(col("a"), col("b"), col("c"))).as("suppkey"))
-      .groupBy(col("suppkey"))
-      .agg(count(lit(1)).as("n_tri"))
-    val degree = edges
-      .select(col("x").as("suppkey"))
-      .unionAll(edges.select(col("y").as("suppkey")))
-      .groupBy(col("suppkey"))
-      .agg(count(lit(1)).as("deg"))
-    degree
+    val triPerNode = trianglesPerNode(edges).select(col("suppkey"), col("n_triangles").as("n_tri"))
+    nodeDegrees(edges)
       .filter(col("deg") >= 2)
       .join(triPerNode, Seq("suppkey"), "left")
       .withColumn("n_tri", coalesce(col("n_tri"), lit(0L)))
@@ -3672,14 +3670,7 @@ object Relational {
     * one data-sized exchange total.
     */
   def q117MaxDrawdown(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables
-      .events(s, dir)
-      .select(
-        col("user_id"),
-        to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .groupBy(col("user_id"), col("day"))
-      .agg(sum(col("cents")).as("c"))
+    val daily = dailyCents(s, dir, "user_id")
     val byDay = Window.partitionBy(col("user_id")).orderBy(col("day"))
     val byDeficit = Window
       .partitionBy(col("user_id"))
@@ -3933,14 +3924,7 @@ object Relational {
     * (rare) user whose span is the whole history.
     */
   def q118GapFillLocf(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables
-      .events(s, dir)
-      .select(
-        col("user_id"),
-        to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .groupBy(col("user_id"), col("day"))
-      .agg(sum(col("cents")).as("c"))
+    val daily = dailyCents(s, dir, "user_id")
     val cal = daily
       .groupBy(col("user_id"))
       .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
@@ -4059,14 +4043,7 @@ object Relational {
     * rows.
     */
   def q121Autocorr(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables
-      .events(s, dir)
-      .select(
-        col("event_type"),
-        to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("cents")).as("c"))
+    val d = dailyCents(s, dir, "event_type")
     val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
     d.withColumn("l1", lag(col("c"), 1).over(w))
       .withColumn("l7", lag(col("c"), 7).over(w))
@@ -4143,14 +4120,7 @@ object Relational {
     * aggregate touches data-sized rows.
     */
   def q123SeasonalDow(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables
-      .events(s, dir)
-      .select(
-        col("event_type"),
-        to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("cents")).as("c"))
+    val d = dailyCents(s, dir, "event_type")
       .withColumn("dow", expr("extract(DAYOFWEEK_ISO FROM day)").cast("long"))
     val overall = d
       .groupBy(col("event_type"))
@@ -4473,6 +4443,18 @@ object Relational {
       .orderBy("wk")
   }
 
+  /** Order revenue in exact cents per (priority, customer), as
+    * (prio, o_custkey, r). Shared by q131, q133 and q137. */
+  private def prioCustomerRevenue(s: SparkSession, dir: String): DataFrame =
+    Tables
+      .orders(s, dir)
+      .select(
+        col("o_orderpriority").as("prio"),
+        col("o_custkey"),
+        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
+      .groupBy(col("prio"), col("o_custkey"))
+      .agg(sum(col("cents")).as("r"))
+
   /** q131 — revenue concentration (Herfindahl–Hirschman index) per
     * order priority: Σ shareᵢ² over each customer's revenue share —
     * the one-number market-concentration diagnostic (1/HHI is the
@@ -4485,14 +4467,7 @@ object Relational {
     * data-sized rows after the first exchange.
     */
   def q131RevenueHhi(s: SparkSession, dir: String): DataFrame = {
-    val rev = Tables
-      .orders(s, dir)
-      .select(
-        col("o_orderpriority").as("prio"),
-        col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .groupBy(col("prio"), col("o_custkey"))
-      .agg(sum(col("cents")).as("r"))
+    val rev = prioCustomerRevenue(s, dir)
     rev
       .groupBy(col("prio"))
       .agg(
@@ -4557,14 +4532,7 @@ object Relational {
     * rank reaching 80%" is a conditional min, not a second pass.
     */
   def q133ParetoPoint(s: SparkSession, dir: String): DataFrame = {
-    val rev = Tables
-      .orders(s, dir)
-      .select(
-        col("o_orderpriority").as("prio"),
-        col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .groupBy(col("prio"), col("o_custkey"))
-      .agg(sum(col("cents")).as("r"))
+    val rev = prioCustomerRevenue(s, dir)
     val w = Window
       .partitionBy(col("prio"))
       .orderBy(col("r").desc, col("o_custkey").asc)
@@ -4732,14 +4700,7 @@ object Relational {
     * customer-count-sized rows, a 5-group rollup.
     */
   def q137GiniRevenue(s: SparkSession, dir: String): DataFrame = {
-    val rev = Tables
-      .orders(s, dir)
-      .select(
-        col("o_orderpriority").as("prio"),
-        col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .groupBy(col("prio"), col("o_custkey"))
-      .agg(sum(col("cents")).as("r"))
+    val rev = prioCustomerRevenue(s, dir)
     val w = Window
       .partitionBy(col("prio"))
       .orderBy(col("r").asc, col("o_custkey").asc)
@@ -4775,14 +4736,7 @@ object Relational {
     * window — calendar-bounded after the first exchange.
     */
   def q138ForecastBacktest(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables
-      .events(s, dir)
-      .select(
-        col("event_type"),
-        to_date(col("ts")).as("day"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("cents")).as("c"))
+    val d = dailyCents(s, dir, "event_type")
     val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
     d.withColumn("l1", lag(col("c"), 1).over(w))
       .withColumn("l7", lag(col("c"), 7).over(w))
@@ -4964,6 +4918,27 @@ object Relational {
       .orderBy("bucket")
   }
 
+  /** The event-value histogram q142 and q143 test: per distinct value
+    * v in exact cents, how many events fall on or before the middle day
+    * of the events' date range (a) and how many after it (b).
+    */
+  private def halvesByValue(s: SparkSession, dir: String): DataFrame = {
+    val mid = Tables
+      .events(s, dir)
+      .agg(
+        min(to_date(col("ts"))).as("d0"),
+        max(to_date(col("ts"))).as("d1"))
+      .select(expr("date_add(d0, CAST(datediff(d1, d0) div 2 AS INT))").as("mid"))
+    Tables
+      .events(s, dir)
+      .crossJoin(broadcast(mid))
+      .select(
+        floor(col("value") * 100 + 0.5).cast("long").as("v"),
+        when(to_date(col("ts")) <= col("mid"), 1L).otherwise(0L).as("in_a"))
+      .groupBy(col("v"))
+      .agg(sum(col("in_a")).as("a"), sum(lit(1L) - col("in_a")).as("b"))
+  }
+
   /** q142 — two-sample Kolmogorov–Smirnov statistic between the time
     * halves: D = max |F₁(v) − F₂(v)| over the pooled distinct values,
     * plus WHERE the gap peaks — the third drift lens (q140 = which
@@ -4977,20 +4952,7 @@ object Relational {
     * two windows riding one ordering, a 1-row result.
     */
   def q142KsDrift(s: SparkSession, dir: String): DataFrame = {
-    val mid = Tables
-      .events(s, dir)
-      .agg(
-        min(to_date(col("ts"))).as("d0"),
-        max(to_date(col("ts"))).as("d1"))
-      .select(expr("date_add(d0, CAST(datediff(d1, d0) div 2 AS INT))").as("mid"))
-    val dist = Tables
-      .events(s, dir)
-      .crossJoin(broadcast(mid))
-      .select(
-        floor(col("value") * 100 + 0.5).cast("long").as("v"),
-        when(to_date(col("ts")) <= col("mid"), 1L).otherwise(0L).as("in_a"))
-      .groupBy(col("v"))
-      .agg(sum(col("in_a")).as("a"), sum(lit(1L) - col("in_a")).as("b"))
+    val dist = halvesByValue(s, dir)
     val byV = Window
       .orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -5032,20 +4994,7 @@ object Relational {
     */
   def q143MannWhitney(s: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val mid = Tables
-      .events(s, dir)
-      .agg(
-        min(to_date(col("ts"))).as("d0"),
-        max(to_date(col("ts"))).as("d1"))
-      .select(expr("date_add(d0, CAST(datediff(d1, d0) div 2 AS INT))").as("mid"))
-    val dist = Tables
-      .events(s, dir)
-      .crossJoin(broadcast(mid))
-      .select(
-        floor(col("value") * 100 + 0.5).cast("long").as("v"),
-        when(to_date(col("ts")) <= col("mid"), 1L).otherwise(0L).as("in_a"))
-      .groupBy(col("v"))
-      .agg(sum(col("in_a")).as("a"), sum(lit(1L) - col("in_a")).as("b"))
+    val dist = halvesByValue(s, dir)
     val wPrev = Window
       .orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -5977,18 +5926,11 @@ object Relational {
       .orderBy("prio")
   }
 
-  /** q165 — percent-of-parent hierarchical shares: every nation's
-    * revenue as basis points of its REGION and of the WORLD — the
-    * "% of parent" measure every OLAP front-end derives, as one
-    * dimension-sized window pass. The fact side collapses to (region,
-    * nation, cents) FIRST (q03's star-join machinery: dims broadcast,
-    * one combiner-friendly aggregate); shares then cross-multiply in
-    * integers over the 25-row rollup — `(cents·10⁴) div parent` on
-    * non-negative longs, exact on both engines. At 100 TB nothing
-    * after the first aggregate exceeds dimension size.
-    */
-  def q165PctOfParent(s: SparkSession, dir: String): DataFrame = {
-    val cents = Tables
+  /** Line revenue in exact cents per (region, nation) of the buying
+    * customer: the lineitem ⋈ orders ⋈ customer star collapsed onto the
+    * 25 nations. Shared by q165 and q176. */
+  private def nationCents(s: SparkSession, dir: String): DataFrame =
+    Tables
       .lineitem(s, dir)
       .select(col("l_orderkey"), floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("c"))
       .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
@@ -6008,6 +5950,19 @@ object Relational {
         col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name").as("region"), col("n_name").as("nation"))
       .agg(sum(col("c")).as("cents"))
+
+  /** q165 — percent-of-parent hierarchical shares: every nation's
+    * revenue as basis points of its REGION and of the WORLD — the
+    * "% of parent" measure every OLAP front-end derives, as one
+    * dimension-sized window pass. The fact side collapses to (region,
+    * nation, cents) FIRST (q03's star-join machinery: dims broadcast,
+    * one combiner-friendly aggregate); shares then cross-multiply in
+    * integers over the 25-row rollup — `(cents·10⁴) div parent` on
+    * non-negative longs, exact on both engines. At 100 TB nothing
+    * after the first aggregate exceeds dimension size.
+    */
+  def q165PctOfParent(s: SparkSession, dir: String): DataFrame = {
+    val cents = nationCents(s, dir)
     cents
       .select(
         col("region"),
@@ -6464,26 +6419,7 @@ object Relational {
     */
   def q176LargestRemainder(s: SparkSession, dir: String): DataFrame = {
     val budget = 10000L
-    val cents = Tables
-      .lineitem(s, dir)
-      .select(col("l_orderkey"), floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("c"))
-      .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      // customer is DATA-SCALED — deliberately unhinted (the q93/q126
-      // posture): AQE broadcasts it at fixture scale and degrades to
-      // SMJ at 100× instead of forcing a driver-OOM BroadcastExchange
-      .join(
-        Tables.customer(s, dir).select(col("c_custkey"), col("c_nationkey")),
-        col("o_custkey") === col("c_custkey"))
-      .join(
-        broadcast(Tables.nation(s, dir).select(
-          col("n_nationkey"), col("n_name"), col("n_regionkey"))),
-        col("c_nationkey") === col("n_nationkey"))
-      .join(
-        broadcast(Tables.region(s, dir).select(col("r_regionkey"), col("r_name"))),
-        col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name").as("region"), col("n_name").as("nation"))
-      .agg(sum(col("c")).as("cents"))
+    val cents = nationCents(s, dir)
     val byRegion = Window.partitionBy(col("region"))
     val q = cents
       .withColumn("total", sum(col("cents")).over(byRegion))
@@ -7684,6 +7620,32 @@ object Relational {
           .as("rho_sq"))
   }
 
+  /** The tail q199 and q203 share: the (ca < cb) candidate pairs
+    * `half` (ca, cb, shared_parts, dot) mirror to both directions, score
+    * cosine against the customers' squared norms `norms` (cust, n2), and
+    * each customer keeps its 3 nearest by (cosine desc, neighbor asc).
+    */
+  private def customerTop3(half: DataFrame, norms: DataFrame): DataFrame = {
+    val sym = half.unionAll(
+      half.select(col("cb").as("ca"), col("ca").as("cb"), col("shared_parts"), col("dot")))
+    val w = Window.partitionBy(col("ca")).orderBy(col("cos").desc, col("cb").asc)
+    sym
+      .join(norms.select(col("cust").as("ca"), col("n2").as("na")), "ca")
+      .join(norms.select(col("cust").as("cb"), col("n2").as("nb")), "cb")
+      .withColumn(
+        "cos",
+        expr("CAST(dot AS DOUBLE) / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 3)
+      .select(
+        col("ca").as("custkey"),
+        col("cb").as("neighbor"),
+        col("rank"),
+        col("shared_parts"),
+        round(col("cos"), 4).as("cosine"))
+      .orderBy("custkey", "rank")
+  }
+
   /** q199 — user-user basket similarity (the collaborative-filtering
     * neighborhood primitive): top-3 most similar customers per
     * customer by cosine over their (part, quantity) purchase vectors.
@@ -7729,24 +7691,7 @@ object Relational {
       .join(capped.as("b"), col("a.part") === col("b.part") && col("a.cust") < col("b.cust"))
       .groupBy(col("a.cust").as("ca"), col("b.cust").as("cb"))
       .agg(count(lit(1)).as("shared_parts"), sum(col("a.q") * col("b.q")).as("dot"))
-    val sym = half.unionAll(
-      half.select(col("cb").as("ca"), col("ca").as("cb"), col("shared_parts"), col("dot")))
-    val w = Window.partitionBy(col("ca")).orderBy(col("cos").desc, col("cb").asc)
-    sym
-      .join(norms.select(col("cust").as("ca"), col("n2").as("na")), "ca")
-      .join(norms.select(col("cust").as("cb"), col("n2").as("nb")), "cb")
-      .withColumn(
-        "cos",
-        expr("CAST(dot AS DOUBLE) / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(
-        col("ca").as("custkey"),
-        col("cb").as("neighbor"),
-        col("rank"),
-        col("shared_parts"),
-        round(col("cos"), 4).as("cosine"))
-      .orderBy("custkey", "rank")
+    customerTop3(half, norms)
   }
 
   /** q200 — exact SHAPLEY-VALUE attribution over the 3-channel touch
@@ -8074,24 +8019,7 @@ object Relational {
       // whole candidate-verify join pipeline (round-13 stage probe:
       // ~3 s of the query's wall was this duplicated subtree)
       .localCheckpoint()
-    val sym = half.unionAll(
-      half.select(col("cb").as("ca"), col("ca").as("cb"), col("shared_parts"), col("dot")))
-    val w = Window.partitionBy(col("ca")).orderBy(col("cos").desc, col("cb").asc)
-    sym
-      .join(norms.select(col("cust").as("ca"), col("n2").as("na")), "ca")
-      .join(norms.select(col("cust").as("cb"), col("n2").as("nb")), "cb")
-      .withColumn(
-        "cos",
-        expr("CAST(dot AS DOUBLE) / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(
-        col("ca").as("custkey"),
-        col("cb").as("neighbor"),
-        col("rank"),
-        col("shared_parts"),
-        round(col("cos"), 4).as("cosine"))
-      .orderBy("custkey", "rank")
+    customerTop3(half, norms)
   }
 
   /** q205 — exact percent_rank / cume_dist WITHOUT any window over

@@ -171,6 +171,30 @@ object Similarity {
       .orderBy("q_id", "rank")
   }
 
+  /** s3's IVF cell ranking: the K deterministic coarse centroids
+    * (every (N/K)-th vector of `all`, N=2000 fixture) broadcast against
+    * `vs`, and each vector of `vs` ranks the cells by cosine (desc, then
+    * cell asc) as `crn`. Callers keep `crn === 1` (assignment) or
+    * `crn <= nprobe` (probing). Shared by s3, s19, s21 and s24.
+    */
+  private def ivfCellRanks(all: DataFrame, vs: DataFrame, k: Int): DataFrame = {
+    val centroids = all
+      .filter(pmod(col("vec_id"), lit(125)) === 0)
+      .withColumn("cell", (col("vec_id") / 125).cast("int"))
+      // the vec_id conjunct restates cell < k on the RAW key so the
+      // standing broadcast-hint gate can SEE the K-bound (cell is
+      // derived; the gate only trusts literal ranges on id columns)
+      .filter(col("cell") < k && col("vec_id") < 125L * k)
+      .select(col("cell"), col("v").as("cv"), col("norm").as("cnorm"))
+    val byVec = Window
+      .partitionBy(col("vec_id"))
+      .orderBy(col("ccos").desc, col("cell").asc)
+    vs
+      .crossJoin(broadcast(centroids))
+      .withColumn("ccos", dot(col("v"), col("cv")) / (col("norm") * col("cnorm")))
+      .withColumn("crn", row_number().over(byVec))
+  }
+
   /** s3 — IVF (inverted-file) approximate top-k: the coarse-quantizer
     * scale path. Every corpus vector is assigned to its nearest of K
     * centroid cells; a query scores only the vectors in its `nprobe`
@@ -191,33 +215,13 @@ object Similarity {
     val k = 16
     val nprobe = 4
     val all = vecs(s, dir)
-    // deterministic coarse centroids: every (N/K)-th vector (N=2000 fixture)
-    val centroids = all
-      .filter(pmod(col("vec_id"), lit(125)) === 0)
-      .withColumn("cell", (col("vec_id") / 125).cast("int"))
-      // the vec_id conjunct restates cell < k on the RAW key so the
-      // standing broadcast-hint gate can SEE the K-bound (cell is
-      // derived; the gate only trusts literal ranges on id columns)
-      .filter(col("cell") < k && col("vec_id") < 125L * k)
-      .select(col("cell"), col("v").as("cv"), col("norm").as("cnorm"))
-
     // assign each vector to its nearest centroid cell (argmax cosine)
-    val byVec = Window
-      .partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("cell").asc)
-    val assigned = all
-      .crossJoin(broadcast(centroids))
-      .withColumn("ccos", dot(col("v"), col("cv")) / (col("norm") * col("cnorm")))
-      .withColumn("crn", row_number().over(byVec))
+    val assigned = ivfCellRanks(all, all, k)
       .filter(col("crn") === 1)
       .select(col("vec_id"), col("v"), col("norm"), col("cell"))
 
     // queries probe their nprobe closest cells
-    val queries = all
-      .filter(col("vec_id") < 20)
-      .crossJoin(broadcast(centroids))
-      .withColumn("ccos", dot(col("v"), col("cv")) / (col("norm") * col("cnorm")))
-      .withColumn("crn", row_number().over(byVec))
+    val queries = ivfCellRanks(all, all.filter(col("vec_id") < 20), k)
       .filter(col("crn") <= nprobe)
       .select(
         col("vec_id").as("q_id"),
@@ -318,6 +322,26 @@ object Similarity {
       .orderBy("vec_id")
   }
 
+  /** s6's scoring, shared with s13: every vector's cosine to each of
+    * the 8 seed centroids (the 8 lowest-id vectors, broadcast) as
+    * `scored` (vec_id, cid, cos), and the rows of `scored` that reach
+    * their vector's best cosine (ties kept; callers take min(cid)).
+    */
+  private def seedCentroidScores(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val e = vecs(s, dir)
+    val cents = e
+      .filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("v").as("c"), col("norm").as("cnorm"))
+    val scored = e
+      .crossJoin(broadcast(cents))
+      .select(
+        col("vec_id"),
+        col("cid"),
+        (dot(col("v"), col("c")) / (col("norm") * col("cnorm"))).as("cos"))
+    val best = scored.groupBy(col("vec_id")).agg(max(col("cos")).as("bc"))
+    (scored, scored.join(best, "vec_id").filter(col("cos") === col("bc")))
+  }
+
   /** s6 — nearest-centroid assignment (the IVF/k-means E-step) under
     * the exact-oracle gate: every vector is assigned to its best of 8
     * fixed seed centroids by cosine. The centroid table broadcasts (k
@@ -330,23 +354,8 @@ object Similarity {
     * product left-to-right over identical floats.
     */
   def s6CentroidAssign(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables
-      .embeddings(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-    val cents = e
-      .filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("v").as("c"), col("norm").as("cnorm"))
-    val scored = e
-      .crossJoin(broadcast(cents))
-      .select(
-        col("vec_id"),
-        col("cid"),
-        (dot(col("v"), col("c")) / (col("norm") * col("cnorm"))).as("cos"))
-    val best = scored.groupBy(col("vec_id")).agg(max(col("cos")).as("bc"))
-    scored
-      .join(best, "vec_id")
-      .filter(col("cos") === col("bc"))
+    val (_, top) = seedCentroidScores(s, dir)
+    top
       .groupBy(col("vec_id"))
       .agg(
         min(col("cid")).as("centroid_id"),
@@ -371,23 +380,8 @@ object Similarity {
     * silhouette against sampled centroids, never pairwise.
     */
   def s13ClusterQuality(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables
-      .embeddings(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-    val cents = e
-      .filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("v").as("c"), col("norm").as("cnorm"))
-    val scored = e
-      .crossJoin(broadcast(cents))
-      .select(
-        col("vec_id"),
-        col("cid"),
-        (dot(col("v"), col("c")) / (col("norm") * col("cnorm"))).as("cos"))
-    val best = scored.groupBy(col("vec_id")).agg(max(col("cos")).as("bc"))
-    val assigned = scored
-      .join(best, "vec_id")
-      .filter(col("cos") === col("bc"))
+    val (scored, top) = seedCentroidScores(s, dir)
+    val assigned = top
       .groupBy(col("vec_id"))
       .agg(min(col("cid")).as("cid"), max(col("cos")).as("own_cos"))
     val other = scored
@@ -643,6 +637,33 @@ object Similarity {
           col("embedding").cast("array<double>"),
           x => floor(x * 1000000 + 0.5).cast("double")).as("v"))
 
+  /** The k-means E-step s10's rounds and s11's search share: the exact
+    * squared L2 `d2` of every quantized vector to each centroid
+    * `(cell, c)` (broadcast) as `scored` (vec_id, cell, v, d2), and
+    * each vector's nearest cell as (vec_id, cell, bd, v). The argmin
+    * takes the s6 tie rule: the lexicographic (d2, cell) min is
+    * deterministic because cell is unique per candidate row.
+    */
+  private def nearestCells(ints: DataFrame, cents: DataFrame): (DataFrame, DataFrame) = {
+    val scored = ints
+      .crossJoin(broadcast(cents))
+      .select(
+        col("vec_id"),
+        col("cell"),
+        col("v"),
+        graft.functions.VectorOps
+          .squaredDistance(col("v"), col("c"))
+          .cast("long")
+          .as("d2"))
+    val assigned = scored
+      .groupBy(col("vec_id"))
+      .agg(
+        min(struct(col("d2"), col("cell"))).as("m"),
+        min_by(col("v"), struct(col("d2"), col("cell"))).as("v"))
+      .select(col("vec_id"), col("m.cell").as("cell"), col("m.d2").as("bd"), col("v"))
+    (scored, assigned)
+  }
+
   /** Shared Lloyd's loop for s10/s11: returns the per-round summary
     * frames and the FINAL trained centroid table (cell, c). Centroids
     * localCheckpoint per round (K rows), so consumers read a flat
@@ -658,24 +679,7 @@ object Similarity {
       .filter(pmod(col("vec_id"), lit(stride)) === 0 && col("vec_id") < k.toLong * stride)
       .select((col("vec_id") / stride).cast("int").as("cell"), col("v").as("c"))
     val rounds = (1 to iters).map { t =>
-      val scored = ints
-        .crossJoin(broadcast(cents))
-        .select(
-          col("vec_id"),
-          col("cell"),
-          col("v"),
-          graft.functions.VectorOps
-            .squaredDistance(col("v"), col("c"))
-            .cast("long")
-            .as("d2"))
-      // argmin with the s6 tie rule: lexicographic (d2, cell) min is
-      // deterministic because cell is unique per candidate row
-      val assigned = scored
-        .groupBy(col("vec_id"))
-        .agg(
-          min(struct(col("d2"), col("cell"))).as("m"),
-          min_by(col("v"), struct(col("d2"), col("cell"))).as("v"))
-        .select(col("vec_id"), col("m.cell").as("cell"), col("m.d2").as("bd"), col("v"))
+      val (_, assigned) = nearestCells(ints, cents)
       val g = assigned
         .groupBy(col("cell"))
         .agg(
@@ -723,22 +727,7 @@ object Similarity {
   def s11IvfTrainedSearch(s: SparkSession, dir: String): DataFrame = {
     val (_, cents) = kmeansRounds(s, dir)
     val ints = quantized(s, dir)
-    val scored = ints
-      .crossJoin(broadcast(cents))
-      .select(
-        col("vec_id"),
-        col("cell"),
-        col("v"),
-        graft.functions.VectorOps
-          .squaredDistance(col("v"), col("c"))
-          .cast("long")
-          .as("d2"))
-    val asg = scored
-      .groupBy(col("vec_id"))
-      .agg(
-        min(struct(col("d2"), col("cell"))).as("m"),
-        min_by(col("v"), struct(col("d2"), col("cell"))).as("v"))
-      .select(col("vec_id"), col("m.cell").as("cell"), col("v"))
+    val (scored, asg) = nearestCells(ints, cents)
     val byQ = Window.partitionBy(col("vec_id")).orderBy(col("d2").asc, col("cell").asc)
     val qp = scored
       .filter(col("vec_id") < 20)
@@ -764,33 +753,24 @@ object Similarity {
       .orderBy("q_id", "rank")
   }
 
-  /** s12 — kNN majority-vote classification: label each held-out query
-    * vector by the majority label of its k=9 nearest corpus neighbors
-    * (cosine) — the label-propagation/auto-labeling primitive a
-    * training-data pipeline runs to extend a small labeled seed over an
-    * unlabeled corpus. Out-of-sample by construction: queries
-    * (vec_id < 20) are excluded from the corpus side, so no vector
-    * votes for itself. Both rankings are totally ordered (cos desc,
-    * vec_id asc; then votes desc, label asc) so the prediction is
-    * deterministic and the oracle recomputes it exactly — ties
-    * included. Plan: the bounded query set broadcasts (the s1 shape);
-    * per-query top-k via row_number = per-partition heaps; the vote
-    * count is a |queries|×|labels| aggregate — nothing downstream of
-    * the scored join scales with the corpus.
+  /** s12's 9-NN vote, shared with s28: the `isQuery` vectors broadcast
+    * against the rest (the corpus), each query keeps its 9 nearest by
+    * (cosine desc, vec_id asc), and the winning label by (votes desc,
+    * label asc). One row per query: (q_id, true_label, label, n_votes).
     */
-  def s12KnnClassify(s: SparkSession, dir: String): DataFrame = {
+  private def knnVoteWinners(s: SparkSession, dir: String, isQuery: Column): DataFrame = {
     val e = Tables
       .embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
     val queries = e
-      .filter(col("vec_id") < 20)
+      .filter(isQuery)
       .select(
         col("vec_id").as("q_id"),
         col("label").as("true_label"),
         col("v").as("qv"),
         col("norm").as("qnorm"))
-    val corpus = e.filter(col("vec_id") >= 20)
+    val corpus = e.filter(!isQuery)
     val byCos = Window
       .partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
@@ -807,9 +787,26 @@ object Similarity {
     votes
       .withColumn("vr", row_number().over(byVotes))
       .filter(col("vr") === 1)
+  }
+
+  /** s12 — kNN majority-vote classification: label each held-out query
+    * vector by the majority label of its k=9 nearest corpus neighbors
+    * (cosine) — the label-propagation/auto-labeling primitive a
+    * training-data pipeline runs to extend a small labeled seed over an
+    * unlabeled corpus. Out-of-sample by construction: queries
+    * (vec_id < 20) are excluded from the corpus side, so no vector
+    * votes for itself. Both rankings are totally ordered (cos desc,
+    * vec_id asc; then votes desc, label asc) so the prediction is
+    * deterministic and the oracle recomputes it exactly — ties
+    * included. Plan: the bounded query set broadcasts (the s1 shape);
+    * per-query top-k via row_number = per-partition heaps; the vote
+    * count is a |queries|×|labels| aggregate — nothing downstream of
+    * the scored join scales with the corpus.
+    */
+  def s12KnnClassify(s: SparkSession, dir: String): DataFrame =
+    knnVoteWinners(s, dir, col("vec_id") < 20)
       .select(col("q_id"), col("true_label"), col("label").as("pred_label"), col("n_votes"))
       .orderBy("q_id")
-  }
 
   /** s16 — MMR (maximal marginal relevance) diversified top-k: for
     * each query, greedily pick 4 results maximizing
@@ -1046,28 +1043,10 @@ object Similarity {
     val nprobe = 4
     val all = vecs(s, dir)
       .join(Tables.embeddings(s, dir).select(col("vec_id"), col("label")), "vec_id")
-    val centroids = all
-      .filter(pmod(col("vec_id"), lit(125)) === 0)
-      .withColumn("cell", (col("vec_id") / 125).cast("int"))
-      // the vec_id conjunct restates cell < k on the RAW key so the
-      // standing broadcast-hint gate can SEE the K-bound (cell is
-      // derived; the gate only trusts literal ranges on id columns)
-      .filter(col("cell") < k && col("vec_id") < 125L * k)
-      .select(col("cell"), col("v").as("cv"), col("norm").as("cnorm"))
-    val byVec = Window
-      .partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("cell").asc)
-    val assigned = all
-      .crossJoin(broadcast(centroids))
-      .withColumn("ccos", dot(col("v"), col("cv")) / (col("norm") * col("cnorm")))
-      .withColumn("crn", row_number().over(byVec))
+    val assigned = ivfCellRanks(all, all, k)
       .filter(col("crn") === 1)
       .select(col("vec_id"), col("v"), col("norm"), col("label"), col("cell"))
-    val queries = all
-      .filter(col("vec_id") < 20)
-      .crossJoin(broadcast(centroids))
-      .withColumn("ccos", dot(col("v"), col("cv")) / (col("norm") * col("cnorm")))
-      .withColumn("crn", row_number().over(byVec))
+    val queries = ivfCellRanks(all, all.filter(col("vec_id") < 20), k)
       .filter(col("crn") <= nprobe)
       .select(
         col("vec_id").as("q_id"),
@@ -1177,21 +1156,7 @@ object Similarity {
   def s21EmbeddingDrift(s: SparkSession, dir: String): DataFrame = {
     val k = 16
     val all = vecs(s, dir)
-    val centroids = all
-      .filter(pmod(col("vec_id"), lit(125)) === 0)
-      .withColumn("cell", (col("vec_id") / 125).cast("int"))
-      // the vec_id conjunct restates cell < k on the RAW key so the
-      // standing broadcast-hint gate can SEE the K-bound (cell is
-      // derived; the gate only trusts literal ranges on id columns)
-      .filter(col("cell") < k && col("vec_id") < 125L * k)
-      .select(col("cell"), col("v").as("cv"), col("norm").as("cnorm"))
-    val byVec = Window
-      .partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("cell").asc)
-    val assigned = all
-      .crossJoin(broadcast(centroids))
-      .withColumn("ccos", dot(col("v"), col("cv")) / (col("norm") * col("cnorm")))
-      .withColumn("crn", row_number().over(byVec))
+    val assigned = ivfCellRanks(all, all, k)
       .filter(col("crn") === 1)
       .select(col("vec_id"), (col("vec_id") % 2L).as("half"), col("cell"))
     val counts = assigned
@@ -1303,35 +1268,8 @@ object Similarity {
     * per-query argmax is ≤ 9 rows. The per-query top-9 window
     * partitions by q_id — never global.
     */
-  def s28VoteCalibration(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables
-      .embeddings(s, dir)
-      .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-    val queries = e
-      .filter(col("vec_id") % 5 === 0)
-      .select(
-        col("vec_id").as("q_id"),
-        col("label").as("true_label"),
-        col("v").as("qv"),
-        col("norm").as("qnorm"))
-    val corpus = e.filter(col("vec_id") % 5 =!= 0)
-    val byCos = Window
-      .partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    val votes = corpus
-      .join(broadcast(queries))
-      .withColumn("cos", dot(col("qv"), col("v")) / (col("qnorm") * col("norm")))
-      .withColumn("rank", row_number().over(byCos))
-      .filter(col("rank") <= 9)
-      .groupBy(col("q_id"), col("true_label"), col("label"))
-      .agg(count(lit(1)).as("n_votes"))
-    val byVotes = Window
-      .partitionBy(col("q_id"))
-      .orderBy(col("n_votes").desc, col("label").asc)
-    votes
-      .withColumn("vr", row_number().over(byVotes))
-      .filter(col("vr") === 1)
+  def s28VoteCalibration(s: SparkSession, dir: String): DataFrame =
+    knnVoteWinners(s, dir, col("vec_id") % 5 === 0)
       .groupBy(col("n_votes").as("conf_votes"))
       .agg(
         count(lit(1)).as("n"),
@@ -1344,7 +1282,6 @@ object Similarity {
         expr("conf_votes * 10000 div 9").as("conf_bp"),
         expr("abs(n_correct * 10000 div n - conf_votes * 10000 div 9)").as("gap_bp"))
       .orderBy("conf_votes")
-  }
 
   /** s29 — MULTI-PROBE LSH (Lv, Josephson, Wang, Charikar & Li, VLDB
     * 2007): instead of probing only the query's own sign-bucket in
@@ -1739,22 +1676,15 @@ object Similarity {
     "s5_quantize" -> s5Quantize
   )
 
-  /** s14 — ANN recall evaluation: per query, how many of the exact
-    * top-5 (s1) the LSH index (s2) actually returned — recall@5, THE
-    * number that decides whether an approximate index is shippable
-    * (the spec-pinned recall ≥ 0.6 floor, now as an oracle-checked
-    * QUERY so the evaluation harness itself is part of the engine).
-    * Pure composition: both rankings are deterministic (fixed planes,
-    * fixed tie-breaks), so their intersection is too — the oracle
-    * replays BOTH pipelines and must hash-match per query. Plan: the
-    * two pipelines share the embeddings scan; the intersection join
-    * and per-query rollup ride query-count-sized rows.
+  /** The recall@5 harness s14, s15, s23 and s26 share: per query, how
+    * many of s1's exact top-5 the (q_id, neighbor_id) rows of `approx`
+    * hold, and that count over 5. A query `approx` misses
+    * entirely reports 0 hits.
     */
-  def s14LshRecall(s: SparkSession, dir: String): DataFrame = {
+  private def recallAt5(s: SparkSession, dir: String, approx: DataFrame): DataFrame = {
     val exact = s1KnnBruteForce(s, dir).select(col("q_id"), col("neighbor_id"))
-    val approx = s2KnnLsh(s, dir).select(col("q_id"), col("neighbor_id"))
     val hits = exact
-      .join(approx, Seq("q_id", "neighbor_id"))
+      .join(approx.select(col("q_id"), col("neighbor_id")), Seq("q_id", "neighbor_id"))
       .groupBy(col("q_id"))
       .agg(count(lit(1)).as("hits"))
     exact
@@ -1769,6 +1699,20 @@ object Similarity {
       .orderBy("q_id")
   }
 
+  /** s14 — ANN recall evaluation: per query, how many of the exact
+    * top-5 (s1) the LSH index (s2) actually returned — recall@5, THE
+    * number that decides whether an approximate index is shippable
+    * (the spec-pinned recall ≥ 0.6 floor, now as an oracle-checked
+    * QUERY so the evaluation harness itself is part of the engine).
+    * Pure composition: both rankings are deterministic (fixed planes,
+    * fixed tie-breaks), so their intersection is too — the oracle
+    * replays BOTH pipelines and must hash-match per query. Plan: the
+    * two pipelines share the embeddings scan; the intersection join
+    * and per-query rollup ride query-count-sized rows.
+    */
+  def s14LshRecall(s: SparkSession, dir: String): DataFrame =
+    recallAt5(s, dir, s2KnnLsh(s, dir))
+
   /** s15 — IVF recall evaluation: s14's harness pointed at the
     * coarse-quantizer index (s3, nprobe=4) instead of the hyperplane
     * tables — together they answer "which index family holds recall
@@ -1776,24 +1720,8 @@ object Similarity {
     * composition shape: deterministic rankings, intersection per
     * query, query-count-sized everything after the shared scan.
     */
-  def s15IvfRecall(s: SparkSession, dir: String): DataFrame = {
-    val exact = s1KnnBruteForce(s, dir).select(col("q_id"), col("neighbor_id"))
-    val approx = s3KnnIvf(s, dir).select(col("q_id"), col("neighbor_id"))
-    val hits = exact
-      .join(approx, Seq("q_id", "neighbor_id"))
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("hits"))
-    exact
-      .select(col("q_id"))
-      .distinct()
-      .join(hits, Seq("q_id"), "left")
-      .withColumn("hits", coalesce(col("hits"), lit(0L)))
-      .select(
-        col("q_id"),
-        col("hits"),
-        round(col("hits").cast("double") / 5.0, 4).as("recall_at_5"))
-      .orderBy("q_id")
-  }
+  def s15IvfRecall(s: SparkSession, dir: String): DataFrame =
+    recallAt5(s, dir, s3KnnIvf(s, dir))
 
   /** s23 — PQ/ADC recall evaluation: s14/s15's harness pointed at the
     * product-quantized index (s7/s8), completing the recall trilogy —
@@ -1811,24 +1739,8 @@ object Similarity {
     * to exploit, the honest "PQ alone is a compressor, not an index"
     * number that motivates s17's ADC-then-exact-refine two-stage.
     */
-  def s23PqRecall(s: SparkSession, dir: String): DataFrame = {
-    val exact = s1KnnBruteForce(s, dir).select(col("q_id"), col("neighbor_id"))
-    val approx = s8PqAdcSearch(s, dir).select(col("q_id"), col("neighbor_id"))
-    val hits = exact
-      .join(approx, Seq("q_id", "neighbor_id"))
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("hits"))
-    exact
-      .select(col("q_id"))
-      .distinct()
-      .join(hits, Seq("q_id"), "left")
-      .withColumn("hits", coalesce(col("hits"), lit(0L)))
-      .select(
-        col("q_id"),
-        col("hits"),
-        round(col("hits").cast("double") / 5.0, 4).as("recall_at_5"))
-      .orderBy("q_id")
-  }
+  def s23PqRecall(s: SparkSession, dir: String): DataFrame =
+    recallAt5(s, dir, s8PqAdcSearch(s, dir))
 
   /** s26 — int8 scalar-quantization recall: s14/s15/s23's harness
     * pointed at SYMMETRIC int8 search, completing the compression
@@ -1903,22 +1815,7 @@ object Similarity {
       .withColumn("acos", cos)
       .withColumn("rank", row_number().over(byQ))
       .filter(col("rank") <= 5)
-      .select(col("q_id"), col("neighbor_id"))
-    val exact = s1KnnBruteForce(s, dir).select(col("q_id"), col("neighbor_id"))
-    val hits = exact
-      .join(approx, Seq("q_id", "neighbor_id"))
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("hits"))
-    exact
-      .select(col("q_id"))
-      .distinct()
-      .join(hits, Seq("q_id"), "left")
-      .withColumn("hits", coalesce(col("hits"), lit(0L)))
-      .select(
-        col("q_id"),
-        col("hits"),
-        round(col("hits").cast("double") / 5.0, 4).as("recall_at_5"))
-      .orderBy("q_id")
+    recallAt5(s, dir, approx)
   }
 
   /** s27 — effective-dimensionality report: per-coordinate variance
@@ -1987,21 +1884,7 @@ object Similarity {
   def s24NprobeCurve(s: SparkSession, dir: String): DataFrame = {
     val k = 16
     val all = vecs(s, dir)
-    val centroids = all
-      .filter(pmod(col("vec_id"), lit(125)) === 0)
-      .withColumn("cell", (col("vec_id") / 125).cast("int"))
-      // the vec_id conjunct restates cell < k on the RAW key so the
-      // standing broadcast-hint gate can SEE the K-bound (cell is
-      // derived; the gate only trusts literal ranges on id columns)
-      .filter(col("cell") < k && col("vec_id") < 125L * k)
-      .select(col("cell"), col("v").as("cv"), col("norm").as("cnorm"))
-    val byVec = Window
-      .partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("cell").asc)
-    val ranked = all
-      .crossJoin(broadcast(centroids))
-      .withColumn("ccos", dot(col("v"), col("cv")) / (col("norm") * col("cnorm")))
-      .withColumn("crn", row_number().over(byVec))
+    val ranked = ivfCellRanks(all, all, k)
     val assigned = ranked
       .filter(col("crn") === 1)
       .select(col("vec_id").as("neighbor_id"), col("cell"))

@@ -1754,7 +1754,8 @@ object Streams {
     * so the four log batches arrive as four separate micro-batches and
     * per-key supersession is genuinely exercised ACROSS state-store
     * commits. Downstream, the merge-on-read convention (max-seq image
-    * per key) + q102's base/anti-join/rollup tail produce the same
+    * per key) + q102's base/anti-join/rollup tail
+    * ([[graft.ops.Relational.cdcApply]]) produce the same
     * 10-bucket answer as the batch compaction — and the oracle IS
     * q102's SQL formulation, so DuckDB independently checks the whole
     * streamed result. Scale posture: images land in an executor-side
@@ -1780,18 +1781,9 @@ object Streams {
       batch(4L, "U", o.filter(col("k") % 40 === 22).withColumn("cents", col("cents") + 999L)))
 
     // one file per log batch => one micro-batch per log batch
-    val latest = runGate(s, "graft-q148", batches, outputMode = "update")(changes =>
+    val images = runGate(s, "graft-q148", batches, outputMode = "update")(changes =>
       streamingCdcGate(changes.as[CdcChange]))
-      .groupBy(col("k"))
-      .agg(max_by(struct(col("op"), col("cents")), col("seq")).as("last"))
-      .select(col("k"), col("last.op").as("op"), col("last.cents").as("cents"))
-    val untouched = base.join(latest.select(col("k")), Seq("k"), "left_anti")
-    val survivors = latest.filter(col("op") =!= "D").select(col("k"), col("cents"))
-    untouched
-      .unionAll(survivors)
-      .groupBy((col("k") % 10).as("bucket"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents_total"))
-      .orderBy("bucket")
+    graft.ops.Relational.cdcApply(base, images)
   }
 
   /** q155 — watermark-family windowed aggregation RUN TO COMPLETION

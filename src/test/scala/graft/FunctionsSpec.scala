@@ -116,6 +116,57 @@ class FunctionsSpec extends SparkSpec {
     assert(df(0).getLong(1) == df(1).getLong(1), "null tokens must be skipped")
     assert(df(2).isNullAt(1))
   }
+
+  test("dot_product and squared_distance: interpreted and generated folds equal the zip_with composition, nulls and edges included") {
+    val waves: Seq[(Long, Option[Seq[Option[Double]]], Option[Seq[Option[Double]]])] = (0 until 50).map { k =>
+      (k.toLong,
+        Some((0 until 32).map(i => Some(math.sin(k * 32 + i + 1.0)))),
+        Some((0 until 32).map(i => Some(math.cos(k * 32 + i + 1.0)))))
+    }
+    val edges: Seq[(Long, Option[Seq[Option[Double]]], Option[Seq[Option[Double]]])] = Seq(
+      (100L, None, Some(Seq(Some(1.0)))), // null array
+      (101L, Some(Seq(Some(1.0))), None),
+      (102L, Some(Seq(Some(1.5), None, Some(3.0))), Some(Seq(Some(1.0), Some(2.0), Some(3.0)))), // null element
+      (103L, Some(Seq(Some(1.5), Some(2.0))), Some(Seq(Some(1.0), None))),
+      (104L, Some(Seq(Some(1.0), Some(2.0))), Some(Seq(Some(1.0)))), // length mismatch
+      (105L, Some(Nil), Some(Nil))) // empty arrays
+    // repartitioned so the projection runs in a task: over a bare local
+    // relation the optimizer would evaluate it, interpreted, at planning
+    val df = (waves ++ edges).toDF("id", "a", "b").repartition(2)
+    val folds = Seq(
+      graft.functions.VectorOps.dotProduct(col("a"), col("b")),
+      aggregate(zip_with(col("a"), col("b"), (x, y) => x * y), lit(0.0), (acc, x) => acc + x),
+      graft.functions.VectorOps.squaredDistance(col("a"), col("b")),
+      aggregate(
+        zip_with(col("a"), col("b"), (x, y) => (x - y) * (x - y)),
+        lit(0.0),
+        (acc, d) => acc + d))
+    def run(factoryMode: String, wholeStage: Boolean): Map[Long, Seq[Option[Double]]] = {
+      val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+      val before = keys.map(k => k -> spark.conf.getOption(k))
+      spark.conf.set(keys(0), factoryMode)
+      spark.conf.set(keys(1), wholeStage.toString)
+      try
+        df.select(col("id") +: folds: _*)
+          .collect()
+          .map(r => r.getLong(0) -> (1 to 4).map(i => Option(r.get(i)).map(_.asInstanceOf[Double])))
+          .toMap
+      finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+    }
+    val interpreted = run("NO_CODEGEN", wholeStage = false)
+    val generated = run("CODEGEN_ONLY", wholeStage = true)
+    assert(interpreted.size == 56)
+    assert(interpreted == generated)
+    interpreted.foreach { case (id, Seq(dot, dotRef, sq, sqRef)) =>
+      assert(dot == dotRef, s"dot_product, id $id")
+      assert(sq == sqRef, s"squared_distance, id $id")
+      assert(dot.isEmpty == (id >= 100 && id <= 104), s"null result, id $id")
+    }
+    assert(interpreted(105L) == Seq(Some(0.0), Some(0.0), Some(0.0), Some(0.0)))
+  }
 }
 
 /** Hashed-shingle front-end: set semantics must match the string path. */

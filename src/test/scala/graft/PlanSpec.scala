@@ -2,8 +2,10 @@ package graft
 
 import graft.ops.{Corpus, Dedup, Multimodal, Relational, Similarity, Tables, TextAnalysis}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.IntegerLiteral
 import org.apache.spark.sql.catalyst.plans.logical.{
   Aggregate,
+  GlobalLimit,
   LogicalPlan,
   Range => LRange,
   Window => LWindow
@@ -522,7 +524,10 @@ class PlanSpec extends SparkSpec {
 
   test("tree-wide standing gates: no unpartitioned Window over unbounded input, no broadcast hint on a data-scaled side") {
     // Two PERMANENT tripwires over every declared query's plan, one
-    // sweep (planning 370+ queries once keeps the suite's cost flat):
+    // sweep (planning 370+ queries once keeps the suite's cost flat).
+    // The window gate also reads every localCheckpoint run while the
+    // frame is built: iterative and checkpointed queries execute most
+    // of their work there, out of sight of the final plan.
     //
     // 1. The round-9 demerit class: an empty-partition-spec Window
     //    whose input is not bounded moves a data-scaled table through
@@ -574,10 +579,13 @@ class PlanSpec extends SparkSpec {
       .filter { case (name, _) => !skip(name) }
       .sortBy(_._1)
       .foreach { case (name, fn) =>
-        val df = fn(spark, Sf)
+        var df: DataFrame = null
+        val runs = checkpointRuns { df = fn(spark, Sf); df }
         val badW =
           if (allowWindow.contains(name)) Nil
-          else StandingGates.unboundedGlobalWindows(df.queryExecution.optimizedPlan)
+          else
+            (df.queryExecution.optimizedPlan +: runs.map(_.optimizedPlan))
+              .flatMap(StandingGates.unboundedGlobalWindows)
         if (badW.nonEmpty) windowOffenders += s"$name (${badW.size} window(s))"
         val badH =
           if (allowHint.contains(name)) Nil
@@ -860,6 +868,43 @@ class PlanSpec extends SparkSpec {
     assert(q.count() == (1 to 8).map(64 / _).sum)
   }
 
+  test("d23 prefix filter: no unpartitioned window, in the final plan or in a checkpoint run") {
+    // each doc orders its own shingles by (df, h) inside its position
+    // window; no rank is taken over the whole vocabulary
+    var q: DataFrame = null
+    val runs = checkpointRuns { q = Dedup.d23AllPairsPrefix(spark, Sf); q }
+    (q.queryExecution.optimizedPlan +: runs.map(_.optimizedPlan)).foreach { p =>
+      assert(globalWindows(p).isEmpty, s"unpartitioned window in d23:\n$p")
+    }
+  }
+
+  test("s25 hybrid RRF: each unpartitioned rank window reads a top-15 or top-10 limit") {
+    // the text and vector arms rank a top-15 (the vector arm's
+    // rank_vec <= 15 plans as a limit below its row_number), the fusion
+    // rank a top-10 of their union, at any corpus size
+    val windows = globalWindows(Similarity.s25HybridRrf(spark, Sf).queryExecution.optimizedPlan)
+    assert(windows.size == 3, s"expected the text, vector and fusion ranks, got ${windows.size}")
+    windows.foreach { w =>
+      w.child match {
+        case GlobalLimit(IntegerLiteral(n), _) =>
+          assert(n <= 15, s"the rank window reads a top-$n")
+        case other => fail(s"the rank window's input is not a limit:\n$other")
+      }
+    }
+  }
+
+  test("s27 cumulative share: the unpartitioned window reads the per-dim variance table") {
+    val q = Similarity.s27EffectiveDim(spark, Sf)
+    val windows = globalWindows(q.queryExecution.optimizedPlan)
+    assert(windows.size == 1, s"expected the cumulative-share window, got ${windows.size}")
+    val keys = windows.head.child.collect { case a: Aggregate =>
+      a.groupingExpressions.flatMap(_.references.map(_.name))
+    }
+    assert(keys.nonEmpty && keys.forall(k => k.isEmpty || k == Seq("dim")),
+      s"the window reads more than per-dim and global aggregates:\n${windows.head}")
+    assert(q.count() == 64, "one row per embedding dimension")
+  }
+
   test("spread parallelizes derived compute beyond the single input split") {
     val parts = Tables
       .spread(Tables.documents(spark, Sf))
@@ -923,11 +968,16 @@ private[graft] object StandingGates {
 
   /** A grouping key set whose cardinality tracks the DATA, not a
     * domain. Value histograms, calendar columns, vocab tokens,
-    * block/bucket/cluster ids all fall through. */
+    * block/bucket/cluster ids all fall through. So does a sketch cell
+    * grouped by fields of a struct named `h` (q89's (d, bucket)); a
+    * bare `h` key is the dedup postings' shingle hash, whose
+    * vocabulary grows with the corpus (16,245 distinct 3-grams at
+    * sf0.01, 27,213 at sf0.1). */
   private def dataKeyed(a: Aggregate): Boolean =
-    a.groupingExpressions
-      .flatMap(_.references.toSeq.map(_.name.toLowerCase))
-      .exists(dataIdNames.contains)
+    a.groupingExpressions.exists {
+      case r: AttributeReference if r.name == "h" => true
+      case e => e.references.exists(r => dataIdNames(r.name.toLowerCase))
+    }
 
   /** A filter conjunct that pins a data-scaled id to a LITERAL range
     * (`vec_id < 20`, `doc_id = 7`, `user_id IN (…)`): on a dense

@@ -29,6 +29,11 @@ object Census extends SparkListener {
 }
 spark.sparkContext.addSparkListener(Census)
 
+def hexSha1(s: String): String = {
+  val d = java.security.MessageDigest.getInstance("SHA-1").digest(s.getBytes("UTF-8"))
+  d.map("%02x".format(_)).mkString
+}
+
 for (name <- names) {
   Census.drain()
   val (j0, s0, t0) = Census.snapshot
@@ -36,15 +41,18 @@ for (name <- names) {
     try {
       // building the frame counts too: iterative queries run their
       // fixpoint loops while the plan is built
-      val rows = all(name)(spark, sfDir).collect().map(_.toString).sorted
+      val df = all(name)(spark, sfDir)
+      val rows = df.collect().map(_.toString).sorted
       Census.drain()
       val (j1, s1, t1) = Census.snapshot
-      val sha = java.security.MessageDigest
-        .getInstance("SHA-1")
-        .digest(rows.mkString("\n").getBytes("UTF-8"))
-        .map("%02x".format(_))
-        .mkString
-      s"$name rows=${rows.length} sha1=$sha jobs=${j1 - j0} stages=${s1 - s0} tasks=${t1 - t0}"
+      // the plan hash ignores expression ids (#<n>), which depend on
+      // what ran before in the session, and the JVM identity of
+      // closures (MapPartitions prints `Foo$$$Lambda$3996/0x…@61523c3`)
+      val plan = df.queryExecution.optimizedPlan.toString
+        .replaceAll("#\\d+", "")
+        .replaceAll("\\$\\$Lambda[^,\\s]*", "\\$\\$Lambda")
+      s"$name rows=${rows.length} sha1=${hexSha1(rows.mkString("\n"))} jobs=${j1 - j0} " +
+        s"stages=${s1 - s0} tasks=${t1 - t0} plan=${hexSha1(plan)}"
     } catch { case e: Throwable => s"$name FAILED ${e.getClass.getSimpleName}: ${e.getMessage}" }
   println("CENSUS " + line)
   graft.GraftSession.releaseQueryState(spark)

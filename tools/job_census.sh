@@ -1,13 +1,14 @@
 #!/bin/bash
 # Job census: for each query, prints one line with its row count, the
-# SHA-1 of its sorted row strings, and the Spark jobs, stages and tasks
-# it ran (counted by a SparkListener on the running session, building
-# the frame included).
+# SHA-1 of its sorted row strings, the Spark jobs, stages and tasks it
+# ran (counted by a SparkListener on the running session, building the
+# frame included) and the SHA-1 of its final optimized logical plan
+# string with the #<n> expression ids and closure identities stripped.
 #
 #   tools/job_census.sh <sf-dir> [q1,q2,...]     (no list: every query)
 #
 # Output lines look like (sf0.001, local[4])
-#   d6_dup_clusters rows=45 sha1=5da9d74b… jobs=30 stages=30 tasks=46
+#   d6_dup_clusters rows=45 sha1=5da9d74b… jobs=30 stages=30 tasks=46 plan=…
 # By default it compiles and runs target/scala-2.13/classes;
 # CLASSES=<dir> runs another build's classes as they are (e.g. a parent
 # commit's, to diff two builds' outputs line by line). CPUS=<n> sets
