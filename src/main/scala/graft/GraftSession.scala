@@ -37,10 +37,12 @@ import org.apache.spark.sql.SparkSession
   *    without the conf, so the class applies when the session builds
   *    the JVM's first `file:` FileSystem, as it does in Verify, Bench
   *    and the benchmark.
-  *  - Graft extensions installed declaratively (SQL functions, the
-  *    dot-product rewrite, the top-k planner strategy) — the
-  *    config-based path works on a fresh session; for an already-built
-  *    session use [[plans.GraftExtensions.install]].
+  *  - The engine's Catalyst extensions ([[plans.GraftExtensions]]:
+  *    the SQL functions, the dot-product and levenshtein rewrites, the
+  *    top-k and as-of planner strategies). This entry is the only way
+  *    they reach a session: `spark.sql.extensions` is read when a
+  *    session is built, and [[plans.TopKPerKey]] and
+  *    [[plans.AsOfJoin]] fail at frame build on a session without it.
   *
   * Shuffle partitions are a deployment decision: local runs want
   * ≈ core count (set by callers like Verify/Bench from

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -104,11 +103,4 @@ object GraftFunctions {
   /** Column-API entry point: `decodeByteArray($"col")`. */
   def decodeByteArray(col: Column): Column =
     GraftShim.column(DecodeLongArrayToUtf8(GraftShim.expression(col)))
-
-  /** Register `decode_byte_array` for SQL use in a session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "decode_byte_array",
-      (exprs: Seq[Expression]) => DecodeLongArrayToUtf8(exprs.head),
-      "scala_udf")
 }

@@ -953,7 +953,6 @@ object Relational {
     * deterministic and oracle-comparable.
     */
   def q44CustomTopK(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.install(s)
     graft.plans.TopKPerKey(
       Tables.orders(s, dir).select(col("o_custkey"), col("o_totalprice")),
       Seq("o_custkey"),
@@ -1494,7 +1493,6 @@ object Relational {
     * (user, time) are tie-ambiguous in any as-of engine.
     */
   def q63AsofCustom(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.install(s)
     val ev = Tables
       .events(s, dir)
       .select(

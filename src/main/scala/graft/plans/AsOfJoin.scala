@@ -174,7 +174,8 @@ object AsOfJoin {
       leftKey: String,
       rightKey: String,
       leftTimeCol: String,
-      rightTimeCol: String): DataFrame =
+      rightTimeCol: String): DataFrame = {
+    GraftExtensions.requirePlanner(left.sparkSession, AsOfJoinStrategy)
     GraftShim.dataFrame(
       left.sparkSession,
       AsOfJoinPlan(
@@ -184,4 +185,5 @@ object AsOfJoin {
         GraftShim.expression(right(rightTimeCol)),
         left.queryExecution.analyzed,
         right.queryExecution.analyzed))
+  }
 }

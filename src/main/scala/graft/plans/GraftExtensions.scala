@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Catalyst session extensions for the graft engine:
@@ -21,9 +22,10 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   *    (`dot_product`, `simhash64`, `minhash_signature`,
   *    `decode_byte_array`) so the pure-SQL surface reaches them too.
   *
-  * Activate cluster-wide with
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`, or on a
-  * live session with [[GraftExtensions.install]].
+  * A session gets them only from
+  * `spark.sql.extensions=graft.plans.GraftExtensions`, which
+  * [[graft.GraftSession.posture]] sets; they cannot be added to a
+  * session that is already built.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -42,7 +44,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "dot_product" -> { es => DotProductDouble(es.head, es(1)) },
     "simhash64" -> { es => SimHash64(es.head) },
     "simhash60" -> { es => graft.functions.SimHash60Portable(es.head) },
@@ -74,28 +76,17 @@ object GraftExtensions {
     "md5_sign_vector" -> { es => graft.functions.Md5SignVector(es.head, es(1)) }
   )
 
-  /** Install on an already-built session: the rewrite rule goes into
-    * `experimental.extraOptimizations` (the sanctioned post-hoc hook),
-    * functions into the session registry.
+  /** Fails at frame build, not at `collect`, when `spark`'s planner
+    * lacks `strategy`: a session built without the extensions would
+    * otherwise plan the custom logical node into Spark's
+    * "[INTERNAL_ERROR] … You hit a bug in Spark".
     */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(RewriteDotProduct))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteDotProduct
-    if (!spark.experimental.extraOptimizations.contains(RewriteLevenshteinThreshold))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteLevenshteinThreshold
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
+  private[graft] def requirePlanner(spark: SparkSession, strategy: SparkStrategy): Unit =
+    require(
+      spark.sessionState.planner.strategies.contains(strategy),
+      s"${strategy.getClass.getSimpleName.stripSuffix("$")} is not in this session's planner: " +
+        "build the session with GraftSession.builder, or set " +
+        "spark.sql.extensions=graft.plans.GraftExtensions")
 }
 
 /** `levenshtein(a, b) <= k` / `< k` / `>= k` / `> k` (constant

@@ -35,8 +35,7 @@ import org.apache.spark.sql.graftshim.GraftShim
   * `ClusteredDistribution(keys)` so EnsureRequirements inserts
   * exactly one hash exchange), registered through
   * `SparkSessionExtensions.injectPlannerStrategy`
-  * ([[GraftExtensions]]) or post-hoc via
-  * `experimental.extraStrategies` ([[GraftExtensions.install]]).
+  * ([[GraftExtensions]]).
   *
   * Ties at the k-boundary are broken arbitrarily (like any
   * heap-based top-k); callers needing determinism order by a
@@ -163,6 +162,7 @@ object TopKPerKey {
     * the analyzer already resolved.
     */
   def apply(df: DataFrame, keyCols: Seq[String], orderCol: String, k: Int): DataFrame = {
+    GraftExtensions.requirePlanner(df.sparkSession, TopKPerKeyStrategy)
     val keys = keyCols.map(n => GraftShim.expression(df(n)))
     val order = GraftShim.expression(df(orderCol))
     GraftShim.dataFrame(
@@ -170,7 +170,8 @@ object TopKPerKey {
       TopKPerKeyPlan(keys, order, k, df.queryExecution.analyzed))
   }
 
-  def apply(df: DataFrame, key: Column, order: Column, k: Int): DataFrame =
+  def apply(df: DataFrame, key: Column, order: Column, k: Int): DataFrame = {
+    GraftExtensions.requirePlanner(df.sparkSession, TopKPerKeyStrategy)
     GraftShim.dataFrame(
       df.sparkSession,
       TopKPerKeyPlan(
@@ -178,4 +179,5 @@ object TopKPerKey {
         GraftShim.expression(order),
         k,
         df.queryExecution.analyzed))
+  }
 }

@@ -31,16 +31,6 @@ class EnvelopeSchemaSpec extends SparkSpec {
     assert(ours == sparkSchema(s, path), s"$name: driver inference differs")
   }
 
-  /** Sets `kv` on `s` for `body`, then puts each key back as it was held
-    * in `conf.getAll` (unset when it was not set).
-    */
-  private def withConf[T](s: SparkSession, kv: (String, String)*)(body: => T): T = {
-    val before = kv.map { case (k, _) => k -> s.conf.getAll.get(k) }
-    kv.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally before.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-  }
-
   private val utf8Envelope =
     """{"resultado":[{"nome":"Maçã","n":[77,97,195,167,195,163]},{"nome":"Olá ☕"}]}""".getBytes(UTF_8)
 

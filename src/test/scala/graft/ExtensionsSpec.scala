@@ -1,11 +1,13 @@
 package graft
 
-import graft.plans.{GraftExtensions, RewriteDotProduct}
+import graft.plans.RewriteDotProduct
 import org.apache.spark.sql.functions._
 
-/** Session-extension behavior: the optimizer rewrite fires on the
-  * declarative dot-product idiom and preserves results; native
-  * functions become SQL-callable.
+/** Session-extension behavior on the posture's session: the optimizer
+  * rewrite fires on the declarative dot-product idiom and preserves
+  * results; native functions are SQL-callable; the custom operators
+  * plan through their strategies, and queries that use them leave the
+  * session as they found it.
   */
 class ExtensionsSpec extends SparkSpec {
 
@@ -19,26 +21,25 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("RewriteDotProduct rewrites aggregate(zip_with(...)) into the native expression") {
-    GraftExtensions.install(spark)
     val plan = declarativeDot.queryExecution.optimizedPlan.toString
     assert(plan.contains("dot_product"), s"rewrite did not fire:\n$plan")
   }
 
   test("rewrite preserves values bit-for-bit") {
-    // clean session state: compute without the rule by removing it
-    val before = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = Seq.empty
-    val unfused = declarativeDot.orderBy("vec_id").collect()
-    spark.experimental.extraOptimizations = before :+ RewriteDotProduct
+    val unfused = withConf(spark, "spark.sql.optimizer.excludedRules" -> RewriteDotProduct.ruleName) {
+      val q = declarativeDot.orderBy("vec_id")
+      val plan = q.queryExecution.optimizedPlan.toString
+      assert(!plan.contains("dot_product"), s"reference was rewritten:\n$plan")
+      q.collect()
+    }
     val fused = declarativeDot.orderBy("vec_id").collect()
-    spark.experimental.extraOptimizations = before
+    assert(unfused.length == fused.length)
     unfused.zip(fused).foreach { case (u, f) =>
       assert(u.getDouble(1) == f.getDouble(1), s"vec ${u.getLong(0)}")
     }
   }
 
-  test("native functions are SQL-callable after install") {
-    GraftExtensions.install(spark)
+  test("native functions are SQL-callable on a posture session") {
     graft.ops.Tables.documents(spark, Sf).createOrReplaceTempView("docs_ext")
     val row = spark.sql(
       """SELECT simhash64(split(text, ' ')) AS sh,
@@ -58,7 +59,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("TopKPerKey plans through the custom strategy: exec node, one exchange, no sort") {
-    GraftExtensions.install(spark)
     val df = graft.plans.TopKPerKey(
       graft.ops.Tables.orders(spark, Sf).select(col("o_custkey"), col("o_totalprice")),
       Seq("o_custkey"),
@@ -72,7 +72,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("TopKPerKey equals the window-rank formulation (tie-insensitive projection)") {
-    GraftExtensions.install(spark)
     val orders = graft.ops.Tables.orders(spark, Sf)
       .select(col("o_custkey"), col("o_totalprice"))
     val custom = graft.plans.TopKPerKey(orders, Seq("o_custkey"), "o_totalprice", 3)
@@ -93,14 +92,12 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("TopKPerKey handles k larger than any group (returns everything non-null)") {
-    GraftExtensions.install(spark)
     val n = graft.ops.Tables.nation(spark, Sf)
     val out = graft.plans.TopKPerKey(n, Seq("n_regionkey"), "n_nationkey", 1000)
     assert(out.count() == n.count())
   }
 
   test("TopKPerKey orders buffer-backed (string) values correctly") {
-    GraftExtensions.install(spark)
     // string order values are UTF8Strings pointing into the scan's
     // reused row buffer — without a copy before heap insertion the
     // stored keys silently mutate as the iterator advances. Parquet
@@ -125,7 +122,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("TopKPerKey matches row_number's DESC NULLS LAST fill on nullable order columns") {
-    GraftExtensions.install(spark)
     import spark.implicits._
     // key 1: 2 non-null + 2 null rows, k=3 -> 2 non-null + 1 null fill;
     // key 2: all-null rows -> up to k survive, like the window form
@@ -142,7 +138,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("AsOfJoin skips null right keys/times and null-pads null left keys/times") {
-    GraftExtensions.install(spark)
     import spark.implicits._
     val left = Seq(
       (Some(1L), Some(100L), "a"),
@@ -167,7 +162,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("AsOfJoin plans as co-partitioned sorted merge: exec node, 2 exchanges, sorts") {
-    GraftExtensions.install(spark)
     val df = graft.ops.Relational.q63AsofCustom(spark, Sf)
     df.collect()
     // AQE's toString prints BOTH the final and initial plans — count
@@ -181,7 +175,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("RewriteLevenshteinThreshold: naive distance filters get the banded kernel") {
-    GraftExtensions.install(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._
     // parquet round-trip: a literal LocalRelation would be folded by
@@ -221,7 +214,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("AsOfJoin edges: no-match keys, pre-history times, inclusive bound") {
-    GraftExtensions.install(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     // keys: 1 has quotes, 2 has none; left times probe before/at/after
@@ -239,7 +231,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("AsOfJoin equals the declarative max-below-bound formulation") {
-    GraftExtensions.install(spark)
     import org.apache.spark.sql.functions._
     val ev = graft.ops.Tables.events(spark, Sf)
       .select(col("user_id"), col("event_id"), expr("unix_micros(ts)").as("us"), col("event_type"))
@@ -256,5 +247,25 @@ class ExtensionsSpec extends SparkSpec {
       .agg(max(col("c_us")).as("c_us"))
       .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSet
     assert(viaOp == viaAgg)
+  }
+
+  test("the spec session carries every GraftSession.posture pair") {
+    GraftSession.posture.foreach { case (k, v) =>
+      assert(spark.conf.getOption(k).contains(v), s"$k: posture sets $v, session has ${spark.conf.getOption(k)}")
+    }
+  }
+
+  test("q44 and q63 leave the session's rules, strategies and functions as they found them") {
+    def footprint = {
+      val st = spark.sessionState
+      (st.optimizer.batches.flatMap(_.rules).groupBy(_.ruleName).view.mapValues(_.size).toMap,
+        st.planner.strategies.size,
+        (st.experimentalMethods.extraOptimizations, st.experimentalMethods.extraStrategies),
+        spark.catalog.listFunctions().count())
+    }
+    val before = footprint
+    Seq("q44_custom_topk", "q63_asof_custom").foreach(q => SparkEntry.queries(q)(spark, Sf).collect())
+    assert(footprint == before)
+    assert(before._3 == ((Nil, Nil)), "rules or strategies were registered after the session was built")
   }
 }

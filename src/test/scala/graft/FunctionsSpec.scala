@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.GraftFunctions.decodeByteArray
 import graft.functions.SimHash64.simhash64
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -133,39 +134,46 @@ class FunctionsSpec extends SparkSpec {
     // repartitioned so the projection runs in a task: over a bare local
     // relation the optimizer would evaluate it, interpreted, at planning
     val df = (waves ++ edges).toDF("id", "a", "b").repartition(2)
-    val folds = Seq(
+    val kernels = Seq(
       graft.functions.VectorOps.dotProduct(col("a"), col("b")),
+      graft.functions.VectorOps.squaredDistance(col("a"), col("b")))
+    val references = Seq(
       aggregate(zip_with(col("a"), col("b"), (x, y) => x * y), lit(0.0), (acc, x) => acc + x),
-      graft.functions.VectorOps.squaredDistance(col("a"), col("b")),
       aggregate(
         zip_with(col("a"), col("b"), (x, y) => (x - y) * (x - y)),
         lit(0.0),
         (acc, d) => acc + d))
-    def run(factoryMode: String, wholeStage: Boolean): Map[Long, Seq[Option[Double]]] = {
-      val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
-      val before = keys.map(k => k -> spark.conf.getOption(k))
-      spark.conf.set(keys(0), factoryMode)
-      spark.conf.set(keys(1), wholeStage.toString)
-      try
-        df.select(col("id") +: folds: _*)
-          .collect()
-          .map(r => r.getLong(0) -> (1 to 4).map(i => Option(r.get(i)).map(_.asInstanceOf[Double])))
+    def run(folds: Seq[Column], conf: (String, String)*): (Map[Long, Seq[Option[Double]]], String) =
+      withConf(spark, conf: _*) {
+        val q = df.select(col("id") +: folds: _*)
+        val rows = q.collect()
+          .map(r => r.getLong(0) -> folds.indices.map(i => Option(r.get(i + 1)).map(_.asInstanceOf[Double])))
           .toMap
-      finally before.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
+        (rows, q.queryExecution.optimizedPlan.toString)
       }
+    val modes = Seq(
+      Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false"),
+      Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.wholeStage" -> "true"))
+    // the composition runs without RewriteDotProduct, which would fuse it
+    // into the dot_product kernel under test
+    val unfused = "spark.sql.optimizer.excludedRules" -> graft.plans.RewriteDotProduct.ruleName
+    val Seq(interpreted, generated) = modes.map(m => run(kernels, m: _*)._1)
+    val Seq(refInterpreted, refGenerated) = modes.map { m =>
+      val (rows, plan) = run(references, m :+ unfused: _*)
+      assert(!plan.contains("dot_product"), s"reference was rewritten:\n$plan")
+      rows
     }
-    val interpreted = run("NO_CODEGEN", wholeStage = false)
-    val generated = run("CODEGEN_ONLY", wholeStage = true)
     assert(interpreted.size == 56)
     assert(interpreted == generated)
-    interpreted.foreach { case (id, Seq(dot, dotRef, sq, sqRef)) =>
+    assert(refInterpreted == refGenerated)
+    interpreted.foreach { case (id, Seq(dot, sq)) =>
+      val Seq(dotRef, sqRef) = refInterpreted(id)
       assert(dot == dotRef, s"dot_product, id $id")
       assert(sq == sqRef, s"squared_distance, id $id")
       assert(dot.isEmpty == (id >= 100 && id <= 104), s"null result, id $id")
     }
-    assert(interpreted(105L) == Seq(Some(0.0), Some(0.0), Some(0.0), Some(0.0)))
+    assert(interpreted(105L) == Seq(Some(0.0), Some(0.0)))
+    assert(refInterpreted(105L) == Seq(Some(0.0), Some(0.0)))
   }
 }
 
@@ -441,8 +449,7 @@ class WordNgramHashesSpec extends SparkSpec {
     assert(fused == composed)
   }
 
-  test("word_ngrams is SQL-callable after extension install") {
-    graft.plans.GraftExtensions.install(spark)
+  test("word_ngrams is SQL-callable on a posture session") {
     Seq(Tuple1(Seq("a", "b", "c"))).toDF("toks").createOrReplaceTempView("wn_probe")
     val out = spark.sql("SELECT word_ngrams(toks, 2) AS sh FROM wn_probe")
       .as[String].collect().toSeq

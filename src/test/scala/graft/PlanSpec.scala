@@ -706,6 +706,9 @@ class PlanSpec extends SparkSpec {
     assert(aggBelow, s"day aggregate must sit below the window:\n${plan.take(2000)}")
     assert(plan.contains("TakeOrderedAndProject"),
       "top-10 must plan as a heap, not a global sort")
+    // and the aggregate the running sum reads is the per-day one, not
+    // the per-order last-shipment aggregate further down
+    assert(windowsOverKeyedAggregate(df, "day") == 1)
   }
 
   test("s19 filtered search: query set broadcasts; per-query top-5 prunes via WindowGroupLimit") {
@@ -903,6 +906,28 @@ class PlanSpec extends SparkSpec {
     assert(keys.nonEmpty && keys.forall(k => k.isEmpty || k == Seq("dim")),
       s"the window reads more than per-dim and global aggregates:\n${windows.head}")
     assert(q.count() == 64, "one row per embedding dimension")
+  }
+
+  /** Each of `q`'s unpartitioned windows reads an aggregate grouped by
+    * the one key `key`; returns how many windows there are.
+    */
+  private def windowsOverKeyedAggregate(q: DataFrame, key: String): Int = {
+    val windows = globalWindows(q.queryExecution.optimizedPlan)
+    windows.foreach { w =>
+      val keys = w.child.collectFirst { case a: Aggregate =>
+        a.groupingExpressions.flatMap(_.references.map(_.name))
+      }
+      assert(keys.contains(Seq(key)), s"the window does not read the per-$key aggregate:\n$w")
+    }
+    windows.size
+  }
+
+  test("q173 STL-lite: the ±3-day smoother reads the per-day totals") {
+    assert(windowsOverKeyedAggregate(Relational.q173StlLite(spark, Sf), "day") == 1)
+  }
+
+  test("q234 Kaplan-Meier: the at-risk sum reads the per-duration histogram") {
+    assert(windowsOverKeyedAggregate(Relational.q234KaplanMeier(spark, Sf), "duration_days") == 1)
   }
 
   test("spread parallelizes derived compute beyond the single input split") {

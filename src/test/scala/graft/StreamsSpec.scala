@@ -1019,7 +1019,6 @@ class StreamBatchParitySpec extends StreamingSpec {
       .map(r => (r.getLong(1), r.getTimestamp(2), r.getDouble(4))).toSeq
 
     // batch twin: the custom AsOfJoinExec over epoch micros
-    graft.plans.GraftExtensions.install(spark)
     val evDf = evRows.toDF("key", "ts", "payload")
       .select(col("key").as("e_key"), unix_micros(col("ts")).as("e_us"), col("payload"))
     val dimDf = dimRows.toDF("key", "ts", "attr")

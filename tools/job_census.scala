@@ -3,6 +3,14 @@
 import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.AtomicLong
 
+// The shell must carry GraftSession's posture: the --conf list in the
+// .sh wrapper is kept by hand, so a pair it lacks stops the run here.
+val missingPosture = graft.GraftSession.posture.filterNot { case (k, v) => spark.conf.getOption(k).contains(v) }
+if (missingPosture.nonEmpty) {
+  missingPosture.foreach { case (k, v) => System.err.println(s"spark-shell lacks the posture's --conf $k=$v") }
+  sys.exit(1)
+}
+
 val sfDir = sys.env("CENSUS_SF")
 val wanted = sys.env.getOrElse("CENSUS_QUERIES", "").split(",").map(_.trim).filter(_.nonEmpty)
 val all = graft.SparkEntry.queries
