@@ -41,12 +41,6 @@ object ApiError {
 /** Transform/sink-side failures (reference: src/errors.rs:15-29 `ProcessorError`). */
 sealed trait ProcessorError extends GraftError
 object ProcessorError {
-  final case class Io(path: String, cause: String) extends ProcessorError {
-    def message = s"io error at $path: $cause"
-  }
-  final case class Json(path: String, cause: String) extends ProcessorError {
-    def message = s"json parse error at $path: $cause"
-  }
   /** Any Spark analysis/execution error while transforming or writing;
     * the reference stringifies PolarsError the same way
     * (reference: src/impl_errors.rs:58-62). */

@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.functions.GraftFunctions.decodeByteArray
+import graft.functions.DecodeLongArrayToUtf8.decodeByteArray
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile

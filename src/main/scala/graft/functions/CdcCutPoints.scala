@@ -51,9 +51,8 @@ case class CdcCutPoints(child: Expression, w: Int, modulus: Int)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val gad = classOf[GenericArrayData].getName
-    val kernel = "graft.functions.CdcCutPoints"
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = new $gad($kernel.cuts($s, $w, $modulus));")
+    val kernel = classOf[CdcCutPoints].getName
+    defineCodeGen(ctx, ev, s => s"new $gad($kernel.cuts($s, $w, $modulus))")
   }
 
   override protected def withNewChildInternal(newChild: Expression): CdcCutPoints =

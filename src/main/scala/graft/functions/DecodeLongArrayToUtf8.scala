@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -44,8 +43,27 @@ case class DecodeLongArrayToUtf8(child: Expression) extends UnaryExpression {
   private lazy val elementType: DataType =
     child.dataType.asInstanceOf[ArrayType].elementType
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    DecodeLongArrayToUtf8.decode(input.asInstanceOf[ArrayData], elementType)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = classOf[DecodeLongArrayToUtf8].getName
+    val elemType = ctx.addReferenceObj("elementType", elementType, classOf[DataType].getName)
+    defineCodeGen(ctx, ev, arr => s"$kernel.decode($arr, $elemType)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "decode_byte_array"
+}
+
+object DecodeLongArrayToUtf8 {
+
+  /** The kernel, called by interpreted eval and generated code alike:
+    * element i's low byte becomes byte i of the string.
+    */
+  def decode(arr: ArrayData, elementType: DataType): UTF8String = {
     val n = arr.numElements()
     val bytes = new Array[Byte](n)
     var i = 0
@@ -65,40 +83,6 @@ case class DecodeLongArrayToUtf8(child: Expression) extends UnaryExpression {
     }
     UTF8String.fromBytes(bytes)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val getElem = elementType match {
-      case LongType    => (a: String, i: String) => s"(byte)($a.getLong($i) & 0xFFL)"
-      case IntegerType => (a: String, i: String) => s"(byte)($a.getInt($i) & 0xFF)"
-      case ShortType   => (a: String, i: String) => s"(byte)($a.getShort($i) & 0xFF)"
-      case ByteType    => (a: String, i: String) => s"$a.getByte($i)"
-      case DoubleType  => (a: String, i: String) => s"(byte)((long)$a.getDouble($i) & 0xFFL)"
-      case FloatType   => (a: String, i: String) => s"(byte)((long)$a.getFloat($i) & 0xFFL)"
-    }
-    nullSafeCodeGen(ctx, ev, arr => {
-      val bytes = ctx.freshName("bytes")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""
-         |final int $n = $arr.numElements();
-         |final byte[] $bytes = new byte[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$arr.isNullAt($i)) {
-         |    $bytes[$i] = ${getElem(arr, i)};
-         |  }
-         |}
-         |${ev.value} = UTF8String.fromBytes($bytes);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "decode_byte_array"
-}
-
-object GraftFunctions {
 
   /** Column-API entry point: `decodeByteArray($"col")`. */
   def decodeByteArray(col: Column): Column =

@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types._
@@ -67,27 +65,17 @@ case class HyperplaneBuckets(
         s"hyperplane_buckets expects array<double>, got ${other.catalogString}")
   }
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else HyperplaneBuckets.compute(v.asInstanceOf[ArrayData], planesArr, tables, perTable, dim)
-  }
+  override def nullSafeEval(input: Any): Any =
+    HyperplaneBuckets.compute(input.asInstanceOf[ArrayData], planesArr, tables, perTable, dim)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = classOf[HyperplaneBuckets].getName
     val planesRef = ctx.addReferenceObj("planes", planesArr, "double[][]")
-    val childGen = child.genCode(ctx)
-    val code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = true;
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${childGen.isNull}) {
-          ${ev.value} = graft.functions.HyperplaneBuckets.compute(
-            ${childGen.value}, $planesRef, $tables, $perTable, $dim);
-          ${ev.isNull} = ${ev.value} == null;
-        }
-      """
-    ev.copy(code = code)
+    nullSafeCodeGen(ctx, ev, v =>
+      s"""
+         |${ev.value} = $kernel.compute($v, $planesRef, $tables, $perTable, $dim);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -98,8 +86,8 @@ case class HyperplaneBuckets(
 
 object HyperplaneBuckets {
 
-  /** Shared by interpreted eval and generated code. Returns null on
-    * dimension mismatch (see class scaladoc).
+  /** The kernel, called by interpreted eval and generated code alike.
+    * Returns null on dimension mismatch (see class scaladoc).
     */
   def compute(
       v: ArrayData,

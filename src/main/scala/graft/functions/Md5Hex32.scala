@@ -44,8 +44,8 @@ case class Md5Hex32(child: Expression) extends UnaryExpression {
     Md5Hex32.hash32(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val obj = Md5Hex32.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, v => s"$obj.hash32($v)")
+    val kernel = classOf[Md5Hex32].getName
+    defineCodeGen(ctx, ev, v => s"$kernel.hash32($v)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

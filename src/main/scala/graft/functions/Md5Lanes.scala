@@ -58,14 +58,8 @@ case class Md5Lanes(child: Expression, groups: Int)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val gad = classOf[GenericArrayData].getName
-    val obj = Md5Lanes.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, k => {
-      val lanes = ctx.freshName("lanes")
-      s"""
-         |final long[] $lanes = $obj.lanes($k, $groups);
-         |${ev.value} = new $gad($lanes);
-       """.stripMargin
-    })
+    val kernel = classOf[Md5Lanes].getName
+    defineCodeGen(ctx, ev, k => s"new $gad($kernel.lanes($k, $groups))")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -58,14 +58,8 @@ case class Md5SignVector(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val gad = classOf[GenericArrayData].getName
-    val obj = Md5SignVector.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (k, n) => {
-      val arr = ctx.freshName("signArr")
-      s"""
-         |final long[] $arr = $obj.signs($k, $n);
-         |${ev.value} = new $gad($arr);
-       """.stripMargin
-    })
+    val kernel = classOf[Md5SignVector].getName
+    defineCodeGen(ctx, ev, (k, n) => s"new $gad($kernel.signs($k, $n))")
   }
 
   override protected def withNewChildrenInternal(

@@ -1,14 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Perceptual mean-threshold bit sketch of a code-point array, in ONE
   * native pass: split the array into `bits` equal spans (span k =
@@ -42,25 +41,12 @@ case class MeanThresholdBits(child: Expression, bits: Int)
         s"mean_threshold_bits expects array<bigint>, got ${other.catalogString}")
   }
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else MeanThresholdBits.compute(v.asInstanceOf[ArrayData], bits)
-  }
+  override def nullSafeEval(input: Any): Any =
+    MeanThresholdBits.compute(input.asInstanceOf[ArrayData], bits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = ${childGen.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.MeanThresholdBits.compute(
-            ${childGen.value}, $bits);
-        }
-      """
-    ev.copy(code = code)
+    val kernel = classOf[MeanThresholdBits].getName
+    defineCodeGen(ctx, ev, cs => s"$kernel.compute($cs, $bits)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -91,29 +77,12 @@ case class StringMeanThresholdBits(child: Expression, bits: Int, shift: Int)
         s"mean_threshold_bits_str expects string, got ${other.catalogString}")
   }
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else
-      MeanThresholdBits.computeBytes(
-        v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes,
-        bits,
-        shift)
-  }
+  override def nullSafeEval(input: Any): Any =
+    MeanThresholdBits.computeBytes(input.asInstanceOf[UTF8String].getBytes, bits, shift)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = ${childGen.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.MeanThresholdBits.computeBytes(
-            ${childGen.value}.getBytes(), $bits, $shift);
-        }
-      """
-    ev.copy(code = code)
+    val kernel = classOf[MeanThresholdBits].getName
+    defineCodeGen(ctx, ev, text => s"$kernel.computeBytes($text.getBytes(), $bits, $shift)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** MinHash signature of a string-array (shingle set) in ONE pass: for
   * each of `numHashes` seeds, the minimum xxhash64 of any element under
@@ -44,8 +43,28 @@ case class MinHashSignature(child: Expression, numHashes: Int)
   private lazy val seedHashes: Array[Long] =
     Array.tabulate(numHashes)(s => XXH64.hashLong(s.toLong, 42L))
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    MinHashSignature.signature(input.asInstanceOf[ArrayData], seedHashes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = classOf[MinHashSignature].getName
+    val seeds = ctx.addReferenceObj("seedHashes", seedHashes, "long[]")
+    defineCodeGen(ctx, ev, arr => s"$kernel.signature($arr, $seeds)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "minhash_signature"
+}
+
+object MinHashSignature {
+
+  /** The kernel, called by interpreted eval and generated code alike:
+    * per seed, the minimum hash of any non-null element.
+    */
+  def signature(arr: ArrayData, seedHashes: Array[Long]): ArrayData = {
+    val numHashes = seedHashes.length
     val mins = Array.fill(numHashes)(Long.MaxValue)
     val n = arr.numElements()
     var i = 0
@@ -64,47 +83,6 @@ case class MinHashSignature(child: Expression, numHashes: Int)
     new GenericArrayData(mins)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val xxh = classOf[XXH64].getName
-    val utf8 = classOf[UTF8String].getName
-    val gad = classOf[GenericArrayData].getName
-    val seeds = ctx.addReferenceObj("seedHashes", seedHashes, "long[]")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val mins = ctx.freshName("mins")
-      val boxed = ctx.freshName("boxed")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val s = ctx.freshName("s")
-      val n = ctx.freshName("n")
-      s"""
-         |final long[] $mins = new long[$numHashes];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |final int $n = $arr.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$arr.isNullAt($i)) {
-         |    final $utf8 $s = $arr.getUTF8String($i);
-         |    for (int $j = 0; $j < $numHashes; $j++) {
-         |      final long $h = $xxh.hashUnsafeBytes(
-         |        $s.getBaseObject(), $s.getBaseOffset(), $s.numBytes(), $seeds[$j]);
-         |      if ($h < $mins[$j]) $mins[$j] = $h;
-         |    }
-         |  }
-         |}
-         |final Object[] $boxed = new Object[$numHashes];
-         |for (int $j = 0; $j < $numHashes; $j++) $boxed[$j] = $mins[$j];
-         |${ev.value} = new $gad($boxed);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "minhash_signature"
-}
-
-object MinHashSignature {
   def minhashSignature(col: Column, numHashes: Int): Column =
     GraftShim.column(MinHashSignature(GraftShim.expression(col), numHashes))
 }

@@ -49,8 +49,8 @@ case class RollingFingerprints(child: Expression, w: Int) extends UnaryExpressio
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val gad = classOf[GenericArrayData].getName
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = new $gad(graft.functions.RollingFingerprints.kernel($arr, $w));")
+    val kernel = classOf[RollingFingerprints].getName
+    defineCodeGen(ctx, ev, arr => s"new $gad($kernel.kernel($arr, $w))")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -47,8 +47,24 @@ case class SimHash60Portable(child: Expression) extends UnaryExpression {
           s"simhash60 expects array<string>, got ${other.catalogString}")
     }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    SimHash60Portable.sketch(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = classOf[SimHash60Portable].getName
+    defineCodeGen(ctx, ev, arr => s"$kernel.sketch($arr)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "simhash60"
+}
+
+object SimHash60Portable {
+
+  /** The kernel, called by interpreted eval and generated code alike. */
+  def sketch(arr: ArrayData): Long = {
     val counts = new Array[Int](60)
     val n = arr.numElements()
     var i = 0
@@ -83,54 +99,6 @@ case class SimHash60Portable(child: Expression) extends UnaryExpression {
     }
     out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, arr => {
-      val counts = ctx.freshName("counts")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val bit = ctx.freshName("bit")
-      val h1 = ctx.freshName("h1")
-      val h2 = ctx.freshName("h2")
-      val s = ctx.freshName("s")
-      val n = ctx.freshName("n")
-      val len = ctx.freshName("len")
-      val cp = ctx.freshName("cp")
-      s"""
-         |final int[] $counts = new int[60];
-         |final int $n = $arr.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$arr.isNullAt($i)) {
-         |    final String $s = $arr.getUTF8String($i).toString();
-         |    long $h1 = 0L; long $h2 = 0L;
-         |    final int $len = $s.length();
-         |    for (int $j = 0; $j < $len; ) {
-         |      final int $cp = $s.codePointAt($j);
-         |      $h1 = ($h1 * 131L + $cp) % 1000000007L;
-         |      $h2 = ($h2 * 137L + $cp) % 998244353L;
-         |      $j += Character.charCount($cp);
-         |    }
-         |    for (int $bit = 0; $bit < 30; $bit++) {
-         |      if ((($h1 >>> $bit) & 1L) == 1L) $counts[$bit]++; else $counts[$bit]--;
-         |      if ((($h2 >>> $bit) & 1L) == 1L) $counts[$bit + 30]++; else $counts[$bit + 30]--;
-         |    }
-         |  }
-         |}
-         |${ev.value} = 0L;
-         |for (int $bit = 0; $bit < 60; $bit++) {
-         |  if ($counts[$bit] > 0) ${ev.value} |= (1L << $bit);
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash60"
-}
-
-object SimHash60Portable {
 
   def simhash60(col: Column): Column =
     GraftShim.column(SimHash60Portable(GraftShim.expression(col)))

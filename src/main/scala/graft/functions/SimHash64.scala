@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit SimHash of a token array (Charikar 2002, "Similarity
   * estimation techniques from rounding algorithms"): each token is
@@ -36,15 +35,32 @@ case class SimHash64(child: Expression) extends UnaryExpression {
           s"simhash64 expects array<string>, got ${other.catalogString}")
     }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    SimHash64.sketch(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = classOf[SimHash64].getName
+    defineCodeGen(ctx, ev, arr => s"$kernel.sketch($arr)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "simhash64"
+}
+
+object SimHash64 {
+  val Seed = 42L
+
+  /** The kernel, called by interpreted eval and generated code alike. */
+  def sketch(arr: ArrayData): Long = {
     val counts = new Array[Int](64)
     val n = arr.numElements()
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
         val s = arr.getUTF8String(i)
-        val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, SimHash64.Seed)
+        val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, Seed)
         var b = 0
         while (b < 64) {
           if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
@@ -61,46 +77,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     }
     out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val xxh = classOf[XXH64].getName
-    val utf8 = classOf[UTF8String].getName
-    nullSafeCodeGen(ctx, ev, arr => {
-      val counts = ctx.freshName("counts")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val s = ctx.freshName("s")
-      val n = ctx.freshName("n")
-      s"""
-         |final int[] $counts = new int[64];
-         |final int $n = $arr.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$arr.isNullAt($i)) {
-         |    final $utf8 $s = $arr.getUTF8String($i);
-         |    final long $h = $xxh.hashUnsafeBytes(
-         |      $s.getBaseObject(), $s.getBaseOffset(), $s.numBytes(), ${SimHash64.Seed}L);
-         |    for (int $b = 0; $b < 64; $b++) {
-         |      if ((($h >>> $b) & 1L) == 1L) $counts[$b]++; else $counts[$b]--;
-         |    }
-         |  }
-         |}
-         |${ev.value} = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  if ($counts[$b] > 0) ${ev.value} |= (1L << $b);
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash64"
-}
-
-object SimHash64 {
-  val Seed = 42L
 
   def simhash64(col: Column): Column =
     GraftShim.column(SimHash64(GraftShim.expression(col)))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types._
 
@@ -32,9 +33,27 @@ case class SortedArrayIntersectCount(left: Expression, right: Expression)
           s"sorted_intersect_count expects (array<bigint>, array<bigint>), got (${l.catalogString}, ${r.catalogString})")
     }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val b = r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+  override def nullSafeEval(l: Any, r: Any): Any =
+    SortedArrayIntersectCount.intersectCount(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = classOf[SortedArrayIntersectCount].getName
+    defineCodeGen(ctx, ev, (a, b) => s"$kernel.intersectCount($a, $b)")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression,
+      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "sorted_intersect_count"
+}
+
+object SortedArrayIntersectCount {
+
+  /** The kernel, called by interpreted eval and generated code alike:
+    * the linear merge walk.
+    */
+  def intersectCount(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements()
     val nb = b.numElements()
     var i = 0; var j = 0; var c = 0
@@ -47,36 +66,6 @@ case class SortedArrayIntersectCount(left: Expression, right: Expression)
     c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |final int $na = $a.numElements();
-         |final int $nb = $b.numElements();
-         |int $i = 0, $j = 0;
-         |${ev.value} = 0;
-         |while ($i < $na && $j < $nb) {
-         |  final long $x = $a.getLong($i);
-         |  final long $y = $b.getLong($j);
-         |  if ($x == $y) { ${ev.value}++; $i++; $j++; }
-         |  else if ($x < $y) { $i++; } else { $j++; }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "sorted_intersect_count"
-}
-
-object SortedArrayIntersectCount {
   def sortedIntersectCount(a: Column, b: Column): Column =
     GraftShim.column(
       SortedArrayIntersectCount(GraftShim.expression(a), GraftShim.expression(b)))

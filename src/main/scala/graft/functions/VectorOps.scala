@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types._
@@ -39,11 +38,7 @@ sealed trait DoubleVectorFold extends BinaryExpression {
           s"$prettyName expects (array<double>, array<double>), got (${l.catalogString}, ${r.catalogString})")
     }
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val l = left.eval(input)
-    if (l == null) return null
-    val r = right.eval(input)
-    if (r == null) return null
+  override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
     val n = a.numElements()
@@ -58,35 +53,27 @@ sealed trait DoubleVectorFold extends BinaryExpression {
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val leftGen = left.genCode(ctx)
-    val rightGen = right.genCode(ctx)
-    val a = leftGen.value
-    val b = rightGen.value
-    val i = ctx.freshName("i")
-    val n = ctx.freshName("n")
-    val step = accumulateCode(ctx, ev.value.toString, s"$a.getDouble($i)", s"$b.getDouble($i)")
-    val code =
-      code"""
-        ${leftGen.code}
-        boolean ${ev.isNull} = true;
-        double ${ev.value} = 0.0;
-        if (!${leftGen.isNull}) {
-          ${rightGen.code}
-          if (!${rightGen.isNull}) {
-            final int $n = $a.numElements();
-            if ($b.numElements() == $n) {
-              ${ev.isNull} = false;
-              for (int $i = 0; $i < $n; $i++) {
-                if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-                $step
-              }
-            }
-          }
-        }
-      """
-    ev.copy(code = code)
-  }
+  // Unlike the other expressions here, the fold keeps a generated loop
+  // instead of calling a Scala kernel: the kernel call measured slower
+  // on d5 at sf0.1 (local[4]; ROADMAP aim 2 has the numbers).
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val i = ctx.freshName("i")
+      val n = ctx.freshName("n")
+      val step = accumulateCode(ctx, ev.value.toString, s"$a.getDouble($i)", s"$b.getDouble($i)")
+      s"""
+         |final int $n = $a.numElements();
+         |${ev.value} = 0.0;
+         |if ($b.numElements() != $n) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
+         |    $step
+         |  }
+         |}
+       """.stripMargin
+    })
 }
 
 /** Exact left-to-right dot product of two `array<double>` columns as a

@@ -54,9 +54,8 @@ case class WordNgramHashes(child: Expression, n: Int) extends UnaryExpression {
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
     val gad = classOf[GenericArrayData].getName
-    val kernel = "graft.functions.WordNgramHashes"
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = new $gad($kernel.hashes($arr, $n));")
+    val kernel = classOf[WordNgramHashes].getName
+    defineCodeGen(ctx, ev, arr => s"new $gad($kernel.hashes($arr, $n))")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -153,9 +152,9 @@ case class MinHashFromHashes(child: Expression, numHashes: Int)
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
     val gad = classOf[GenericArrayData].getName
+    val kernel = classOf[MinHashFromHashes].getName
     val seeds = ctx.addReferenceObj("seedHashes", seedHashes, "long[]")
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = new $gad(graft.functions.MinHashFromHashes.kernel($arr, $seeds));")
+    defineCodeGen(ctx, ev, arr => s"new $gad($kernel.kernel($arr, $seeds))")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

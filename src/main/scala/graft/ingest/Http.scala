@@ -92,54 +92,82 @@ object Http {
     * (staged file removed on empty, src/api.rs:109-113). The body
     * streams through [[copyWithProgress]], so `onProgress` observes the
     * transfer as it happens (reference: src/api.rs:89-104's progress
-    * bar) without ever buffering the payload.
+    * bar) without ever buffering the payload. A staging step that
+    * fails on the local file system (creating `dest`'s directory,
+    * opening `dest`) is a `FileSystemError`; nothing throws out.
     */
   def fetchToDisk(
       url: String,
       dest: Path,
       httpClient: HttpClient = client,
       onProgress: Progress = NoProgress): Either[ApiError, Long] =
-    validateHttps(url).flatMap { u =>
-      try {
-        Option(dest.getParent).foreach(Files.createDirectories(_))
-        val req = HttpRequest
-          .newBuilder(URI.create(u))
-          .timeout(RequestTimeout)
-          .header("User-Agent", UserAgent)
-          .header("Accept", "*/*")
-          .GET()
-          .build()
-        val resp = httpClient.send(req, HttpResponse.BodyHandlers.ofInputStream())
-        val status = resp.statusCode()
-        if (status < 200 || status >= 300) {
-          resp.body().close()
-          Files.deleteIfExists(dest)
-          Left(ApiError.HttpStatusError(u, status))
-        } else {
-          val contentLength = {
-            val cl = resp.headers().firstValueAsLong("content-length")
-            if (cl.isPresent) Some(cl.getAsLong) else None
-          }
-          val in = resp.body()
-          val out = Files.newOutputStream(dest)
-          val size =
-            try copyWithProgress(in, out, contentLength, onProgress)
-            finally {
-              out.close()
-              in.close()
-            }
-          if (size == 0L) {
-            Files.deleteIfExists(dest)
-            Left(ApiError.EmptyResponse(u))
-          } else Right(size)
+    for {
+      u <- validateHttps(url)
+      _ <- staging(dest)(Option(dest.getParent).foreach(Files.createDirectories(_)))
+      size <- download(u, dest, httpClient, onProgress)
+    } yield size
+
+  private def download(
+      u: String,
+      dest: Path,
+      httpClient: HttpClient,
+      onProgress: Progress): Either[ApiError, Long] =
+    try {
+      val req = HttpRequest
+        .newBuilder(URI.create(u))
+        .timeout(RequestTimeout)
+        .header("User-Agent", UserAgent)
+        .header("Accept", "*/*")
+        .GET()
+        .build()
+      val resp = httpClient.send(req, HttpResponse.BodyHandlers.ofInputStream())
+      val status = resp.statusCode()
+      val in = resp.body()
+      if (status < 200 || status >= 300) {
+        in.close()
+        discard(dest)
+        Left(ApiError.HttpStatusError(u, status))
+      } else {
+        val contentLength = {
+          val cl = resp.headers().firstValueAsLong("content-length")
+          if (cl.isPresent) Some(cl.getAsLong) else None
         }
-      } catch {
-        case e: java.io.IOException =>
-          Files.deleteIfExists(dest)
-          Left(ApiError.NetworkError(u, String.valueOf(e.getMessage)))
-        case e: InterruptedException =>
-          Thread.currentThread().interrupt()
-          Left(ApiError.NetworkError(u, String.valueOf(e.getMessage)))
+        staging(dest)(Files.newOutputStream(dest)) match {
+          case Left(e) =>
+            in.close()
+            Left(e)
+          case Right(out) =>
+            val size =
+              try copyWithProgress(in, out, contentLength, onProgress)
+              finally {
+                out.close()
+                in.close()
+              }
+            if (size == 0L) {
+              discard(dest)
+              Left(ApiError.EmptyResponse(u))
+            } else Right(size)
+        }
       }
+    } catch {
+      case e: java.io.IOException =>
+        discard(dest)
+        Left(ApiError.NetworkError(u, String.valueOf(e.getMessage)))
+      case e: InterruptedException =>
+        Thread.currentThread().interrupt()
+        Left(ApiError.NetworkError(u, String.valueOf(e.getMessage)))
     }
+
+  /** `step` on `dest`'s file system, an IOException as `FileSystemError`. */
+  private def staging[T](dest: Path)(step: => T): Either[ApiError, T] =
+    try Right(step)
+    catch {
+      case e: java.io.IOException =>
+        Left(ApiError.FileSystemError(dest.toString, String.valueOf(e.getMessage)))
+    }
+
+  /** Removes a partly staged `dest`; failing to is not the fetch's error. */
+  private def discard(dest: Path): Unit =
+    try Files.deleteIfExists(dest)
+    catch { case _: java.io.IOException => () }
 }

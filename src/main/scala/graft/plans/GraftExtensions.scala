@@ -1,13 +1,13 @@
 package graft.plans
 
-import graft.functions.{DecodeLongArrayToUtf8, DotProductDouble, MinHashSignature, SimHash64}
-import org.apache.spark.sql.SparkSession
+import graft.functions._
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkStrategy
-import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import org.apache.spark.sql.types._
 
 /** Catalyst session extensions for the graft engine:
   *
@@ -20,7 +20,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   *    fold order bit-for-bit.
   *  - SQL registration of the engine's native functions
   *    (`dot_product`, `simhash64`, `minhash_signature`,
-  *    `decode_byte_array`) so the pure-SQL surface reaches them too.
+  *    `decode_byte_array`, ...) so the pure-SQL surface reaches them
+  *    too; a call with a bad argument count or a non-constant int
+  *    argument fails at analysis.
   *
   * A session gets them only from
   * `spark.sql.extensions=graft.plans.GraftExtensions`, which
@@ -45,36 +47,51 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
 
   private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "dot_product" -> { es => DotProductDouble(es.head, es(1)) },
-    "simhash64" -> { es => SimHash64(es.head) },
-    "simhash60" -> { es => graft.functions.SimHash60Portable(es.head) },
-    "minhash_signature" -> { es =>
-      MinHashSignature(
-        es.head,
-        es(1).eval().asInstanceOf[Number].intValue)
+    fn("dot_product(a, b)") { (es, _) => DotProductDouble(es(0), es(1)) },
+    fn("simhash64(tokens)") { (es, _) => SimHash64(es(0)) },
+    fn("simhash60(tokens)") { (es, _) => SimHash60Portable(es(0)) },
+    fn("minhash_signature(tokens, num_hashes INT)") { (es, ints) =>
+      MinHashSignature(es(0), ints(1))
     },
-    "decode_byte_array" -> { es => DecodeLongArrayToUtf8(es.head) },
-    "word_ngrams" -> { es =>
-      graft.functions.WordNgrams(
-        es.head,
-        es(1).eval().asInstanceOf[Number].intValue)
+    fn("decode_byte_array(bytes)") { (es, _) => DecodeLongArrayToUtf8(es(0)) },
+    fn("word_ngrams(tokens, n INT)") { (es, ints) => WordNgrams(es(0), ints(1)) },
+    fn("sorted_intersect_count(a, b)") { (es, _) => SortedArrayIntersectCount(es(0), es(1)) },
+    fn("mean_threshold_bits(code_points, bits INT)") { (es, ints) =>
+      MeanThresholdBits(es(0), ints(1))
     },
-    "sorted_intersect_count" -> { es =>
-      graft.functions.SortedArrayIntersectCount(es.head, es(1))
-    },
-    "mean_threshold_bits" -> { es =>
-      graft.functions.MeanThresholdBits(
-        es.head,
-        es(1).eval().asInstanceOf[Number].intValue)
-    },
-    "md5hex32" -> { es => graft.functions.Md5Hex32(es.head) },
-    "md5_lanes" -> { es =>
-      graft.functions.Md5Lanes(
-        es.head,
-        es(1).eval().asInstanceOf[Number].intValue)
-    },
-    "md5_sign_vector" -> { es => graft.functions.Md5SignVector(es.head, es(1)) }
+    fn("md5hex32(text)") { (es, _) => Md5Hex32(es(0)) },
+    fn("md5_lanes(key, groups INT)") { (es, ints) => Md5Lanes(es(0), ints(1)) },
+    fn("md5_sign_vector(key, n)") { (es, _) => Md5SignVector(es(0), es(1)) }
   )
+
+  /** The registry entry of the SQL function `signature`, e.g.
+    * `"minhash_signature(tokens, num_hashes INT)"`. Its builder checks
+    * the call's argument count and that every `INT` argument is a
+    * foldable integer, then hands `build` the arguments and, by
+    * position, those integers. A failed check is an
+    * `AnalysisException` naming the signature and the bad argument.
+    */
+  private def fn(signature: String)(build: (Seq[Expression], Map[Int, Int]) => Expression)
+      : (String, Seq[Expression] => Expression) = {
+    val name = signature.takeWhile(_ != '(')
+    val params = signature.drop(name.length + 1).stripSuffix(")").split(", ").toSeq
+    val intParams = params.indices.filter(params(_).endsWith(" INT"))
+    name -> { es =>
+      def reject(problem: String) = throw new FunctionArgumentsException(s"$signature $problem")
+      if (es.length != params.length)
+        reject(s"takes ${params.length} argument(s), got ${es.length}")
+      val ints = intParams.map { i =>
+        val e = es(i)
+        val value = e.dataType match {
+          case ByteType | ShortType | IntegerType | LongType if e.foldable => Option(e.eval())
+          case _ => None
+        }
+        i -> value.map(_.asInstanceOf[Number].longValue).filter(_.isValidInt).getOrElse(
+          reject(s"argument ${i + 1} (${e.sql}) must be a constant integer")).toInt
+      }
+      build(es, ints.toMap)
+    }
+  }
 
   /** Fails at frame build, not at `collect`, when `spark`'s planner
     * lacks `strategy`: a session built without the extensions would
@@ -88,6 +105,13 @@ object GraftExtensions {
         "build the session with GraftSession.builder, or set " +
         "spark.sql.extensions=graft.plans.GraftExtensions")
 }
+
+/** A call of one of [[GraftExtensions]]' SQL functions whose arguments
+  * fail its check; the message names the function's signature and the
+  * bad argument.
+  */
+private[plans] final class FunctionArgumentsException(message: String)
+    extends AnalysisException(message)
 
 /** `levenshtein(a, b) <= k` / `< k` / `>= k` / `> k` (constant
   * non-negative k, no threshold) → the THRESHOLD levenshtein

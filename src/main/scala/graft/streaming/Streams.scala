@@ -468,8 +468,6 @@ object Streams {
     */
   final case class BandHit(doc_id: Long, band: Int, rep_doc_id: Long)
 
-  private final case class BandRow(band: Int, h1: Long, h2: Long, doc_id: Long)
-
   /** Keyed by (band, h1, h2); state = the bucket's representative
     * doc_id (the minimum doc_id ever seen there). Collision guarantee:
     * every document that shares a bucket with another document is

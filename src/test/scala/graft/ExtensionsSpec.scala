@@ -56,6 +56,42 @@ class ExtensionsSpec extends SparkSpec {
     assert(row2.getAs[Int]("ic") == 2)
     // spans [1,1] and [9,9] vs mean 5: low span bit 0 clear, high span bit 1 set
     assert(row2.getAs[Long]("mtb") == 2L)
+    val row3 = spark.range(1).selectExpr(
+      "simhash60(array('a', 'b')) AS s60",
+      "md5hex32('a') AS m32",
+      "md5_lanes(id, 2L) AS ml",
+      "md5_sign_vector(id, 4) AS msv").head()
+    assert(!row3.isNullAt(0) && !row3.isNullAt(1))
+    assert(row3.getSeq[Long](2).size == 8)
+    assert(row3.getSeq[Long](3).size == 4)
+    val ngrams = spark.range(1).selectExpr("word_ngrams(array('a', 'b', 'c'), 2)").collect()
+    assert(ngrams.map(_.getString(0)).toSeq == Seq("a b", "b c"))
+    // the calls above cover the whole registry
+    val registered = spark.catalog.listFunctions().collect()
+      .filter(_.className == "graft.functions").map(_.name).toSet
+    assert(registered == Set("dot_product", "simhash64", "simhash60", "minhash_signature",
+      "decode_byte_array", "word_ngrams", "sorted_intersect_count", "mean_threshold_bits",
+      "md5hex32", "md5_lanes", "md5_sign_vector"))
+  }
+
+  test("SQL functions reject a bad argument count or int argument at analysis, naming the function") {
+    val bad = Seq(
+      "word_ngrams(array('a', 'b'))" -> "word_ngrams(tokens, n INT) takes 2 argument(s), got 1",
+      "minhash_signature(array('a', 'b'))" ->
+        "minhash_signature(tokens, num_hashes INT) takes 2 argument(s), got 1",
+      "mean_threshold_bits(array(1L, 2L))" ->
+        "mean_threshold_bits(code_points, bits INT) takes 2 argument(s), got 1",
+      "dot_product(array(1D))" -> "dot_product(a, b) takes 2 argument(s), got 1",
+      "minhash_signature(array('a', 'b'), id)" ->
+        "minhash_signature(tokens, num_hashes INT) argument 2 (id) must be a constant integer",
+      "md5_lanes(1L, id)" -> "md5_lanes(key, groups INT) argument 2 (id) must be a constant integer",
+      "simhash64(array('a'), array('b'))" -> "simhash64(tokens) takes 1 argument(s), got 2",
+      "minhash_signature(array('a'), 'a')" ->
+        "minhash_signature(tokens, num_hashes INT) argument 2 ('a') must be a constant integer")
+    bad.foreach { case (call, message) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.range(1).selectExpr(call))
+      assert(e.getMessage.contains(message), s"$call: ${e.getMessage}")
+    }
   }
 
   test("TopKPerKey plans through the custom strategy: exec node, one exchange, no sort") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.GraftFunctions.decodeByteArray
+import graft.functions.DecodeLongArrayToUtf8.decodeByteArray
 import graft.functions.SimHash64.simhash64
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -174,6 +174,92 @@ class FunctionsSpec extends SparkSpec {
     }
     assert(interpreted(105L) == Seq(Some(0.0), Some(0.0)))
     assert(refInterpreted(105L) == Seq(Some(0.0), Some(0.0)))
+  }
+
+  test("every custom expression gives the same rows interpreted and generated, edge rows included") {
+    import graft.functions._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.graftshim.GraftShim
+    import org.apache.spark.sql.types._
+    val schema = new StructType()
+      .add("id", LongType, nullable = false)
+      .add("toks", ArrayType(StringType))
+      .add("longs", ArrayType(LongType))
+      .add("sorted", ArrayType(LongType))
+      .add("a", ArrayType(DoubleType))
+      .add("b", ArrayType(DoubleType))
+      .add("text", StringType)
+      .add("key", LongType)
+      .add("n", IntegerType)
+    val utf8 = "Olá ☕ 𝄞".getBytes("UTF-8").map(b => (b & 0xFF).toLong).toSeq
+    val edges = Seq(
+      Row(0L, null, null, null, null, null, null, null, null), // null input
+      Row(1L, Nil, Nil, Nil, Nil, Nil, "", 0L, 0), // empty
+      Row(2L, Seq("a", null, "b"), Seq(1L, null, 3L), Seq(1L, 3L), // null element
+        Seq(1.0, null, 2.0), Seq(1.0, 2.0, 3.0), "a b", -1L, 3),
+      Row(3L, Seq("the", "quick", "brown", "fox"), Seq(5L, 1L, 9L, 9L, 2L, 7L, 3L), // length mismatch
+        Seq(2L, 9L), Seq(1.0, 2.0), Seq(1.0), "the quick brown fox", Long.MaxValue, 5),
+      Row(4L, Seq("héllo", "日本語", "a𝕏b", ""), utf8, Seq(-3L, 1L, 5L), // non-ASCII
+        Seq(0.5, -1.5, 2.5), Seq(2.0, 0.25, -1.0), "Olá ☕ 𝄞 日本", Long.MinValue, 16),
+      Row(5L, Seq("x"), Seq(0L, 0L, 0L), Seq(0L), // NaN, ±0.0, overflow to ±Infinity
+        Seq(Double.NaN, -0.0, 1e300), Seq(1.0, 0.0, 1e300), "NaN", 42L, 64),
+      Row(6L, Seq("-0.0"), Seq(255L, 256L), Seq(255L, 256L),
+        Seq(-0.0, 0.0, -1e300), Seq(0.0, -0.0, 1e300), "-0.0", 7L, null))
+    // repartitioned so the projection runs in a task: over a bare local
+    // relation the optimizer would evaluate it, interpreted, at planning
+    val df = spark.createDataFrame(java.util.Arrays.asList(edges: _*), schema).repartition(2)
+    val planes = Array(
+      Array(Array(1.0, -1.0, 0.5), Array(-0.25, 1.0, 1.0)),
+      Array(Array(0.0, 0.0, -1.0), Array(1.0, 1.0, 1.0)))
+    val scalars = Seq(
+      VectorOps.dotProduct(col("a"), col("b")),
+      VectorOps.squaredDistance(col("a"), col("b")),
+      SimHash64.simhash64(col("toks")),
+      SimHash60Portable.simhash60(col("toks")),
+      MinHashSignature.minhashSignature(col("toks"), 4),
+      decodeByteArray(col("longs")),
+      decodeByteArray(col("a")),
+      SortedArrayIntersectCount.sortedIntersectCount(col("sorted"), col("longs")),
+      MeanThresholdBits.meanThresholdBits(col("longs"), 3),
+      MeanThresholdBits.meanThresholdBitsOfString(col("text"), 3, 1),
+      Md5Hex32.md5hex32(col("text")),
+      Md5Lanes.md5Lanes(col("key"), 2),
+      Md5SignVector.md5SignVector(col("key"), col("n")),
+      CdcCutPoints.cdcCutPoints(col("text"), 3, 2),
+      RollingFingerprints.rollingFingerprints(col("toks"), 2),
+      HyperplaneBuckets.buckets(col("a"), planes),
+      WordNgramHashes.wordNgramHashes(col("toks"), 2),
+      MinHashFromHashes.minhashFromHashes(col("longs"), 4))
+    val generator = WordNgrams.wordNgrams(col("toks"), 2)
+    val names = (scalars :+ generator).map(c => GraftShim.expression(c).prettyName).toSet
+    val registered = spark.catalog.listFunctions().collect()
+      .filter(_.className == "graft.functions").map(_.name).toSet
+    assert(registered.nonEmpty)
+    assert(registered.subsetOf(names), s"no edge-row case for ${registered -- names}")
+    assert(names.size == 18)
+
+    // each row as id -> one string per column; Double.toString keeps -0.0 and NaN apart from 0.0
+    def run(conf: (String, String)*): (Map[Long, Seq[String]], Seq[String]) =
+      withConf(spark, conf: _*) {
+        val cols = scalars.zipWithIndex.map { case (c, i) => c.as(s"c$i") }
+        val rows = df.select(col("id") +: cols: _*).collect()
+          .map(r => r.getLong(0) -> (1 to scalars.size).map(i => String.valueOf(r.get(i))))
+          .toMap
+        val generated = df.select(col("id"), generator).collect().map(_.toString).sorted.toSeq
+        (rows, generated)
+      }
+    val (interpreted, interpretedNgrams) =
+      run("spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false")
+    val (generated, generatedNgrams) =
+      run("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.wholeStage" -> "true")
+    assert(interpreted.keySet == edges.map(_.getLong(0)).toSet)
+    for ((id, values) <- interpreted; ((v, g), i) <- values.zip(generated(id)).zipWithIndex)
+      assert(v == g, s"${GraftShim.expression(scalars(i)).prettyName} (column $i), row $id")
+    assert(interpretedNgrams.nonEmpty && interpretedNgrams == generatedNgrams)
+    // the edges reach the null and NaN arms: dot_product is null on
+    // rows 0, 2 and 3 and NaN on row 5
+    assert(Seq(0L, 2L, 3L).map(interpreted(_).head) == Seq("null", "null", "null"))
+    assert(interpreted(5L).head == "NaN")
   }
 }
 

@@ -28,6 +28,67 @@ class IngestSpec extends SparkSpec {
     assert(!Files.exists(dest), "failed fetch must not leave a staging file")
   }
 
+  /** An HttpClient that answers every request with status 200 and
+    * `payload`, with no network. */
+  private def cannedClient(payload: Array[Byte]): java.net.http.HttpClient = {
+    import java.net.http.{HttpClient, HttpHeaders, HttpRequest, HttpResponse}
+    import java.util.Optional
+    new HttpClient {
+      override def cookieHandler(): Optional[java.net.CookieHandler] = Optional.empty()
+      override def connectTimeout(): Optional[java.time.Duration] = Optional.empty()
+      override def followRedirects(): HttpClient.Redirect = HttpClient.Redirect.NEVER
+      override def proxy(): Optional[java.net.ProxySelector] = Optional.empty()
+      override def sslContext(): javax.net.ssl.SSLContext = null
+      override def sslParameters(): javax.net.ssl.SSLParameters = null
+      override def authenticator(): Optional[java.net.Authenticator] = Optional.empty()
+      override def version(): HttpClient.Version = HttpClient.Version.HTTP_1_1
+      override def executor(): Optional[java.util.concurrent.Executor] = Optional.empty()
+      override def send[T](req: HttpRequest, h: HttpResponse.BodyHandler[T]): HttpResponse[T] =
+        new HttpResponse[T] {
+          override def statusCode(): Int = 200
+          override def request(): HttpRequest = req
+          override def previousResponse(): Optional[HttpResponse[T]] = Optional.empty()
+          override def headers(): HttpHeaders =
+            HttpHeaders.of(java.util.Map.of(), (_: String, _: String) => true)
+          // fetchToDisk asks for BodyHandlers.ofInputStream
+          override def body(): T = new java.io.ByteArrayInputStream(payload).asInstanceOf[T]
+          override def sslSession(): Optional[javax.net.ssl.SSLSession] = Optional.empty()
+          override def uri(): java.net.URI = req.uri()
+          override def version(): HttpClient.Version = HttpClient.Version.HTTP_1_1
+        }
+      override def sendAsync[T](req: HttpRequest, h: HttpResponse.BodyHandler[T]) =
+        throw new UnsupportedOperationException
+      override def sendAsync[T](
+          req: HttpRequest,
+          h: HttpResponse.BodyHandler[T],
+          p: HttpResponse.PushPromiseHandler[T]) =
+        throw new UnsupportedOperationException
+    }
+  }
+
+  test("fetchToDisk: a staging failure is Left(FileSystemError), not a throw") {
+    val root = Files.createTempDirectory("graft-http")
+    val client = cannedClient("abc".getBytes("UTF-8"))
+    // dest's parent cannot be created: a regular file stands in its path
+    val blocker = Files.createFile(root.resolve("blocker"))
+    val underFile = blocker.resolve("sub").resolve("route_temp.json")
+    Http.fetchToDisk("https://localhost:1/x", underFile, client) match {
+      case Left(ApiError.FileSystemError(path, _)) => assert(path == underFile.toString)
+      case other => fail(s"expected FileSystemError, got $other")
+    }
+    // dest cannot be opened for writing: it is a directory
+    val dirDest = Files.createDirectory(root.resolve("route_temp.json"))
+    Http.fetchToDisk("https://localhost:1/x", dirDest, client) match {
+      case Left(ApiError.FileSystemError(path, _)) => assert(path == dirDest.toString)
+      case other => fail(s"expected FileSystemError, got $other")
+    }
+    assert(Files.isDirectory(dirDest), "a failed open must not remove what stood at dest")
+    // the same client stages a payload where dest is writable
+    val ok = root.resolve("ok").resolve("route_temp.json")
+    assert(Http.fetchToDisk("https://localhost:1/x", ok, client) == Right(3L))
+    assert(new String(Files.readAllBytes(ok), "UTF-8") == "abc")
+  }
+
   test("copyWithProgress: cumulative monotone counts, exact total, constant-size chunks") {
     val payload = Array.fill[Byte](200 * 1024 + 37)(0x42)
     val in = new java.io.ByteArrayInputStream(payload)

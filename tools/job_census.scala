@@ -53,11 +53,14 @@ for (name <- names) {
       val rows = df.collect().map(_.toString).sorted
       Census.drain()
       val (j1, s1, t1) = Census.snapshot
-      // the plan hash ignores expression ids (#<n>), which depend on
-      // what ran before in the session, and the JVM identity of
-      // closures (MapPartitions prints `Foo$$$Lambda$3996/0x…@61523c3`)
+      // the plan hash ignores expression ids (#<n>) and the suffix of
+      // DataFrame-API lambda variables (`lambda x_12`), both drawn from
+      // JVM-wide counters that depend on what ran before in the
+      // session, and the JVM identity of closures (MapPartitions
+      // prints `Foo$$$Lambda$3996/0x…@61523c3`)
       val plan = df.queryExecution.optimizedPlan.toString
         .replaceAll("#\\d+", "")
+        .replaceAll("(lambda \\w+?)_\\d+", "$1")
         .replaceAll("\\$\\$Lambda[^,\\s]*", "\\$\\$Lambda")
       s"$name rows=${rows.length} sha1=${hexSha1(rows.mkString("\n"))} jobs=${j1 - j0} " +
         s"stages=${s1 - s0} tasks=${t1 - t0} plan=${hexSha1(plan)}"

@@ -3,7 +3,8 @@
 # SHA-1 of its sorted row strings, the Spark jobs, stages and tasks it
 # ran (counted by a SparkListener on the running session, building the
 # frame included) and the SHA-1 of its final optimized logical plan
-# string with the #<n> expression ids and closure identities stripped.
+# string with the #<n> expression ids, lambda variable suffixes and
+# closure identities stripped.
 #
 #   tools/job_census.sh <sf-dir> [q1,q2,...]     (no list: every query)
 #
